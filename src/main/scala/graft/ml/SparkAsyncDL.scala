@@ -46,13 +46,14 @@ private[ml] trait AsyncDLParams extends Params
     "top-k sparse gradient pushes; 0 = dense")
   /** Extension beyond the reference: parameter-server shard count.
     * 0 = auto — shard once the model outgrows
-    * [[SparkAsyncDL.AutoShardElems]] elements (one shard per threshold's
-    * worth of weights, capped at [[SparkAsyncDL.AutoShardMax]] and the
+    * [[HogwildTrainer.AutoShardElems]] elements (one shard per threshold's
+    * worth of weights, capped at [[HogwildTrainer.AutoShardMax]] and the
     * tensor count); 1 = always the single driver-hosted server; N ≥ 2 =
-    * exactly N shards. The single server serializes whole models
-    * through one endpoint per pull/push — the measured ceiling once
-    * workers × model size grows (PsShardingThroughputSpec); sharding
-    * splits every transfer into concurrent per-slice exchanges. */
+    * exactly N shards (capped at the tensor count). The single server
+    * serializes whole models through one endpoint per pull/push — the
+    * measured ceiling once workers × model size grows
+    * (PsShardingThroughputSpec); sharding splits every transfer into
+    * concurrent per-slice exchanges. */
   final val psShards = new IntParam(this, "psShards",
     "parameter-server shards; 0 = auto by model size")
 
@@ -173,10 +174,7 @@ class SparkAsyncDL(override val uid: String) extends Estimator[SparkAsyncDLModel
       verbose = $(verbose),
       port = $(port),
       gradientTopK = $(gradientTopK))
-    val shards = SparkAsyncDL.resolveShards($(psShards), spec)
-    val weights =
-      if (shards > 1) HogwildTrainer.fitSharded(rdd, spec, cfg, shards)
-      else HogwildTrainer.fit(rdd, spec, cfg)
+    val weights = HogwildTrainer.fit(rdd, spec, cfg, $(psShards))
 
     val model = new SparkAsyncDLModel(uid + "_model")
       .setModelJson($(tensorflowGraph))
@@ -196,32 +194,7 @@ class SparkAsyncDL(override val uid: String) extends Estimator[SparkAsyncDLModel
   override def copy(extra: ParamMap): SparkAsyncDL = defaultCopy(extra)
 }
 
-object SparkAsyncDL extends DefaultParamsReadable[SparkAsyncDL] {
-  /** Auto-sharding threshold: one parameter-server shard per this many
-    * weight elements. 2^17 doubles = 1 MiB of model per shard — below
-    * it a single server's serialization keeps up with 16 concurrent
-    * workers and the extra endpoints are pure overhead; above it the
-    * per-pull serialization dominates and sharding's concurrent
-    * per-slice transfers win (measured in PsShardingThroughputSpec). */
-  private[graft] val AutoShardElems: Long = 1L << 17
-  /** Auto-sharding cap: matches the in-process endpoint count past
-    * which added shards stop helping on one host. */
-  private[graft] val AutoShardMax: Int = 8
-
-  /** psShards resolution: explicit N wins; 0 = one shard per
-    * [[AutoShardElems]] of model, capped by [[AutoShardMax]] and the
-    * tensor count (tensors are the atomic sharding unit). */
-  private[graft] def resolveShards(requested: Int, spec: NetSpec): Int = {
-    val shapes = new graft.nn.Network(spec).initWeights(spec.seed)
-    val tensors = shapes.length
-    if (requested >= 1) math.min(requested, tensors)
-    else {
-      val elems = shapes.map(t => t.rows.toLong * t.cols).sum
-      val auto = math.min(AutoShardMax.toLong, elems / AutoShardElems + 1).toInt
-      math.min(auto, tensors)
-    }
-  }
-}
+object SparkAsyncDL extends DefaultParamsReadable[SparkAsyncDL]
 
 /** Fitted model — parity with `SparkAsyncDLModel` (`tensorflow_async.py:
   * 51-99`). transform() is an appended projection (`withColumn` + UDF over

@@ -40,8 +40,6 @@ object OptimizerConfigs {
   def adagrad(initialAccumulatorValue: Double = 0.1): String =
     json("initial_accumulator_value" -> initialAccumulatorValue)
 
-  def gradientDescent(): String = "{}"
-
   def ftrl(
       learningRatePower: Double = -0.5, l1: Double = 0.0, l2: Double = 0.0): String =
     json("learning_rate_power" -> learningRatePower,

@@ -1,6 +1,6 @@
 package graft.nn
 
-import breeze.linalg.{DenseMatrix, DenseVector}
+import breeze.linalg.DenseMatrix
 import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream, ByteArrayInputStream}
 
 /** Uniform weight/gradient representation: a flat list of matrices.
@@ -123,7 +123,4 @@ object Tensors {
       case other => sys.error(s"bad tensor (expected array of rows): $other")
     }.toArray
   }
-
-  def rowOf(m: DenseMatrix[Double], r: Int): DenseVector[Double] =
-    m(r, ::).t.copy
 }

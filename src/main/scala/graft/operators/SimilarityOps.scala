@@ -1291,7 +1291,9 @@ object SimilarityOps {
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         .withColumn("mind", lit(2.0))
         .localCheckpoint(eager = false)
-      val picks = (1 to CoresetK).map { step =>
+      // a corpus of fewer than K vectors runs out of candidates: the
+      // picks stop there (the DuckDB twin's `LIMIT 1` steps go empty)
+      val picks = Iterator.range(1, CoresetK + 1).map { step =>
         // the greedy pick is a SINGLETON row — collect it with head()
         // and re-inject (vec_id, v, mind) as literals, the
         // spectralCutBody scalar1 discipline (r17 verdict item 6: the
@@ -1303,21 +1305,24 @@ object SimilarityOps {
         // verbatim, the update expression and the radius rounding are
         // the same Spark expressions as before — the decimal lattice
         // is untouched and the oracle replay unchanged.
-        val bestRow = mind.orderBy(col("mind").desc, col("vec_id"))
-          .limit(1).head()
-        val sid = bestRow.getLong(0)
-        val sv = bestRow.getSeq[Double](1)
-        val sMind = bestRow.getDouble(2)
-        mind = mind
-          .withColumn("mind", least(col("mind"),
-            round(lit(1.0) - round(cos(col("v"), typedLit(sv)), 6), 6)))
-          .filter(col("vec_id") =!= lit(sid))
-          .select(col("vec_id"), col("v"), col("mind"))
-          .localCheckpoint(eager = false)
-        s.range(1).select(lit(step.toLong).as("step"),
-          lit(sid).as("vec_id"), round(lit(sMind), 6).as("radius"))
-      }
-      picks.reduce(_ unionAll _).orderBy(col("step"))
+        mind.orderBy(col("mind").desc, col("vec_id")).head(1).headOption.map { bestRow =>
+          val sid = bestRow.getLong(0)
+          val sv = bestRow.getSeq[Double](1)
+          val sMind = bestRow.getDouble(2)
+          mind = mind
+            .withColumn("mind", least(col("mind"),
+              round(lit(1.0) - round(cos(col("v"), typedLit(sv)), 6), 6)))
+            .filter(col("vec_id") =!= lit(sid))
+            .select(col("vec_id"), col("v"), col("mind"))
+            .localCheckpoint(eager = false)
+          s.range(1).select(lit(step.toLong).as("step"),
+            lit(sid).as("vec_id"), round(lit(sMind), 6).as("radius"))
+        }
+      }.takeWhile(_.isDefined).flatten.toSeq
+      picks.reduceOption(_ unionAll _)
+        .getOrElse(s.range(0).select(lit(0L).as("step"), lit(0L).as("vec_id"),
+          lit(0.0).as("radius")))
+        .orderBy(col("step"))
     },
     // bitext / parallel-pair mining (LASER/CCMatrix-style): align two
     // embedding populations (labels 0 and 1 standing in for the two

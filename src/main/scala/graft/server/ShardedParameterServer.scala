@@ -10,13 +10,17 @@ import graft.nn.Tensors.Tensors
   * optimizer state — Adam moments etc. — is exactly the state the
   * unsharded server would keep for those tensors).
   *
-  * Why: the single driver-hosted server (the reference's design,
-  * lifeomic/sparkflow `HogwildSparkModel.py:156-180`) serializes whole
-  * weight tensors through one NIC per pull/push — the known ceiling at
-  * thousands of partitions. Sharding divides both the serialization CPU
-  * and the wire bytes per endpoint by `shards`; workers pull/push all
-  * shards concurrently ([[ShardedParamsClient]]), so model-exchange
-  * latency approaches max-shard instead of sum-of-tensors. In-process
+  * It is the only server [[graft.train.HogwildTrainer.fit]] starts: one
+  * shard is exactly the reference's single driver-hosted server
+  * (lifeomic/sparkflow `HogwildSparkModel.py:156-180`), one
+  * [[ParameterServer]] over the same weight matrices. That single server
+  * serializes whole weight tensors through one NIC per pull/push — the
+  * known ceiling at thousands of partitions — so `fit(…, shards)` (the
+  * estimator's `psShards`) splits it N ways. Sharding divides both the
+  * serialization CPU and the wire bytes per endpoint by `shards`;
+  * workers pull/push all shards concurrently ([[ShardedParamsClient]]),
+  * so model-exchange latency approaches max-shard instead of
+  * sum-of-tensors. In-process
   * here (one host, N ports) for parity with the driver-hosted layout;
   * the shard list is plain `host:port` strings, so spreading shards
   * across hosts is a deployment choice, not a code change.
@@ -59,7 +63,8 @@ final class ShardedParameterServer(
   def boundPorts: Array[Int] = servers.map(_.boundPort)
   def isAborted: Boolean = servers.exists(_.isAborted)
   def errorCount: Int = servers.map(_.errorCount).sum
-  def currentWeights: Tensors = Tensors.copy(weights)
+  /** Each shard copies its own slice, under its read lock in locked mode. */
+  def currentWeights: Tensors = servers.flatMap(_.currentWeights)
 }
 
 object ShardedParameterServer {
@@ -103,26 +108,17 @@ object ShardedParameterServer {
 }
 
 /** Worker-side client for a sharded server: pulls/pushes every shard
-  * CONCURRENTLY (one thread per shard — the point of sharding is that
-  * the transfers overlap; serial round-trips would re-serialize the
-  * latency sharding removes). Shard URLs are ordered like
-  * [[ShardedParameterServer.sliceBounds]]. */
+  * CONCURRENTLY (the point of sharding is that the transfers overlap;
+  * serial round-trips would re-serialize the latency sharding removes).
+  * Shard URLs are ordered like [[ShardedParameterServer.sliceBounds]]. */
 object ShardedParamsClient {
 
   /** Pull all shards, concatenate into the full tensor list. Any failed
     * shard pull fails the whole get (half a model is not a model). */
   def getWeights(shardUrls: Seq[String]): Tensors = {
     val parts = new Array[Tensors](shardUrls.length)
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val threads = shardUrls.zipWithIndex.map { case (u, i) =>
-      new Thread(() =>
-        try parts(i) = ParamsClient.getWeights(u)
-        catch { case e: Throwable => errs.add(e) })
-    }
-    threads.foreach(_.start()); threads.foreach(_.join())
-    if (!errs.isEmpty) throw new java.io.IOException(
-      s"${errs.size} shard pull(s) failed", errs.peek())
-    parts.flatten.toArray
+    eachShard(shardUrls.length)(i => parts(i) = ParamsClient.getWeights(shardUrls(i)))
+    if (parts.length == 1) parts(0) else parts.flatten
   }
 
   /** Slice the full gradient list by `bounds` and push each slice to its
@@ -130,13 +126,11 @@ object ShardedParamsClient {
     * [[ParamsClient.postGradients]] (reference worker policy). */
   def postGradients(
       shardUrls: Seq[String], bounds: Seq[(Int, Int)],
-      grads: Tensors, partitionId: Int): Unit = {
-    val threads = shardUrls.zip(bounds).map { case (u, (from, until)) =>
-      new Thread(() =>
-        ParamsClient.postGradients(u, grads.slice(from, until), partitionId))
+      grads: Tensors, partitionId: Int): Unit =
+    eachShard(shardUrls.length) { i =>
+      val (from, until) = bounds(i)
+      ParamsClient.postGradients(shardUrls(i), grads.slice(from, until), partitionId)
     }
-    threads.foreach(_.start()); threads.foreach(_.join())
-  }
 
   /** Sparse twin of [[postGradients]]: shard bounds are whole-tensor
     * ranges, so a global top-k [[graft.nn.GradientCompression.SparseGrad]]
@@ -145,13 +139,28 @@ object ShardedParamsClient {
     * bandwidth×shards with sparsification's bytes÷density. */
   def postSparseGradients(
       shardUrls: Seq[String], bounds: Seq[(Int, Int)],
-      sparse: graft.nn.GradientCompression.SparseGrad, partitionId: Int): Unit = {
-    val threads = shardUrls.zip(bounds).map { case (u, (from, until)) =>
-      val slice = graft.nn.GradientCompression.SparseGrad(
+      sparse: graft.nn.GradientCompression.SparseGrad, partitionId: Int): Unit =
+    eachShard(shardUrls.length) { i =>
+      val (from, until) = bounds(i)
+      ParamsClient.postSparseGradients(shardUrls(i), graft.nn.GradientCompression.SparseGrad(
         sparse.rows.slice(from, until), sparse.cols.slice(from, until),
-        sparse.idx.slice(from, until), sparse.vals.slice(from, until))
-      new Thread(() => ParamsClient.postSparseGradients(u, slice, partitionId))
+        sparse.idx.slice(from, until), sparse.vals.slice(from, until)), partitionId)
     }
-    threads.foreach(_.start()); threads.foreach(_.join())
+
+  /** Runs `call` for shards 0..n-1 and returns once all are done: shard 0
+    * on the calling thread, each other shard on its own thread. A
+    * one-shard call is therefore a plain [[ParamsClient]] call, with no
+    * thread. A failure on any shard fails the whole call, after every
+    * shard has finished; pushes never fail here, since
+    * [[ParamsClient]] logs and swallows a failed POST. */
+  private def eachShard(n: Int)(call: Int => Unit): Unit = {
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = (1 until n).map { i =>
+      new Thread(() => try call(i) catch { case e: Throwable => errs.add(e) })
+    }
+    threads.foreach(_.start())
+    try call(0) finally threads.foreach(_.join())
+    if (!errs.isEmpty) throw new java.io.IOException(
+      s"${errs.size} of $n shard call(s) failed", errs.peek())
   }
 }

@@ -3,9 +3,9 @@ package graft.train
 import breeze.linalg.DenseMatrix
 import org.apache.spark.SparkEnv
 import org.apache.spark.rdd.RDD
-import graft.nn.{Batching, LocalTrainer, NetSpec, Network, Optimizer}
+import graft.nn.{LocalTrainer, NetSpec, Network, Optimizer}
 import graft.nn.Tensors.Tensors
-import graft.server.{ParameterServer, ParamsClient, ShardedParameterServer, ShardedParamsClient}
+import graft.server.{ShardedParameterServer, ShardedParamsClient}
 
 /** Distributed data-parallel trainer — the reference's `HogwildSparkModel`
   * (lifeomic/sparkflow `HogwildSparkModel.py:103-272`) re-expressed for the
@@ -48,17 +48,27 @@ object HogwildTrainer {
         * driver NIC. 0 = dense pushes (reference parity). */
       gradientTopK: Int = 0)
 
-  /** Train on an RDD of (features, label-vector) pairs; returns final weights. */
-  def fit(rdd: RDD[(Array[Double], Array[Double])], spec: NetSpec, cfg: Config): Tensors = {
-    val net = new Network(spec)
-    val weights = net.initWeights(cfg.seed)
-    val optimizer = Optimizer.build(cfg.optimizerName, cfg.learningRate, cfg.optimizerOptions)
-    val server = new ParameterServer(weights, optimizer, cfg.port, cfg.acquireLock,
+  /** Train on an RDD of (features, label-vector) pairs; returns final
+    * weights. The parameter server is a [[ShardedParameterServer]] split
+    * `shards` ways ([[resolveShards]]): 1 is the reference's single
+    * driver-hosted server, N ≥ 2 splits every pull and push into N
+    * concurrent per-slice transfers (the scale path past one endpoint's
+    * NIC/serialization ceiling), 0 picks by model size. */
+  def fit(
+      rdd: RDD[(Array[Double], Array[Double])],
+      spec: NetSpec,
+      cfg: Config,
+      shards: Int = 1): Tensors = {
+    val weights = new Network(spec).initWeights(cfg.seed)
+    val server = new ShardedParameterServer(
+      weights, () => Optimizer.build(cfg.optimizerName, cfg.learningRate, cfg.optimizerOptions),
+      cfg.port, resolveShards(shards, weights), cfg.acquireLock,
       maxErrors = math.max(cfg.iters, 1))
     server.start()
     try {
       server.awaitReady()
-      val masterUrl = determineMaster(server.boundPort)
+      val urls = server.boundPorts.map(determineMaster).toSeq
+      val bounds = server.sliceBounds.toSeq
       val specJson = spec.toJson // ship the spec, not the Network object
       val workerCfg = cfg
       var current = rdd
@@ -66,7 +76,7 @@ object HogwildTrainer {
       val rounds = math.max(cfg.partitionShuffles, 1)
       while (round < rounds) {
         current.foreachPartition { it =>
-          workerPartition(it, specJson, masterUrl, workerCfg)
+          workerPartition(it, specJson, urls, bounds, workerCfg)
         }
         // surface persistent update failures instead of returning the
         // initial weights as if training succeeded
@@ -81,9 +91,28 @@ object HogwildTrainer {
     }
   }
 
-  /** Per-partition worker — parity with `handle_model`
-    * (`HogwildSparkModel.py:38-100`): materialize the partition, then run
-    * the three-batch-mode loop against the server. Empty partitions no-op. */
+  /** Auto-sharding threshold: one parameter-server shard per this many
+    * weight elements. 2^17 doubles = 1 MiB of model per shard — below
+    * it a single server's serialization keeps up with 16 concurrent
+    * workers and the extra endpoints are pure overhead; above it the
+    * per-pull serialization dominates and sharding's concurrent
+    * per-slice transfers win (measured in PsShardingThroughputSpec). */
+  private[graft] val AutoShardElems: Long = 1L << 17
+  /** Auto-sharding cap: matches the in-process endpoint count past
+    * which added shards stop helping on one host. */
+  private[graft] val AutoShardMax: Int = 8
+
+  /** Shard count for [[fit]]: an explicit N ≥ 1 wins; 0 = one shard per
+    * [[AutoShardElems]] of model, capped by [[AutoShardMax]]. Both are
+    * capped by the tensor count (tensors are the atomic sharding unit). */
+  private[graft] def resolveShards(requested: Int, weights: Tensors): Int = {
+    val wanted =
+      if (requested >= 1) requested
+      else math.min(AutoShardMax.toLong,
+        weights.map(t => t.rows.toLong * t.cols).sum / AutoShardElems + 1).toInt
+    math.min(wanted, weights.length)
+  }
+
   /** Rows → (features, labels) matrices, validating BOTH widths: a short
     * label would silently zero-pad (training on garbage targets), a long
     * one would crash deep in breeze — fail with a message instead. */
@@ -110,7 +139,13 @@ object HogwildTrainer {
     (x, y)
   }
 
-  /** At-least-once gradient contract: Spark may re-run a partition
+  /** Per-partition worker — parity with `handle_model`
+    * (`HogwildSparkModel.py:38-100`): materialize the partition, then run
+    * the three-batch-mode loop against the server, pulling and pushing
+    * every shard (`shardUrls`, ordered like `bounds`, the
+    * [[ShardedParameterServer.sliceBounds]]). Empty partitions no-op.
+    *
+    * At-least-once gradient contract: Spark may re-run a partition
     * (speculative execution, task retry after a lost executor), and this
     * worker has no dedup handshake with the server — a re-run re-POSTs
     * every gradient of its training loop. That is SAFE under hogwild
@@ -126,7 +161,8 @@ object HogwildTrainer {
   private[graft] def workerPartition(
       it: Iterator[(Array[Double], Array[Double])],
       specJson: String,
-      masterUrl: String,
+      shardUrls: Seq[String],
+      bounds: Seq[(Int, Int)],
       cfg: Config): Unit = {
     val rows = it.toArray
     if (rows.isEmpty) return
@@ -138,7 +174,7 @@ object HogwildTrainer {
       net, x, y,
       LocalTrainer.Config(cfg.iters, cfg.miniBatchSize, cfg.miniStochasticIters,
         cfg.shufflePerIter, cfg.verbose, cfg.seed + pid),
-      pull = () => ParamsClient.getWeights(masterUrl),
+      pull = () => ShardedParamsClient.getWeights(shardUrls),
       push =
         if (cfg.gradientTopK > 0) {
           // residual persists across this worker's pushes for the whole
@@ -146,76 +182,10 @@ object HogwildTrainer {
           var residual: Tensors = null
           g => {
             if (residual == null) residual = graft.nn.Tensors.zerosLike(g)
-            ParamsClient.postSparseGradients(masterUrl,
+            ShardedParamsClient.postSparseGradients(shardUrls, bounds,
               graft.nn.GradientCompression.sparsifyTopK(g, residual, cfg.gradientTopK), pid)
           }
-        } else { g => ParamsClient.postGradients(masterUrl, g, pid) })
-  }
-
-  /** [[fit]] with the parameter server sharded `shards` ways
-    * ([[ShardedParameterServer]]): same hogwild semantics, but weight
-    * pulls and gradient pushes split into per-slice transfers that
-    * overlap — the scale path past the single-server NIC/serialization
-    * ceiling. Worker loop, batch modes, shuffle rounds, abort policy,
-    * and `gradientTopK` sparse pushes are identical to [[fit]] — the
-    * global top-k selection runs once per push and the sparse payload
-    * slices along the same whole-tensor shard bounds as dense. */
-  def fitSharded(
-      rdd: RDD[(Array[Double], Array[Double])],
-      spec: NetSpec,
-      cfg: Config,
-      shards: Int): Tensors = {
-    val net = new Network(spec)
-    val weights = net.initWeights(cfg.seed)
-    val server = new ShardedParameterServer(
-      weights, () => Optimizer.build(cfg.optimizerName, cfg.learningRate, cfg.optimizerOptions),
-      cfg.port, shards, cfg.acquireLock, maxErrors = math.max(cfg.iters, 1))
-    server.start()
-    try {
-      server.awaitReady()
-      val host = determineMaster(0).split(':')(0)
-      val urls = server.boundPorts.map(p => s"$host:$p").toSeq
-      val bounds = server.sliceBounds.toSeq
-      val specJson = spec.toJson
-      val workerCfg = cfg
-      var current = rdd
-      var round = 0
-      val rounds = math.max(cfg.partitionShuffles, 1)
-      while (round < rounds) {
-        current.foreachPartition { it =>
-          val rows = it.toArray
-          if (rows.nonEmpty) {
-            val s = NetSpec.fromJson(specJson)
-            val n2 = new Network(s)
-            val pid = org.apache.spark.TaskContext.getPartitionId()
-            val (x, y) = toMatrices(rows, s)
-            LocalTrainer.trainLoop(
-              n2, x, y,
-              LocalTrainer.Config(workerCfg.iters, workerCfg.miniBatchSize,
-                workerCfg.miniStochasticIters, workerCfg.shufflePerIter,
-                workerCfg.verbose, workerCfg.seed + pid),
-              pull = () => ShardedParamsClient.getWeights(urls),
-              push =
-                if (workerCfg.gradientTopK > 0) {
-                  var residual: Tensors = null
-                  g => {
-                    if (residual == null) residual = graft.nn.Tensors.zerosLike(g)
-                    ShardedParamsClient.postSparseGradients(urls, bounds,
-                      graft.nn.GradientCompression.sparsifyTopK(
-                        g, residual, workerCfg.gradientTopK), pid)
-                  }
-                } else { g => ShardedParamsClient.postGradients(urls, bounds, g, pid) })
-          }
-        }
-        if (server.isAborted) throw new IllegalStateException(
-          s"sharded parameter server aborted after ${server.errorCount} failed updates")
-        round += 1
-        if (round < rounds) current = current.repartition(current.getNumPartitions)
-      }
-      server.currentWeights
-    } finally {
-      server.stop()
-    }
+        } else { g => ShardedParamsClient.postGradients(shardUrls, bounds, g, pid) })
   }
 
   /** Driver URL for executors — `determine_master`

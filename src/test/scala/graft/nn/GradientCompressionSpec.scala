@@ -106,14 +106,14 @@ class GradientCompressionSpec extends AnyFunSuite {
     } finally sharded.stop()
   }
 
-  test("fitSharded with gradientTopK trains XOR end to end") {
+  test("sharded fit with gradientTopK trains XOR end to end") {
     val spark = graft.SparkFixture.spark
     val xor = Seq(
       (Array(0.0, 0.0), Array(0.0)), (Array(0.0, 1.0), Array(1.0)),
       (Array(1.0, 0.0), Array(1.0)), (Array(1.0, 1.0), Array(0.0)))
     val rdd = spark.sparkContext.parallelize(xor, 2)
     val spec = NetSpec.input(2).dense(8, "relu").dense(1, "sigmoid").loss("mse")
-    val w = graft.train.HogwildTrainer.fitSharded(rdd, spec,
+    val w = graft.train.HogwildTrainer.fit(rdd, spec,
       graft.train.HogwildTrainer.Config(optimizerName = "adam", learningRate = 0.1,
         iters = 80, port = 6700, seed = 7L, gradientTopK = 8),
       shards = 2)

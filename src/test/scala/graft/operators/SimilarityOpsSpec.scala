@@ -79,6 +79,30 @@ class SimilarityOpsSpec extends AnyFunSuite {
       "every subvector coded exactly once")
   }
 
+  test("emb_coreset_kcenter on a corpus smaller than K picks every vector once") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    def corpus(rows: Seq[(Long, Seq[Double])]): String = {
+      val dir = java.nio.file.Files.createTempDirectory("coreset").toString
+      rows.toDF("vec_id", "embedding")
+        .withColumn("embedding", col("embedding").cast("array<float>"))
+        .withColumn("label", lit(0))
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      dir
+    }
+    val q = SimilarityOps.queries("emb_coreset_kcenter")
+    val three = Seq((7L, Seq(1.0, 0.0)), (3L, Seq(0.0, 1.0)), (5L, Seq(1.0, 1.0)))
+    val out = q(spark, corpus(three)).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(out.map(_._1) == Seq(1L, 2L, 3L), out)
+    assert(out.map(_._2).sorted == Seq(3L, 5L, 7L), out)
+    // seed = lowest vec_id at the conventional radius 2.0; the next pick
+    // is the farthest (cosine distance 1.0) from it
+    assert(out.head == ((1L, 3L, 2.0)), out)
+    assert(out(1) == ((2L, 7L, 1.0)), out)
+    assert(q(spark, corpus(Seq.empty)).collect().isEmpty)
+  }
+
   test("ann_mmr_rerank: equals a driver-side greedy reference; near-dup demoted") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

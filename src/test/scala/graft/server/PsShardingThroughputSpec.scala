@@ -115,7 +115,8 @@ class PsShardingThroughputSpec extends AnyFunSuite {
   }
 
   test("estimator auto-rule matches the crossover: small nets stay single, big nets shard") {
-    import graft.ml.SparkAsyncDL
+    import graft.train.HogwildTrainer.resolveShards
+    def shapes(spec: NetSpec) = new graft.nn.Network(spec).initWeights(spec.seed)
     def denseSpec(dims: Int*): NetSpec = {
       val layers = dims.sliding(2).map { case Seq(i, o) =>
         graft.nn.LayerSpec(i, o, "relu")
@@ -123,12 +124,12 @@ class PsShardingThroughputSpec extends AnyFunSuite {
       NetSpec(layers.init :+ layers.last.copy(activation = "linear"), "mse", 42L)
     }
     // XOR-sized net: 2 tensors per layer, tiny — auto must pick 1
-    assert(SparkAsyncDL.resolveShards(0, denseSpec(2, 4, 1)) == 1)
+    assert(resolveShards(0, shapes(denseSpec(2, 4, 1))) == 1)
     // ~660k elements: auto must shard
     val big = denseSpec(512, 512, 512, 4)
-    assert(SparkAsyncDL.resolveShards(0, big) > 1)
+    assert(resolveShards(0, shapes(big)) > 1)
     // explicit request wins, capped at the tensor count
-    assert(SparkAsyncDL.resolveShards(3, big) == 3)
-    assert(SparkAsyncDL.resolveShards(100, denseSpec(2, 4, 1)) == 4)
+    assert(resolveShards(3, shapes(big)) == 3)
+    assert(resolveShards(100, shapes(denseSpec(2, 4, 1))) == 4)
   }
 }

@@ -63,7 +63,7 @@ class ShardedParameterServerSpec extends AnyFunSuite {
     } finally server.stop()
   }
 
-  test("distributed fitSharded trains XOR end to end") {
+  test("distributed fit with 3 shards trains XOR end to end") {
     val spark = graft.SparkFixture.spark
     import graft.nn.NetSpec
     import graft.train.HogwildTrainer
@@ -72,7 +72,7 @@ class ShardedParameterServerSpec extends AnyFunSuite {
       (Array(1.0, 0.0), Array(1.0)), (Array(1.0, 1.0), Array(0.0)))
     val rdd = spark.sparkContext.parallelize(xor, 2)
     val spec = NetSpec.input(2).dense(8, "relu").dense(1, "sigmoid").loss("mse")
-    val w = HogwildTrainer.fitSharded(rdd, spec,
+    val w = HogwildTrainer.fit(rdd, spec,
       HogwildTrainer.Config(optimizerName = "adam", learningRate = 0.1,
         iters = 60, port = 6300, seed = 7L),
       shards = 3)
