@@ -353,9 +353,12 @@ object Bench {
     //      with ~20 queries, for any consumer that scans whole stdout;
     //  (b) ONE `per_query_ms` line with integer milliseconds in
     //      sorted-query-name order (~1.6 KB for 343 queries), sized so
-    //      that it + the final total line fit inside a 2000-char tail —
-    //      pair values with SparkEntry.queries.keys.toSeq.sorted (the
-    //      bench's own order) to recover per-query seconds.
+    //      that it + the final total line fit inside a 2000-char tail.
+    //      Its values follow the sorted names of the queries that RAN,
+    //      so pairing them with SparkEntry.queries.keys.toSeq.sorted
+    //      recovers per-query seconds only when the line's `n` equals
+    //      the full query count; under SPARK_GRAFT_ONLY (or any other
+    //      subset) the positions shift and that pairing is wrong.
     results.grouped(20).zipWithIndex.foreach { case (chunk, i) =>
       val part = chunk.map { case (k, v, _, _, _, _) =>
         "\"" + k + "\":" + (if (v >= 0) f"$v%.3f" else "null")

@@ -26,8 +26,6 @@ object GradientCompression {
   /** Magic first-int of a sparse wire payload. Dense [[Tensors.toBytes]]
     * starts with the tensor count (always ≥ 0), so negative ⇒ sparse. */
   private val Magic = -2
-  /** Magic for the int8-quantized sparse form (5 bytes/entry vs 12). */
-  private val MagicQ8 = -3
 
   /** One sparse gradient set: per tensor, shape + column-major linear
     * indices + values of the kept entries. */
@@ -137,93 +135,14 @@ object GradientCompression {
     SparseGrad(rows, cols, idx, vals)
   }
 
-  /** Int8-quantize a sparse gradient's VALUES (symmetric per-tensor
-    * scale = max|v|/127) and charge the rounding error back to the
-    * residual — composing with top-k's error feedback, so quantization
-    * error is also delayed, never lost. Wire cost per entry drops from
-    * 12 bytes (int index + double) to 5 (int index + signed byte);
-    * with top-k at 1% density the two stages together cut push bytes
-    * ~160× vs dense. */
-  def quantizeSparse(s: SparseGrad, residual: Tensors): QuantizedSparseGrad = {
-    val scales = new Array[Double](s.rows.length)
-    val codes = Array.ofDim[Array[Byte]](s.rows.length)
-    var t = 0
-    while (t < s.rows.length) {
-      var maxAbs = 0.0
-      s.vals(t).foreach(v => maxAbs = math.max(maxAbs, math.abs(v)))
-      val scale = if (maxAbs == 0.0) 1.0 else maxAbs / 127.0
-      scales(t) = scale
-      codes(t) = new Array[Byte](s.vals(t).length)
-      var i = 0
-      while (i < s.vals(t).length) {
-        val q = math.round(s.vals(t)(i) / scale).toInt.max(-127).min(127)
-        codes(t)(i) = q.toByte
-        // rounding error joins the residual at this entry's position
-        residual(t).data(s.idx(t)(i)) += s.vals(t)(i) - q * scale
-        i += 1
-      }
-      t += 1
-    }
-    QuantizedSparseGrad(s.rows, s.cols, s.idx, scales, codes)
-  }
-
-  case class QuantizedSparseGrad(rows: Array[Int], cols: Array[Int],
-      idx: Array[Array[Int]], scales: Array[Double], codes: Array[Array[Byte]]) {
-    def toDense: Tensors =
-      Array.tabulate(rows.length) { t =>
-        val m = DenseMatrix.zeros[Double](rows(t), cols(t))
-        var i = 0
-        while (i < idx(t).length) { m.data(idx(t)(i)) = codes(t)(i) * scales(t); i += 1 }
-        m
-      }
-  }
-
-  def toBytesQ8(s: QuantizedSparseGrad): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(MagicQ8)
-    out.writeInt(s.rows.length)
-    var t = 0
-    while (t < s.rows.length) {
-      out.writeInt(s.rows(t)); out.writeInt(s.cols(t)); out.writeInt(s.idx(t).length)
-      out.writeDouble(s.scales(t))
-      s.idx(t).foreach(out.writeInt)
-      out.write(s.codes(t))
-      t += 1
-    }
-    out.flush()
-    bos.toByteArray
-  }
-
-  def fromBytesQ8(bytes: Array[Byte]): QuantizedSparseGrad = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    require(in.readInt() == MagicQ8, "not a q8 sparse payload")
-    val n = in.readInt()
-    val rows = new Array[Int](n); val cols = new Array[Int](n)
-    val idx = new Array[Array[Int]](n); val scales = new Array[Double](n)
-    val codes = new Array[Array[Byte]](n)
-    var t = 0
-    while (t < n) {
-      rows(t) = in.readInt(); cols(t) = in.readInt()
-      val nnz = in.readInt()
-      scales(t) = in.readDouble()
-      idx(t) = Array.fill(nnz)(in.readInt())
-      codes(t) = new Array[Byte](nnz); in.readFully(codes(t))
-      t += 1
-    }
-    QuantizedSparseGrad(rows, cols, idx, scales, codes)
-  }
-
-  /** Server-side decode of any wire form: sparse and quantized-sparse
-    * payloads (magic headers) densify, anything else is the plain dense
-    * codec. */
+  /** Server-side decode of either wire form: a sparse payload (magic
+    * header) densifies, anything else is the plain dense codec. */
   def decodeMaybeSparse(bytes: Array[Byte]): Tensors = {
     val head = if (bytes.length >= 4)
       (bytes(0) & 0xFF) << 24 | (bytes(1) & 0xFF) << 16 |
         (bytes(2) & 0xFF) << 8 | (bytes(3) & 0xFF)
     else 0
     if (head == Magic) fromBytes(bytes).toDense
-    else if (head == MagicQ8) fromBytesQ8(bytes).toDense
     else Tensors.fromBytes(bytes)
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -1369,40 +1369,8 @@ object EventOps {
       // user-bounded; materialized because BOTH the θ moment pass and
       // the per-user adjustment consume it — without this the two
       // corpus collapses would replay once per consumer (4 scans)
-      val ux = side(pre = true).join(side(pre = false), Seq("user_id"))
-        .localCheckpoint()
-      val mom = ux.agg(count(lit(1)).as("n"),
-        sum(DetMean.el10(col("x"))).as("sx"),
-        sum(DetMean.el10(col("y"))).as("sy"),
-        sum(DetMean.prod12(col("x"), col("x"))).as("sxx"),
-        sum(DetMean.prod12(col("x"), col("y"))).as("sxy"))
-      val theta = mom
-        .withColumn("mx", round(col("sx").cast("double") / col("n"), 10))
-        .withColumn("my", round(col("sy").cast("double") / col("n"), 10))
-        .withColumn("cov", round(col("sxy").cast("double") / col("n") -
-          col("mx") * col("my"), 10))
-        .withColumn("varx", round(col("sxx").cast("double") / col("n") -
-          col("mx") * col("mx"), 10))
-        .withColumn("theta", round(col("cov") / col("varx"), 10))
-        .select(col("mx"), col("theta"))
-      ux.crossJoin(broadcast(theta))
-        .withColumn("yadj",
-          round(col("y") - col("theta") * (col("x") - col("mx")), 6))
-        .withColumn("arm", col("user_id") % 2)
-        .groupBy(col("arm"))
-        .agg(count(lit(1)).as("n_users"),
-          sum(DetMean.el10(col("y"))).as("sy"),
-          sum(DetMean.prod12(col("y"), col("y"))).as("syy"),
-          sum(DetMean.el10(col("yadj"))).as("sa"),
-          sum(DetMean.prod12(col("yadj"), col("yadj"))).as("saa"))
-        .withColumn("mean_y", DetMean.mean6(col("sy"), col("n_users")))
-        .withColumn("mean_y_adj", DetMean.mean6(col("sa"), col("n_users")))
-        .select(col("arm"), col("n_users"), col("mean_y"), col("mean_y_adj"),
-          round(col("syy").cast("double") / col("n_users") -
-            col("mean_y") * col("mean_y"), 6).as("var_y"),
-          round(col("saa").cast("double") / col("n_users") -
-            col("mean_y_adj") * col("mean_y_adj"), 6).as("var_y_adj"))
-        .orderBy(col("arm"))
+      cupedArms(side(pre = true).join(side(pre = false), Seq("user_id"))
+        .localCheckpoint())
     },
     // Difference-in-differences (Card & Krueger 1994 shape) — the
     // quasi-experimental estimator for a rollout with no randomized
@@ -1423,23 +1391,9 @@ object EventOps {
       val ev = events(s, dir)
         .select(col("user_id"), unix_micros(col("ts")).as("us"), col("value"))
       val span = ev.agg(min(col("us")).as("lo"), max(col("us")).as("hi"))
-      def cellMean(c: org.apache.spark.sql.Column) = DetMean.mean6(
-        sum(when(c, DetMean.el10(col("value")))), sum(when(c, 1L)))
-      val post = col("us") >= col("cut")
-      val treated = col("user_id") % 2 === 1
-      ev.crossJoin(broadcast(span))
-        .withColumn("cut", expr("lo + (hi - lo) div 2"))
-        .agg(
-          sum(when(!treated && !post, 1L)).as("n_c_pre"),
-          sum(when(!treated && post, 1L)).as("n_c_post"),
-          sum(when(treated && !post, 1L)).as("n_t_pre"),
-          sum(when(treated && post, 1L)).as("n_t_post"),
-          cellMean(!treated && !post).as("m_c_pre"),
-          cellMean(!treated && post).as("m_c_post"),
-          cellMean(treated && !post).as("m_t_pre"),
-          cellMean(treated && post).as("m_t_post"))
-        .withColumn("did", round((col("m_t_post") - col("m_t_pre")) -
-          (col("m_c_post") - col("m_c_pre")), 6))
+      didCells(ev.crossJoin(broadcast(span))
+        .withColumn("cut", expr("lo + (hi - lo) div 2")),
+        post = col("us") >= col("cut"))
     },
     // k-anonymity audit (Sweeney 2002, IJUFKS) — the privacy gate a
     // training-data release runs over its quasi-identifiers: with QI =
@@ -1455,19 +1409,7 @@ object EventOps {
     // of the first agg is corpus-sized. Determinism: the QI is all
     // integer/string (hour int, floor(value/10) int), counts exact.
     "events_k_anonymity" -> { (s, dir) =>
-      val groups = events(s, dir)
-        .groupBy(col("event_type"), hour(col("ts")).as("hr"),
-          floor(col("value") / 10.0).as("vbucket"))
-        .agg(count(lit(1)).as("gsize"))
-      groups.groupBy(col("event_type"))
-        .agg(min(col("gsize")).as("k"),
-          count(lit(1)).as("n_groups"),
-          sum(col("gsize")).as("n_rows"),
-          sum(when(col("gsize") < 5, col("gsize")).otherwise(0L))
-            .as("rows_at_risk"))
-        .withColumn("risk_share",
-          round(col("rows_at_risk").cast("double") / col("n_rows"), 6))
-        .orderBy(col("event_type"))
+      kAnonReport(kAnonCells(events(s, dir)))
     },
     // Automation/bot detection by inter-arrival regularity — the
     // data-quality gate an event pipeline runs before any behavioral
@@ -1734,17 +1676,10 @@ object EventOps {
     // divides once and rounds 6dp.
     "events_srm_check" -> { (s, dir) =>
       val treated = col("user_id") % 2 === 1
-      events(s, dir)
+      srmChi2(events(s, dir)
         .groupBy(col("event_type"))
         .agg(sum(when(!treated, 1L).otherwise(0L)).as("n0"),
-          sum(when(treated, 1L).otherwise(0L)).as("n1"))
-        .withColumn("e", (col("n0") + col("n1")).cast("double") / 2)
-        .withColumn("chi2", round(
-          (col("n0") - col("e")) * (col("n0") - col("e")) / col("e") +
-            (col("n1") - col("e")) * (col("n1") - col("e")) / col("e"), 6))
-        .select(col("event_type"), col("n0"), col("n1"), col("chi2"),
-          (col("chi2") > 3.841459).as("srm_flag"))
-        .orderBy(col("event_type"))
+          sum(when(treated, 1L).otherwise(0L)).as("n1")))
     },
     // Power analysis / minimum-detectable-effect table per event type:
     // n per arm = 2σ²(z_{1-α/2}+z_{1-β})²/δ² (two-sided α=.05, 80%
@@ -1933,34 +1868,153 @@ object EventOps {
           col("ln_lambda"), col("p_always_valid"))
         .orderBy(col("event_type"))
     },
-    "events_ab_welch" -> { (s, dir) =>
-      val treated = col("user_id") % 2 === 1
-      def cnt(c: org.apache.spark.sql.Column) = sum(when(c, 1L))
-      def s1(c: org.apache.spark.sql.Column) =
-        sum(when(c, DetMean.el10(col("value"))))
-      def s2(c: org.apache.spark.sql.Column) =
-        sum(when(c, DetMean.el10(col("value") * col("value"))))
-      events(s, dir)
-        .agg(cnt(!treated).as("n0"), cnt(treated).as("n1"),
-          s1(!treated).as("sy0"), s1(treated).as("sy1"),
-          s2(!treated).as("syy0"), s2(treated).as("syy1"))
-        .withColumn("m0", DetMean.mean6(col("sy0"), col("n0")))
-        .withColumn("m1", DetMean.mean6(col("sy1"), col("n1")))
-        .withColumn("v0", round((col("syy0").cast("double") -
-          col("n0") * col("m0") * col("m0")) / (col("n0") - 1), 6))
-        .withColumn("v1", round((col("syy1").cast("double") -
-          col("n1") * col("m1") * col("m1")) / (col("n1") - 1), 6))
-        .withColumn("se0", col("v0") / col("n0"))
-        .withColumn("se1", col("v1") / col("n1"))
-        .withColumn("t", round((col("m1") - col("m0")) /
-          sqrt(col("se1") + col("se0")), 6))
-        .withColumn("df", round(
-          (col("se1") + col("se0")) * (col("se1") + col("se0")) /
-            (col("se1") * col("se1") / (col("n1") - 1) +
-             col("se0") * col("se0") / (col("n0") - 1)), 2))
-        .select(col("n0"), col("n1"), col("m0"), col("m1"),
-          col("v0"), col("v1"), col("t"), col("df"))
-    })
+    "events_ab_welch" -> { (s, dir) => welch(events(s, dir)) })
+
+  // --- stream/batch twin kernels -------------------------------------
+  // Each finishing algebra below is written once. Its batch query above
+  // and its live readout in graft.streaming.EventStream both call it, so
+  // the oracle that checks the batch query pins the stream's rounding
+  // lattice too. Each side keeps only its own accumulation.
+
+  /** One-row Welch t-test over `ev` (`events_ab_welch`): arms by
+    * user_id % 2, six conditional moment sums, the t/df algebra as a
+    * projection over them. Given a streaming `ev` it runs as an
+    * unbounded aggregation (complete mode, one global group): the state
+    * store keeps the six sums, and after every micro-batch the sink
+    * holds exactly the decision row the batch query computes over the
+    * data seen so far. Moment sums are exact decimals (order-
+    * independent), so stream == batch bit-for-bit at any cut; the state
+    * is six numbers regardless of corpus size. */
+  def welch(ev: DataFrame): DataFrame = {
+    val treated = col("user_id") % 2 === 1
+    def cnt(c: Column) = sum(when(c, 1L))
+    def s1(c: Column) = sum(when(c, DetMean.el10(col("value"))))
+    def s2(c: Column) =
+      sum(when(c, DetMean.el10(col("value") * col("value"))))
+    ev
+      .agg(cnt(!treated).as("n0"), cnt(treated).as("n1"),
+        s1(!treated).as("sy0"), s1(treated).as("sy1"),
+        s2(!treated).as("syy0"), s2(treated).as("syy1"))
+      .withColumn("m0", DetMean.mean6(col("sy0"), col("n0")))
+      .withColumn("m1", DetMean.mean6(col("sy1"), col("n1")))
+      .withColumn("v0", round((col("syy0").cast("double") -
+        col("n0") * col("m0") * col("m0")) / (col("n0") - 1), 6))
+      .withColumn("v1", round((col("syy1").cast("double") -
+        col("n1") * col("m1") * col("m1")) / (col("n1") - 1), 6))
+      .withColumn("se0", col("v0") / col("n0"))
+      .withColumn("se1", col("v1") / col("n1"))
+      .withColumn("t", round((col("m1") - col("m0")) /
+        sqrt(col("se1") + col("se0")), 6))
+      .withColumn("df", round(
+        (col("se1") + col("se0")) * (col("se1") + col("se0")) /
+          (col("se1") * col("se1") / (col("n1") - 1) +
+           col("se0") * col("se0") / (col("n0") - 1)), 2))
+      .select(col("n0"), col("n1"), col("m0"), col("m1"),
+        col("v0"), col("v1"), col("t"), col("df"))
+  }
+
+  /** `events_k_anonymity`'s quasi-identifier group sizes
+    * ((event_type, hour, value-bucket) → count) as ONE keyed
+    * aggregation. As a streaming aggregation its state is bounded by the
+    * quasi-identifier DOMAIN (types × 24 hours × buckets), not the
+    * stream length; counts are exact integers, so stream == batch
+    * bit-for-bit at any cut. */
+  def kAnonCells(ev: DataFrame): DataFrame =
+    ev.groupBy(col("event_type"), hour(col("ts")).as("hr"),
+        floor(col("value") / 10.0).as("vbucket"))
+      .agg(count(lit(1)).as("gsize"))
+
+  /** The per-type release report over [[kAnonCells]]: realized k,
+    * group count, and the rows (and share) sitting in groups below
+    * k = 5. */
+  def kAnonReport(cells: DataFrame): DataFrame =
+    cells.groupBy(col("event_type"))
+      .agg(min(col("gsize")).as("k"),
+        count(lit(1)).as("n_groups"),
+        sum(col("gsize")).as("n_rows"),
+        sum(when(col("gsize") < 5, col("gsize")).otherwise(0L))
+          .as("rows_at_risk"))
+      .withColumn("risk_share",
+        round(col("rows_at_risk").cast("double") / col("n_rows"), 6))
+      .orderBy(col("event_type"))
+
+  /** `events_srm_check`'s χ² tail over per-type arm counts
+    * `(event_type, n0, n1)`: χ² against the exact-half expectation,
+    * flagged at the df=1 α=.05 critical value. */
+  def srmChi2(counts: DataFrame): DataFrame =
+    counts
+      .withColumn("e", (col("n0") + col("n1")).cast("double") / 2)
+      .withColumn("chi2", round(
+        (col("n0") - col("e")) * (col("n0") - col("e")) / col("e") +
+          (col("n1") - col("e")) * (col("n1") - col("e")) / col("e"), 6))
+      .select(col("event_type"), col("n0"), col("n1"), col("chi2"),
+        (col("chi2") > 3.841459).as("srm_flag"))
+      .orderBy(col("event_type"))
+
+  /** `events_diff_in_diff`'s 2×2: arm (user_id % 2) × period (`post`),
+    * four cell sizes, four 6dp cell means and the estimate, in one
+    * global aggregation. The batch query passes `post` against the
+    * mid-span cut it derives from the data; a live experiment knows its
+    * exposure cut a priori and passes `unix_micros(ts) >= cutUs`. DiD
+    * is LINEAR in the events, so as a streaming aggregation the state
+    * is eight exact-decimal moment sums at any stream length, and
+    * stream == batch bit-for-bit at any cut. */
+  def didCells(ev: DataFrame, post: Column): DataFrame = {
+    val treated = col("user_id") % 2 === 1
+    def cellMean(c: Column) = DetMean.mean6(
+      sum(when(c, DetMean.el10(col("value")))), sum(when(c, 1L)))
+    ev.agg(
+        sum(when(!treated && !post, 1L)).as("n_c_pre"),
+        sum(when(!treated && post, 1L)).as("n_c_post"),
+        sum(when(treated && !post, 1L)).as("n_t_pre"),
+        sum(when(treated && post, 1L)).as("n_t_post"),
+        cellMean(!treated && !post).as("m_c_pre"),
+        cellMean(!treated && post).as("m_c_post"),
+        cellMean(treated && !post).as("m_t_pre"),
+        cellMean(treated && post).as("m_t_post"))
+      .withColumn("did", round((col("m_t_post") - col("m_t_pre")) -
+        (col("m_c_post") - col("m_c_pre")), 6))
+  }
+
+  /** `events_cuped`'s finishing algebra over a MATERIALIZED per-user
+    * table `(user_id, x, y)` of 6dp pre/post means: θ from five
+    * user-bounded moment sums (10dp path), the per-user adjustment, two
+    * arm rows at 6dp. The caller materializes `ux` because both the θ
+    * pass and the adjustment consume it. */
+  def cupedArms(ux: DataFrame): DataFrame = {
+    val mom = ux.agg(count(lit(1)).as("n"),
+      sum(DetMean.el10(col("x"))).as("sx"),
+      sum(DetMean.el10(col("y"))).as("sy"),
+      sum(DetMean.prod12(col("x"), col("x"))).as("sxx"),
+      sum(DetMean.prod12(col("x"), col("y"))).as("sxy"))
+    val theta = mom
+      .withColumn("mx", round(col("sx").cast("double") / col("n"), 10))
+      .withColumn("my", round(col("sy").cast("double") / col("n"), 10))
+      .withColumn("cov", round(col("sxy").cast("double") / col("n") -
+        col("mx") * col("my"), 10))
+      .withColumn("varx", round(col("sxx").cast("double") / col("n") -
+        col("mx") * col("mx"), 10))
+      .withColumn("theta", round(col("cov") / col("varx"), 10))
+      .select(col("mx"), col("theta"))
+    ux.crossJoin(broadcast(theta))
+      .withColumn("yadj",
+        round(col("y") - col("theta") * (col("x") - col("mx")), 6))
+      .withColumn("arm", col("user_id") % 2)
+      .groupBy(col("arm"))
+      .agg(count(lit(1)).as("n_users"),
+        sum(DetMean.el10(col("y"))).as("sy"),
+        sum(DetMean.prod12(col("y"), col("y"))).as("syy"),
+        sum(DetMean.el10(col("yadj"))).as("sa"),
+        sum(DetMean.prod12(col("yadj"), col("yadj"))).as("saa"))
+      .withColumn("mean_y", DetMean.mean6(col("sy"), col("n_users")))
+      .withColumn("mean_y_adj", DetMean.mean6(col("sa"), col("n_users")))
+      .select(col("arm"), col("n_users"), col("mean_y"), col("mean_y_adj"),
+        round(col("syy").cast("double") / col("n_users") -
+          col("mean_y") * col("mean_y"), 6).as("var_y"),
+        round(col("saa").cast("double") / col("n_users") -
+          col("mean_y_adj") * col("mean_y_adj"), 6).as("var_y_adj"))
+      .orderBy(col("arm"))
+  }
 
   private val asOfOracle: String =
     """WITH ce AS (

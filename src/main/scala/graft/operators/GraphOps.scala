@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Distributed graph primitives for dedup-cluster resolution.
@@ -177,7 +177,36 @@ object GraphOps {
     * `dst`, which AQE can skew-split. On a real cluster swap
     * localCheckpoint for reliable `checkpoint()`. */
   def pagerank(edges: DataFrame, damping: Double, teleport: Double,
-      iters: Int, broadcastNodeLimit: Long = 10000000L): DataFrame = {
+      iters: Int, broadcastNodeLimit: Long = 10000000L): DataFrame =
+    powerIterate(edges, damping, iters, broadcastNodeLimit,
+      init = n => round(lit(1.0 / n), 12),
+      jump = n => lit(teleport / n))
+
+  /** Personalized PageRank: power iteration where ALL teleport mass
+    * returns to one seed node instead of spreading uniformly — the
+    * "similar to this node" ranking (recommendation seeds, related-item
+    * graphs), as opposed to [[pagerank]]'s global centrality.
+    *
+    * Same iteration body as [[pagerank]]. Init is rank=1 at the seed, 0
+    * elsewhere; each step is `damping·Σ share + teleport·1_seed`. Nodes
+    * keep rank rows once any in-neighbor has mass — on a symmetrized
+    * graph that is every node reachable from the seed, which is exactly
+    * PPR's support. */
+  def personalizedPagerank(edges: DataFrame, seed: String, damping: Double,
+      teleport: Double, iters: Int,
+      broadcastNodeLimit: Long = 10000000L): DataFrame =
+    powerIterate(edges, damping, iters, broadcastNodeLimit,
+      init = _ => when(col("node") === seed, 1.0).otherwise(0.0),
+      jump = _ => when(col("dst") === seed, lit(teleport)).otherwise(lit(0.0)))
+
+  /** The power-iteration body shared by [[pagerank]] and
+    * [[personalizedPagerank]]. Only two columns differ between them,
+    * each a function of the node count `n`: `init` is the starting rank
+    * of each `node`, `jump` the teleport mass landing on each `dst`.
+    * Each round's rank is `round(jump + damping·Σ share, 12)`. */
+  private def powerIterate(edges: DataFrame, damping: Double, iters: Int,
+      broadcastNodeLimit: Long, init: Long => Column,
+      jump: Long => Column): DataFrame = {
     // ONE materialization of the raw edge list — everything else in the
     // computation (degree, node count, every iteration's scan) reads
     // these in-memory blocks. The round-8 formulation materialized a
@@ -217,7 +246,7 @@ object GraphOps {
       else e0.coalesce(iterParts(e0, mEdges))
     val outdeg = if (big) outdeg0 else outdeg0.coalesce(pN)
     var ranks = outdeg.select(col("src").as("node"))
-      .withColumn("rank", round(lit(1.0 / n), 12))
+      .withColumn("rank", init(n))
       .coalesce(pN).localCheckpoint()
     for (_ <- 1 to iters) {
       // The per-node SHARE (rank/deg) is computed node-side before the
@@ -241,57 +270,7 @@ object GraphOps {
         .groupBy(col("dst"))
         .agg(sum(col("share")).as("s"))
         .select(col("dst").as("node"),
-          round(lit(teleport / n) + lit(damping) * col("s"), 12).as("rank"))
-        .coalesce(pN).localCheckpoint()
-    }
-    ranks
-  }
-
-  /** Personalized PageRank: power iteration where ALL teleport mass
-    * returns to one seed node instead of spreading uniformly — the
-    * "similar to this node" ranking (recommendation seeds, related-item
-    * graphs), as opposed to [[pagerank]]'s global centrality.
-    *
-    * Same plan discipline as [[pagerank]]: the edge list materializes
-    * once, the rank table re-joins per iteration (broadcast under
-    * `broadcastNodeLimit`, co-partitioned above), per-iteration
-    * `localCheckpoint`, 12 dp rounding for cross-engine replay. Init is
-    * rank=1 at the seed, 0 elsewhere; each step is
-    * `damping·Σ share + teleport·1_seed`. Nodes keep rank rows once any
-    * in-neighbor has mass — on a symmetrized graph that is every node
-    * reachable from the seed, which is exactly PPR's support. */
-  def personalizedPagerank(edges: DataFrame, seed: String, damping: Double,
-      teleport: Double, iters: Int,
-      broadcastNodeLimit: Long = 10000000L): DataFrame = {
-    val e0 = edges.localCheckpoint()
-    val outdeg0 = e0.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    // node + edge counts off one agg row; the edge count sizes the
-    // iteration substrate's partitioning (same rule as [[pagerank]])
-    val hdr = outdeg0.agg(count(lit(1)), sum(col("deg"))).head()
-    val n = hdr.getLong(0)
-    val mEdges = if (hdr.isNullAt(1)) 0L else hdr.getLong(1)
-    val pN = iterParts(outdeg0, n)
-    val big = n > broadcastNodeLimit
-    val e = if (big) e0.repartition(col("src")).localCheckpoint()
-      else e0.coalesce(iterParts(e0, mEdges))
-    val outdeg = if (big) outdeg0 else outdeg0.coalesce(pN)
-    var ranks = outdeg.select(col("src").as("node"))
-      .withColumn("rank",
-        when(col("node") === seed, 1.0).otherwise(0.0))
-      .coalesce(pN).localCheckpoint()
-    for (_ <- 1 to iters) {
-      val shares = ranks.join(outdeg, col("node") === col("src"))
-        .select(col("node"), (col("rank") / col("deg")).as("share"))
-      val joined =
-        if (big) e.join(shares, col("src") === col("node"))
-        else e.join(broadcast(shares), col("src") === col("node"))
-      ranks = joined
-        .groupBy(col("dst"))
-        .agg(sum(col("share")).as("s"))
-        .select(col("dst").as("node"),
-          round(when(col("dst") === seed, lit(teleport)).otherwise(lit(0.0)) +
-            lit(damping) * col("s"), 12).as("rank"))
+          round(jump(n) + lit(damping) * col("s"), 12).as("rank"))
         .coalesce(pN).localCheckpoint()
     }
     ranks
@@ -320,17 +299,16 @@ object GraphOps {
     var labels = e0.select(col("u").as("node")).distinct()
       .withColumn("label", col("node"))
       .localCheckpoint()
-    // free dispatch: one agg over the checkpointed edge blocks yields
-    // BOTH counts — the node count (distinct u) gates the join plan and
-    // sizes the label-table partitioning, and the EDGE count sizes the
-    // edge side (r17 ADVICE: a dense graph under the broadcast limit —
-    // 1M nodes, hundreds of millions of edges — must not serialize
-    // every round's edge scan onto the node-derived handful of tasks;
-    // same rule as pagerank's iterParts(e0, mEdges)). Only the big path
-    // pays the one-time v-partitioned re-layout.
-    val hdr = e0.agg(count(lit(1)), countDistinct(col("u"))).head()
-    val mEdges = hdr.getLong(0)
-    val n = hdr.getLong(1)
+    // both counts read the two eager checkpoints (one label row per
+    // node, one e0 row per edge): the node count gates the join plan
+    // and sizes the label-table partitioning, and the EDGE count sizes
+    // the edge side (r17 ADVICE: a dense graph under the broadcast
+    // limit — 1M nodes, hundreds of millions of edges — must not
+    // serialize every round's edge scan onto the node-derived handful
+    // of tasks; same rule as pagerank's iterParts(e0, mEdges)). Only
+    // the big path pays the one-time v-partitioned re-layout.
+    val n = labels.count()
+    val mEdges = e0.count()
     val pN = iterParts(labels, n)
     val big = n > broadcastNodeLimit
     val e = if (big) e0.repartition(col("v")).localCheckpoint()

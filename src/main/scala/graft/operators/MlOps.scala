@@ -749,23 +749,10 @@ object MlOps {
           sum(when(col("half") === "b", 1L).otherwise(0L)).as("nb"))
       val grid = ev.select(col("event_type")).distinct()
         .crossJoin(s.range(10).select(col("id").as("bin")))
-      val t = org.apache.spark.sql.expressions.Window.partitionBy(col("event_type"))
-      grid.join(c, Seq("event_type", "bin"), "left")
+      psiReport(grid.join(c, Seq("event_type", "bin"), "left")
         .select(col("event_type"), col("bin"),
           coalesce(col("na"), lit(0L)).as("na"),
-          coalesce(col("nb"), lit(0L)).as("nb"))
-        .withColumn("ta", sum(col("na")).over(t))
-        .withColumn("tb", sum(col("nb")).over(t))
-        .withColumn("p", (col("na") + 0.5) / (col("ta") + 5.0))
-        .withColumn("q", (col("nb") + 0.5) / (col("tb") + 5.0))
-        .withColumn("term",
-          round((col("p") - col("q")) * log(col("p") / col("q")), 10)
-            .cast("decimal(20,10)"))
-        .groupBy(col("event_type"), col("ta"), col("tb"))
-        .agg(round(sum(col("term")), 6).cast("double").as("psi"))
-        .select(col("event_type"), col("psi"),
-          col("ta").as("n_ref"), col("tb").as("n_cur"))
-        .orderBy(col("event_type"))
+          coalesce(col("nb"), lit(0L)).as("nb")))
     },
     // Split-conformal prediction intervals (Vovk et al.; Lei et al. 2018
     // JASA) — the distribution-free uncertainty wrapper every deployed
@@ -1339,29 +1326,70 @@ object MlOps {
     // 6dp division; share/propensity 6dp; contribution = share·diff
     // rounded 6dp.
     "ml_stratified_ate" -> { (s, dir) =>
-      val t = col("event_id") % 3 === 0
-      val strata = events(s, dir)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(t, 1L)).as("n_treated"),
-          sum(when(t, DetMean.el10(col("value")))).as("sy1"),
-          sum(when(!t, DetMean.el10(col("value")))).as("sy0"))
+      val strata = ateCells(events(s, dir))
       val tot = strata.agg(sum(col("n")).as("n_all"))
-      strata.crossJoin(broadcast(tot))
-        .withColumn("share",
-          round(col("n").cast("double") / col("n_all"), 6))
-        .withColumn("propensity",
-          round(col("n_treated").cast("double") / col("n"), 6))
-        .withColumn("m_treated",
-          DetMean.mean6(col("sy1"), col("n_treated")))
-        .withColumn("m_control",
-          DetMean.mean6(col("sy0"), col("n") - col("n_treated")))
-        .withColumn("effect", round(col("m_treated") - col("m_control"), 6))
-        .select(col("event_type"), col("n"), col("share"), col("propensity"),
-          col("m_treated"), col("m_control"), col("effect"),
-          round(col("share") * col("effect"), 6).as("ate_contrib"))
-        .orderBy(col("event_type"))
+      ateReport(strata.crossJoin(broadcast(tot)))
     })
+
+  // --- stream/batch twin kernels -------------------------------------
+  // Written once; the batch query above and its live readout in
+  // graft.streaming.EventStream both call them (see EventOps' kernels).
+
+  /** `ml_stratified_ate`'s per-stratum (event_type) treated/control
+    * moment sums as ONE keyed aggregation. As a streaming aggregation
+    * the state is bounded by the stratum domain; decimal moment sums
+    * are order-independent, so stream == batch bit-for-bit at any
+    * cut. */
+  def ateCells(ev: DataFrame): DataFrame = {
+    val t = col("event_id") % 3 === 0
+    ev.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(when(t, 1L)).as("n_treated"),
+        sum(when(t, DetMean.el10(col("value")))).as("sy1"),
+        sum(when(!t, DetMean.el10(col("value")))).as("sy0"))
+  }
+
+  /** The share/propensity/effect table over [[ateCells]] rows that
+    * also carry the corpus total `n_all`. Each side attaches `n_all`
+    * its own way: the batch query broadcasts a 1-row total, a live
+    * readout sums over a window on the ≤|types|-row cell table. */
+  def ateReport(strata: DataFrame): DataFrame =
+    strata
+      .withColumn("share",
+        round(col("n").cast("double") / col("n_all"), 6))
+      .withColumn("propensity",
+        round(col("n_treated").cast("double") / col("n"), 6))
+      .withColumn("m_treated",
+        DetMean.mean6(col("sy1"), col("n_treated")))
+      .withColumn("m_control",
+        DetMean.mean6(col("sy0"), col("n") - col("n_treated")))
+      .withColumn("effect", round(col("m_treated") - col("m_control"), 6))
+      .select(col("event_type"), col("n"), col("share"), col("propensity"),
+        col("m_treated"), col("m_control"), col("effect"),
+        round(col("share") * col("effect"), 6).as("ate_contrib"))
+      .orderBy(col("event_type"))
+
+  /** `ml_psi_drift`'s smoothed-PSI tail over the DENSIFIED per-type
+    * grid `(event_type, bin, na, nb)` (all 10 bins present, missing
+    * counts 0): +0.5/+5.0 Laplace smoothing, 10dp terms into an exact
+    * decimal sum. The batch query densifies with a grid join; a live
+    * readout densifies through a per-type map. */
+  def psiReport(dense: DataFrame): DataFrame = {
+    val t = org.apache.spark.sql.expressions.Window.partitionBy(col("event_type"))
+    dense
+      .withColumn("ta", sum(col("na")).over(t))
+      .withColumn("tb", sum(col("nb")).over(t))
+      .withColumn("p", (col("na") + 0.5) / (col("ta") + 5.0))
+      .withColumn("q", (col("nb") + 0.5) / (col("tb") + 5.0))
+      .withColumn("term",
+        round((col("p") - col("q")) * log(col("p") / col("q")), 10)
+          .cast("decimal(20,10)"))
+      .groupBy(col("event_type"), col("ta"), col("tb"))
+      .agg(round(sum(col("term")), 6).cast("double").as("psi"))
+      .select(col("event_type"), col("psi"),
+        col("ta").as("n_ref"), col("tb").as("n_cur"))
+      .orderBy(col("event_type"))
+  }
 
   val oracles: Map[String, String] = Map(
     "ml_brier_decomposition" ->

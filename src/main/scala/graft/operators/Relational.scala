@@ -3056,7 +3056,7 @@ private[operators] object StoreRoots {
   }
 }
 
-private[operators] object DetMean {
+private[graft] object DetMean {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.functions._
   /** 10dp-exact element for the decimal sum. */

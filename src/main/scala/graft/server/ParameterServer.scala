@@ -18,7 +18,9 @@ import graft.nn.Tensors.Tensors
   * Endpoints (parity with `HogwildSparkModel.py:175-244`):
   *  - `GET  /`           → "graft" liveness string (reference: "Lifeomic")
   *  - `GET  /parameters` → current weights, binary codec
-  *  - `POST /update`     → gradient tensors; applies one optimizer step
+  *  - `POST /update`     → gradient tensors; applies one optimizer step,
+  *    or answers 500 (counted as an error) without stepping when the
+  *    tensor count or any shape differs from the weights
   *
   * Modes (`HogwildSparkModel.py:104-143,204`):
   *  - hogwild (acquireLock=false): handler threads mutate the shared
@@ -90,6 +92,14 @@ final class ParameterServer(
           // wire header — see GradientCompression.decodeMaybeSparse)
           val grads = graft.nn.GradientCompression
             .decodeMaybeSparse(ex.getRequestBody.readAllBytes())
+          // reject a mis-shaped payload WHOLE, before any step: the
+          // optimizer walks tensor by tensor, so a short or mis-shaped
+          // set would update a prefix and advance its state, then throw
+          require(grads.length == weights.length &&
+            grads.indices.forall(i => grads(i).rows == weights(i).rows &&
+              grads(i).cols == weights(i).cols),
+            s"gradient shapes ${grads.map(g => s"${g.rows}x${g.cols}").mkString(",")}" +
+              s" do not match the ${weights.length} weight tensors")
           if (acquireLock) {
             lock.lockWrite()
             try optimizer.step(weights, grads) finally lock.unlock()
@@ -166,13 +176,6 @@ object ParamsClient {
   def postSparseGradients(masterUrl: String,
       sparse: graft.nn.GradientCompression.SparseGrad, partitionId: Int): Unit =
     postBytes(masterUrl, graft.nn.GradientCompression.toBytes(sparse), partitionId)
-
-  /** Top-k + int8-quantized push (5 bytes/entry) — compose via
-    * [[graft.nn.GradientCompression.quantizeSparse]], which charges
-    * rounding error back to the same residual. */
-  def postQuantizedGradients(masterUrl: String,
-      q: graft.nn.GradientCompression.QuantizedSparseGrad, partitionId: Int): Unit =
-    postBytes(masterUrl, graft.nn.GradientCompression.toBytesQ8(q), partitionId)
 
   private def postBytes(masterUrl: String, bytes: Array[Byte], partitionId: Int): Unit = {
     try {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
+import graft.operators.{DetMean, EventOps, MlOps}
 
 /** Structured Streaming surface over the `events` table shape.
   *
@@ -11,7 +12,15 @@ import java.sql.Timestamp
   * forward-looking extension: the same event analytics as
   * [[graft.operators.EventOps]], expressed as an unbounded plan. Batch and
   * stream share transform logic so results can be cross-checked (the
-  * batch queries are the oracle for the streaming path).
+  * batch queries are the oracle for the streaming path): the seven live
+  * readouts — Welch, k-anonymity, stratified ATE, SRM, PSI, DiD and
+  * CUPED — call the finishing kernels defined once beside their batch
+  * queries in [[graft.operators.EventOps]] (`welch`, `kAnonCells`/
+  * `kAnonReport`, `srmChi2`, `didCells`, `cupedArms`) and
+  * [[graft.operators.MlOps]] (`ateCells`/`ateReport`, `psiReport`).
+  * Where a kernel needs nothing stream-shaped it is used directly on the
+  * stream; this object keeps only the accumulations that differ from
+  * the batch side.
   *
   * Scale notes: watermark + tumbling window keeps state bounded (one
   * window per (hour, type) in flight); sessionization state is one small
@@ -38,82 +47,13 @@ object EventStream {
     graft.operators.Tables.events(spark, sfDir)
       .write.mode("overwrite").parquet(stagingDir)
 
-  /** Live experiment readout — the `events_ab_welch` one-row Welch
-    * t-test as an unbounded aggregation: arms by user_id % 2, the six
-    * conditional moment sums maintained incrementally in the state
-    * store (complete mode, one global group), the t/df algebra as a
-    * projection over them. After every micro-batch the sink holds
-    * exactly the decision row the batch query computes over the data
-    * seen so far — the dashboard a running experiment watches. Moment
-    * sums are exact decimals (order-independent), so stream == batch
-    * bit-for-bit at any cut, not approximately; the state is six
-    * numbers regardless of corpus size. */
-  /** Live k-anonymity monitor, streaming half — `events_k_anonymity`'s
-    * quasi-identifier group sizes ((event_type, hour, value-bucket) →
-    * count) maintained incrementally as ONE keyed aggregation; state is
-    * bounded by the quasi-identifier DOMAIN (types × 24 hours ×
-    * buckets), not the stream length. The release decision ("does any
-    * cell fall under k?") is [[kAnonReadout]]'s finishing fold over the
-    * live cells — counts are exact integers, so stream == batch
-    * bit-for-bit at any cut. */
-  def kAnonCells(events: DataFrame): DataFrame =
-    events
-      .groupBy(col("event_type"), hour(col("ts")).as("hr"),
-        floor(col("value") / 10.0).as("vbucket"))
-      .agg(count(lit(1)).as("gsize"))
-
-  /** Finishing fold over the live cells — mirrors the batch query's
-    * per-type report expression for expression. */
-  def kAnonReadout(cells: DataFrame): DataFrame =
-    cells.groupBy(col("event_type"))
-      .agg(min(col("gsize")).as("k"),
-        count(lit(1)).as("n_groups"),
-        sum(col("gsize")).as("n_rows"),
-        sum(when(col("gsize") < 5, col("gsize")).otherwise(0L))
-          .as("rows_at_risk"))
-      .withColumn("risk_share",
-        round(col("rows_at_risk").cast("double") / col("n_rows"), 6))
-      .orderBy(col("event_type"))
-
-  /** Live stratified-ATE readout, streaming half — `ml_stratified_ate`
-    * as an unbounded aggregation: per-stratum (event_type) treated/
-    * control moment sums are ONE keyed streaming aggregation with
-    * state bounded by the stratum domain; the share-weighted effect
-    * table is [[ateReadout]]'s finishing fold. Decimal moment sums are
-    * order-independent, so stream == batch bit-for-bit at any cut. */
-  def ateCells(events: DataFrame): DataFrame = {
-    def el10(c: org.apache.spark.sql.Column) =
-      round(c, 10).cast("decimal(28,10)")
-    val t = col("event_id") % 3 === 0
-    events.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(t, 1L)).as("n_treated"),
-        sum(when(t, el10(col("value")))).as("sy1"),
-        sum(when(!t, el10(col("value")))).as("sy0"))
-  }
-
-  /** Finishing fold over the live strata — mirrors the batch query's
-    * share/propensity/effect tail expression for expression (the
-    * corpus total rides a window over the ≤|types|-row cell table, so
-    * no self-join of the memory-sink view is needed). */
-  def ateReadout(cells: DataFrame): DataFrame = {
-    def mean6(sum10: org.apache.spark.sql.Column,
-        n: org.apache.spark.sql.Column) =
-      round(sum10.cast("double") / n, 6)
-    val wAll = org.apache.spark.sql.expressions.Window.partitionBy()
-    cells
-      .withColumn("n_all", sum(col("n")).over(wAll))
-      .withColumn("share", round(col("n").cast("double") / col("n_all"), 6))
-      .withColumn("propensity",
-        round(col("n_treated").cast("double") / col("n"), 6))
-      .withColumn("m_treated", mean6(col("sy1"), col("n_treated")))
-      .withColumn("m_control", mean6(col("sy0"), col("n") - col("n_treated")))
-      .withColumn("effect", round(col("m_treated") - col("m_control"), 6))
-      .select(col("event_type"), col("n"), col("share"), col("propensity"),
-        col("m_treated"), col("m_control"), col("effect"),
-        round(col("share") * col("effect"), 6).as("ate_contrib"))
-      .orderBy(col("event_type"))
-  }
+  /** Live stratified-ATE readout over the [[MlOps.ateCells]] strata
+    * streamed into a sink. The corpus total rides a window over the
+    * ≤|types|-row cell table, so no self-join of the memory-sink view is
+    * needed. */
+  def ateReadout(cells: DataFrame): DataFrame =
+    MlOps.ateReport(cells.withColumn("n_all",
+      sum(col("n")).over(org.apache.spark.sql.expressions.Window.partitionBy())))
 
   /** Live SRM guardrail, streaming half — `events_srm_check` as an
     * unbounded aggregation: per-(type, arm) counts are ONE keyed
@@ -126,19 +66,12 @@ object EventStream {
       (col("user_id") % 2 === 1).as("treated"))
       .agg(count(lit(1)).as("n"))
 
-  /** Finishing fold over the live arm counts — mirrors the batch χ²
-    * tail expression for expression. */
+  /** Folds the live arm counts to `(event_type, n0, n1)` for the
+    * [[EventOps.srmChi2]] tail. */
   def srmReadout(cells: DataFrame): DataFrame =
-    cells.groupBy(col("event_type"))
+    EventOps.srmChi2(cells.groupBy(col("event_type"))
       .agg(sum(when(!col("treated"), col("n")).otherwise(0L)).as("n0"),
-        sum(when(col("treated"), col("n")).otherwise(0L)).as("n1"))
-      .withColumn("e", (col("n0") + col("n1")).cast("double") / 2)
-      .withColumn("chi2", round(
-        (col("n0") - col("e")) * (col("n0") - col("e")) / col("e") +
-          (col("n1") - col("e")) * (col("n1") - col("e")) / col("e"), 6))
-      .select(col("event_type"), col("n0"), col("n1"), col("chi2"),
-        (col("chi2") > 3.841459).as("srm_flag"))
-      .orderBy(col("event_type"))
+        sum(when(col("treated"), col("n")).otherwise(0L)).as("n1")))
 
   /** Live drift monitor, streaming half — `ml_psi_drift`'s population
     * stability index as an unbounded aggregation. The per-(type, bin)
@@ -157,74 +90,26 @@ object EventStream {
         sum(when(unix_micros(col("ts")) >= cutUs, 1L).otherwise(0L))
         .as("nb"))
 
-  /** Finishing fold over the live cells — mirrors the batch query's
-    * smoothed-PSI tail (grid-densified bins, +0.5/+5.0 smoothing, 10dp
-    * terms into an exact decimal sum) expression for expression. */
-  def psiReadout(cells: DataFrame): DataFrame = {
+  /** Densifies the live cells to all 10 bins per type for the
+    * [[MlOps.psiReport]] tail. */
+  def psiReadout(cells: DataFrame): DataFrame =
     // densify the 10 fixed bins WITHOUT a self-join (the live cells
     // arrive as a memory-sink view, and grid-from-cells ⋈ cells trips
     // self-join attribute resolution): fold each type's sparse bins
     // into a map, explode the static 0..9 grid, look bins up in the map
-    val t = org.apache.spark.sql.expressions.Window.partitionBy(col("event_type"))
-    cells.groupBy(col("event_type"))
+    MlOps.psiReport(cells.groupBy(col("event_type"))
       .agg(map_from_arrays(collect_list(col("bin")),
         collect_list(struct(col("na"), col("nb")))).as("m"))
       .select(col("event_type"),
         explode(sequence(lit(0L), lit(9L))).as("bin"), col("m"))
       .select(col("event_type"), col("bin"),
         coalesce(col("m")(col("bin")).getField("na"), lit(0L)).as("na"),
-        coalesce(col("m")(col("bin")).getField("nb"), lit(0L)).as("nb"))
-      .withColumn("ta", sum(col("na")).over(t))
-      .withColumn("tb", sum(col("nb")).over(t))
-      .withColumn("p", (col("na") + 0.5) / (col("ta") + 5.0))
-      .withColumn("q", (col("nb") + 0.5) / (col("tb") + 5.0))
-      .withColumn("term",
-        round((col("p") - col("q")) * log(col("p") / col("q")), 10)
-          .cast("decimal(20,10)"))
-      .groupBy(col("event_type"), col("ta"), col("tb"))
-      .agg(round(sum(col("term")), 6).cast("double").as("psi"))
-      .select(col("event_type"), col("psi"),
-        col("ta").as("n_ref"), col("tb").as("n_cur"))
-      .orderBy(col("event_type"))
-  }
-
-  /** Live difference-in-differences readout — `events_diff_in_diff` as
-    * an unbounded aggregation. DiD is fully LINEAR in the event stream
-    * (four conditional cell means over arm × pre/post), so unlike CUPED
-    * no per-user state is needed: eight exact-decimal moment sums in
-    * one global group, the DiD estimate as a projection — constant
-    * state at any stream length. The exposure cut is a parameter (known
-    * a priori in a live experiment; the batch twin derives the same
-    * value from the data span). Decimal sums are order-independent, so
-    * stream == batch bit-for-bit at any cut. */
-  def didReadout(events: DataFrame, cutUs: Long): DataFrame = {
-    def el10(c: org.apache.spark.sql.Column) =
-      round(c, 10).cast("decimal(28,10)")
-    def mean6(sum10: org.apache.spark.sql.Column,
-        n: org.apache.spark.sql.Column) =
-      round(sum10.cast("double") / n, 6)
-    val post = unix_micros(col("ts")) >= cutUs
-    val treated = col("user_id") % 2 === 1
-    def cellMean(c: org.apache.spark.sql.Column) =
-      mean6(sum(when(c, el10(col("value")))), sum(when(c, 1L)))
-    events
-      .agg(
-        sum(when(!treated && !post, 1L)).as("n_c_pre"),
-        sum(when(!treated && post, 1L)).as("n_c_post"),
-        sum(when(treated && !post, 1L)).as("n_t_pre"),
-        sum(when(treated && post, 1L)).as("n_t_post"),
-        cellMean(!treated && !post).as("m_c_pre"),
-        cellMean(!treated && post).as("m_c_post"),
-        cellMean(treated && !post).as("m_t_pre"),
-        cellMean(treated && post).as("m_t_post"))
-      .withColumn("did", round((col("m_t_post") - col("m_t_pre")) -
-        (col("m_c_post") - col("m_c_pre")), 6))
-  }
+        coalesce(col("m")(col("bin")).getField("nb"), lit(0L)).as("nb")))
 
   /** Live CUPED readout, streaming half — the variance-reduced twin of
-    * [[abReadout]] (`events_cuped`'s unbounded form). CUPED needs
-    * per-user pre/post covariate MEANS (a ratio per user), so the
-    * incremental state is the per-user moment 4-tuple (Σpre, n_pre,
+    * the [[EventOps.welch]] readout (`events_cuped`'s unbounded form).
+    * CUPED needs per-user pre/post covariate MEANS (a ratio per user), so
+    * the incremental state is the per-user moment 4-tuple (Σpre, n_pre,
     * Σpost, n_post), maintained as ONE keyed streaming aggregation —
     * the only stateful operator, which is what Structured Streaming's
     * single-stateful-op rule requires. The pre/post boundary is a
@@ -234,105 +119,28 @@ object EventStream {
     * numbers per user), exactly the footprint of the batch side's
     * per-user table. Sums are exact decimals → order-independent →
     * stream == batch bit-for-bit at any cut. */
-  def cupedUserState(events: DataFrame, cutUs: Long): DataFrame = {
-    def el10(c: org.apache.spark.sql.Column) =
-      round(c, 10).cast("decimal(28,10)")
+  def cupedUserState(events: DataFrame, cutUs: Long): DataFrame =
     events
       .select(col("user_id"), unix_micros(col("ts")).as("us"), col("value"))
       .groupBy(col("user_id"))
-      .agg(sum(when(col("us") < cutUs, el10(col("value")))).as("spre"),
+      .agg(sum(when(col("us") < cutUs, DetMean.el10(col("value")))).as("spre"),
         sum(when(col("us") < cutUs, 1L)).as("npre"),
-        sum(when(col("us") >= cutUs, el10(col("value")))).as("spost"),
+        sum(when(col("us") >= cutUs, DetMean.el10(col("value")))).as("spost"),
         sum(when(col("us") >= cutUs, 1L)).as("npost"))
-  }
 
-  /** CUPED finishing algebra over the live per-user state — the
-    * dashboard view a running experiment queries after each
-    * micro-batch: θ from five K-bounded moment sums, per-user
-    * adjustment, two arm rows. Mirrors `events_cuped`'s rounding
-    * lattice EXPRESSION FOR EXPRESSION (x/y at 6dp, θ path at 10dp,
-    * outputs at 6dp) so the parity spec can require bit equality, not
-    * approximation. Runs as a batch query over the sink's current
+  /** CUPED dashboard view over the live per-user state, queried after
+    * each micro-batch: users seen on both sides of the cut become the
+    * materialized `(user_id, x, y)` table the [[EventOps.cupedArms]]
+    * kernel finishes. Runs as a batch query over the sink's current
     * content — the split a real deployment uses: unbounded state in the
     * stream, constant-size readout on demand. */
-  def cupedReadout(userState: DataFrame): DataFrame = {
-    def el10(c: org.apache.spark.sql.Column) =
-      round(c, 10).cast("decimal(28,10)")
-    // exact 6dp×6dp decimal product — mirrors DetMean.prod12 (the
-    // el10(x*x) 12-digit-product round was the r12 cross-engine tie
-    // class; the batch twin switched with it, keeping bit parity)
-    def prod12(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      round(a, 6).cast("decimal(18,6)") * round(b, 6).cast("decimal(18,6)")
-    val ux = userState
+  def cupedReadout(userState: DataFrame): DataFrame =
+    EventOps.cupedArms(userState
       .filter(col("npre") > 0 && col("npost") > 0)
       .select(col("user_id"),
-        round(col("spre").cast("double") / col("npre"), 6).as("x"),
-        round(col("spost").cast("double") / col("npost"), 6).as("y"))
-      .localCheckpoint() // two consumers: θ moments + per-user adjust
-    val mom = ux.agg(count(lit(1)).as("n"),
-      sum(el10(col("x"))).as("sx"),
-      sum(el10(col("y"))).as("sy"),
-      sum(prod12(col("x"), col("x"))).as("sxx"),
-      sum(prod12(col("x"), col("y"))).as("sxy"))
-    val theta = mom
-      .withColumn("mx", round(col("sx").cast("double") / col("n"), 10))
-      .withColumn("my", round(col("sy").cast("double") / col("n"), 10))
-      .withColumn("cov", round(col("sxy").cast("double") / col("n") -
-        col("mx") * col("my"), 10))
-      .withColumn("varx", round(col("sxx").cast("double") / col("n") -
-        col("mx") * col("mx"), 10))
-      .withColumn("theta", round(col("cov") / col("varx"), 10))
-      .select(col("mx"), col("theta"))
-    ux.crossJoin(broadcast(theta))
-      .withColumn("yadj",
-        round(col("y") - col("theta") * (col("x") - col("mx")), 6))
-      .withColumn("arm", col("user_id") % 2)
-      .groupBy(col("arm"))
-      .agg(count(lit(1)).as("n_users"),
-        sum(el10(col("y"))).as("sy"),
-        sum(prod12(col("y"), col("y"))).as("syy"),
-        sum(el10(col("yadj"))).as("sa"),
-        sum(prod12(col("yadj"), col("yadj"))).as("saa"))
-      .withColumn("mean_y",
-        round(col("sy").cast("double") / col("n_users"), 6))
-      .withColumn("mean_y_adj",
-        round(col("sa").cast("double") / col("n_users"), 6))
-      .select(col("arm"), col("n_users"), col("mean_y"), col("mean_y_adj"),
-        round(col("syy").cast("double") / col("n_users") -
-          col("mean_y") * col("mean_y"), 6).as("var_y"),
-        round(col("saa").cast("double") / col("n_users") -
-          col("mean_y_adj") * col("mean_y_adj"), 6).as("var_y_adj"))
-      .orderBy(col("arm"))
-  }
-
-  def abReadout(events: DataFrame): DataFrame = {
-    val treated = col("user_id") % 2 === 1
-    def el10(c: org.apache.spark.sql.Column) =
-      round(c, 10).cast("decimal(28,10)")
-    def cnt(c: org.apache.spark.sql.Column) = sum(when(c, 1L))
-    events
-      .agg(cnt(!treated).as("n0"), cnt(treated).as("n1"),
-        sum(when(!treated, el10(col("value")))).as("sy0"),
-        sum(when(treated, el10(col("value")))).as("sy1"),
-        sum(when(!treated, el10(col("value") * col("value")))).as("syy0"),
-        sum(when(treated, el10(col("value") * col("value")))).as("syy1"))
-      .withColumn("m0", round(col("sy0").cast("double") / col("n0"), 6))
-      .withColumn("m1", round(col("sy1").cast("double") / col("n1"), 6))
-      .withColumn("v0", round((col("syy0").cast("double") -
-        col("n0") * col("m0") * col("m0")) / (col("n0") - 1), 6))
-      .withColumn("v1", round((col("syy1").cast("double") -
-        col("n1") * col("m1") * col("m1")) / (col("n1") - 1), 6))
-      .withColumn("se0", col("v0") / col("n0"))
-      .withColumn("se1", col("v1") / col("n1"))
-      .withColumn("t", round((col("m1") - col("m0")) /
-        sqrt(col("se1") + col("se0")), 6))
-      .withColumn("df", round(
-        (col("se1") + col("se0")) * (col("se1") + col("se0")) /
-          (col("se1") * col("se1") / (col("n1") - 1) +
-           col("se0") * col("se0") / (col("n0") - 1)), 2))
-      .select(col("n0"), col("n1"), col("m0"), col("m1"),
-        col("v0"), col("v1"), col("t"), col("df"))
-  }
+        DetMean.mean6(col("spre"), col("npre")).as("x"),
+        DetMean.mean6(col("spost"), col("npost")).as("y"))
+      .localCheckpoint()) // two consumers: θ moments + per-user adjust
 
   /** Tumbling 1-hour windowed counts/sums per event type, 2-hour watermark
     * for late data. Streaming twin of the `events_hourly` batch query —

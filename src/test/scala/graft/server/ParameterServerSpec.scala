@@ -66,6 +66,26 @@ class ParameterServerSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("mis-shaped gradient sets are rejected whole, before any step") {
+    val w: Tensors = Array(DenseMatrix((1.0, 1.0)), DenseMatrix((2.0, 2.0, 2.0)))
+    val srv = new ParameterServer(w, Optimizer.build("sgd", 0.5),
+      port = 0, acquireLock = false)
+    srv.start()
+    try {
+      srv.awaitReady()
+      val url = s"127.0.0.1:${srv.boundPort}"
+      // too few tensors: tensor 0 alone would have stepped, then thrown
+      ParamsClient.postGradients(url, Array(DenseMatrix((1.0, 1.0))), 0)
+      // right count, second tensor 1x2 instead of 1x3
+      ParamsClient.postGradients(url,
+        Array(DenseMatrix((1.0, 1.0)), DenseMatrix((1.0, 1.0))), 0)
+      val after = srv.currentWeights
+      assert(after(0) == DenseMatrix((1.0, 1.0)))
+      assert(after(1) == DenseMatrix((2.0, 2.0, 2.0)))
+      assert(srv.errorCount == 2)
+    } finally srv.stop()
+  }
+
   test("client POST failure is swallowed (reference worker policy)") {
     // no server on this port — must not throw
     ParamsClient.postGradients("127.0.0.1:5999", Array(DenseMatrix((1.0, 1.0))), 7)

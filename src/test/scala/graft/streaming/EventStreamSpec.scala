@@ -128,7 +128,7 @@ class EventStreamSpec extends AnyFunSuite {
   test("abReadout equals the batch Welch t-test row on the real events table") {
     val staging = Files.createTempDirectory("evt_ab").toString
     EventStream.stageEvents(spark, "/root/testdata/sf0.001", staging)
-    val q = EventStream.abReadout(EventStream.readEvents(spark, staging))
+    val q = graft.operators.EventOps.welch(EventStream.readEvents(spark, staging))
       .writeStream.format("memory").queryName("ab_readout")
       .outputMode("complete").start()
     try {
@@ -148,12 +148,12 @@ class EventStreamSpec extends AnyFunSuite {
   test("kAnonCells + readout equals the batch k-anonymity report bit-for-bit") {
     val staging = Files.createTempDirectory("evt_kanon").toString
     EventStream.stageEvents(spark, "/root/testdata/sf0.001", staging)
-    val q = EventStream.kAnonCells(EventStream.readEvents(spark, staging))
+    val q = graft.operators.EventOps.kAnonCells(EventStream.readEvents(spark, staging))
       .writeStream.format("memory").queryName("kanon_cells")
       .outputMode("complete").start()
     try {
       q.processAllAvailable()
-      val streamed = EventStream.kAnonReadout(spark.table("kanon_cells"))
+      val streamed = graft.operators.EventOps.kAnonReport(spark.table("kanon_cells"))
         .collect().map(_.toSeq)
       val batch = graft.operators.EventOps.queries("events_k_anonymity")(
         spark, "/root/testdata/sf0.001").collect().map(_.toSeq)
@@ -165,7 +165,7 @@ class EventStreamSpec extends AnyFunSuite {
   test("ateCells + readout equals the batch stratified ATE bit-for-bit") {
     val staging = Files.createTempDirectory("evt_ate").toString
     EventStream.stageEvents(spark, "/root/testdata/sf0.001", staging)
-    val q = EventStream.ateCells(EventStream.readEvents(spark, staging))
+    val q = graft.operators.MlOps.ateCells(EventStream.readEvents(spark, staging))
       .writeStream.format("memory").queryName("ate_cells")
       .outputMode("complete").start()
     try {
@@ -224,7 +224,8 @@ class EventStreamSpec extends AnyFunSuite {
       .selectExpr("min(unix_micros(ts)) AS lo", "max(unix_micros(ts)) AS hi")
       .head
     val cutUs = span.getLong(0) + (span.getLong(1) - span.getLong(0)) / 2
-    val q = EventStream.didReadout(EventStream.readEvents(spark, staging), cutUs)
+    val q = graft.operators.EventOps.didCells(
+      EventStream.readEvents(spark, staging), unix_micros(col("ts")) >= cutUs)
       .writeStream.format("memory").queryName("did_readout")
       .outputMode("complete").start()
     try {
@@ -259,7 +260,7 @@ class EventStreamSpec extends AnyFunSuite {
       assert(streamed.length == 2 && batch.length == 2)
       // bit-for-bit: the per-user moment sums are exact decimals, so
       // the state-store accumulation path changes nothing; the readout
-      // replays the batch rounding lattice expression for expression
+      // runs the batch query's own EventOps.cupedArms kernel
       assert(streamed.toSeq == batch.toSeq,
         s"streamed=${streamed.toSeq} batch=${batch.toSeq}")
     } finally q.stop()
