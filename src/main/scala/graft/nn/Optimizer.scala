@@ -62,19 +62,43 @@ object Optimizer {
       extends Optimizer {
     private var m: Tensors = _
     private var v: Tensors = _
-    private var t = 0L
+    private val t = new java.util.concurrent.atomic.AtomicLong()
+
+    /** One fused pass per element: its new m and v come from this step's
+      * gradient into locals, and the weight update reads those locals,
+      * never the shared moment tensors, so under hogwild a concurrent
+      * step cannot pair another worker's m with a v that lacks it. Each
+      * operation and its order match the tensor form
+      * (`m*β1 + g*(1-β1)`, `v*β2 + (g*g)*(1-β2)`, `/b1c`, `/b2c`,
+      * `sqrt + eps`, `/`, `*lr`), so single-writer results are
+      * bit-identical to it. */
     def step(w: Tensors, g: Tensors): Unit = {
       ensureInit { m = zeros(w); v = zeros(w) }
-      t += 1
-      val b1c = 1.0 - math.pow(beta1, t.toDouble)
-      val b2c = 1.0 - math.pow(beta2, t.toDouble)
+      val n = t.incrementAndGet().toDouble
+      val b1c = 1.0 - math.pow(beta1, n)
+      val b2c = 1.0 - math.pow(beta2, n)
+      val c1 = 1.0 - beta1
+      val c2 = 1.0 - beta2
       var i = 0
       while (i < w.length) {
-        m(i) := m(i) * beta1 + g(i) * (1.0 - beta1)
-        v(i) := v(i) * beta2 + (g(i) *:* g(i)) * (1.0 - beta2)
-        val mHat = m(i) / b1c
-        val vHat = v(i) / b2c
-        w(i) :-= (mHat /:/ (bsqrt(vHat) + eps)) * lr
+        val wi = w(i); val gi = g(i)
+        val md = m(i).data; val vd = v(i).data
+        var k = 0
+        var c = 0
+        while (c < wi.cols) {
+          var r = 0
+          while (r < wi.rows) {
+            val gk = gi(r, c)
+            val mk = md(k) * beta1 + gk * c1
+            val vk = vd(k) * beta2 + (gk * gk) * c2
+            md(k) = mk
+            vd(k) = vk
+            wi(r, c) -= (mk / b1c) / (math.sqrt(vk / b2c) + eps) * lr
+            k += 1
+            r += 1
+          }
+          c += 1
+        }
         i += 1
       }
     }

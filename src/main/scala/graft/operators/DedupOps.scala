@@ -449,10 +449,7 @@ object DedupOps {
     "dedup_minhash_tombstone_stored" -> { (s, dir) =>
       val baseRoot = StoreRoots.tmpRoot("doctombbase", dir)
       val idxRoot = StoreRoots.tmpRoot("mhtombidx", dir)
-      Seq(baseRoot, idxRoot).foreach { r =>
-        val p = new org.apache.hadoop.fs.Path(r)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
+      Seq(baseRoot, idxRoot).foreach(StoreRoots.reset(s, _))
       val docs0 = documents(s, dir).select(col("doc_id"), col("text"))
       graft.sources.GraftStore.write(docs0.repartition(4), baseRoot,
         overwrite = true)
@@ -812,8 +809,7 @@ object DedupOps {
     // embedding table are the cheap side of the DAG; the vectors never
     // join each other, only the pair list.
     "dedup_crosscheck" -> { (s, dir) =>
-      val e = embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = vectors(s, dir)
       queries("dedup_minhash_lsh")(s, dir)
         .join(e.select(col("vec_id").as("doc_a"), col("v").as("va")),
           Seq("doc_a"), "left")
@@ -852,8 +848,7 @@ object DedupOps {
     // pair join is keyed on cell, so pair generation is O(sum cell²),
     // never global O(n²); K grows with the corpus to bound cell size.
     "dedup_semantic" -> { (s, dir) =>
-      val e = embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = vectors(s, dir)
       // The SemK centroid rows are collected to the driver — bounded by
       // construction, the same bounded-collect contract as SimilarityLib
       // codebook training — and re-enter the plan as literals inside

@@ -3054,6 +3054,14 @@ private[operators] object StoreRoots {
     }
     root
   }
+
+  /** Deletes the store at `root`, so the caller's writes start from an
+    * empty store and its version numbers (1, 2, ...) stay deterministic
+    * however often the query runs. */
+  def reset(s: SparkSession, root: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(root)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+  }
 }
 
 private[graft] object DetMean {
@@ -3122,6 +3130,13 @@ object Tables {
   }
   def documents(s: SparkSession, dir: String) = table(s, dir, "documents")
   def embeddings(s: SparkSession, dir: String) = table(s, dir, "embeddings")
+  /** The embedding corpus as (vec_id, v: array<double>). Each call builds
+    * its own scan, so two reads in one query carry fresh expression ids
+    * (a self-join of one scan can lose attribute references nested in a
+    * lambda; see ann_ivf_probe). */
+  private[operators] def vectors(s: SparkSession, dir: String): DataFrame =
+    embeddings(s, dir)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
 
   /** Memoized corpus row count for the corpus-ADAPTIVE operators
     * (dedup_embedding_cos bit width, emb_outlier_knn cell count): those

@@ -240,7 +240,7 @@ object SimilarityOps {
     "ann_mmr_rerank" -> { (s, dir) => mmrGreedy(mmrShortlist(s, dir)) },
     // The 100 TB twin: identical greedy selection, but the shortlist is
     // IVF-routed — the probe searches only its IvfNProbe nearest
-    // literal-codebook cells (the ann_ivf_probe geometry), so shortlist
+    // literal-codebook cells (the IvfCodebook geometry), so shortlist
     // cost is ∝ nprobe/K of the corpus instead of a full cosine scan.
     // The brute-force form above stays as the ground-truth twin (recall
     // of the routed shortlist vs. exact is the ann_ivf_recall method).
@@ -341,37 +341,19 @@ object SimilarityOps {
     // the scan. Deterministic seed cells (vec_id < IvfCells) make it
     // oracle-exact, unlike the sampled-KMeans SimilarityLib twin.
     "ann_ivf_probe" -> { (s, dir) =>
-      val cos = graft.functions.VectorFunctions.cosine_sim _
-      val e = embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val cellSims = ivfCellSims(e)
+      val e = vectors(s, dir)
+      val codebook = ivfCellSims(e)
       // Barriers.opaque: a lambda-derived join key must not generate an
       // alias-equality constraint (see OpaqueIdentity's scaladoc — the
       // inferred filter lands on the probes side referencing this scan)
       val assigned = e.withColumn("cell",
-        graft.functions.Barriers.opaque(
-          array_max(cellSims(col("v"))).getField("cell")))
-      // probes get their OWN scan (fresh expression ids): the join below
-      // is otherwise a self-join whose relation dedup can miss attribute
-      // references nested inside the explode(transform(...)) lambda
-      // (observed: runtime ATTRIBUTE_NOT_FOUND) — and a separate scan
-      // also pushes the probe-id filter down to its own parquet read
-      val eProbes = embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val probes = eProbes.filter(col("vec_id").isin(IvfProbeIds.map(_.toLong): _*))
-        .select(col("vec_id").as("probe_id"), col("v").as("p"),
-          explode(transform(
-            slice(reverse(array_sort(cellSims(col("v")))), 1, IvfNProbe),
-            c => c.getField("cell"))).as("pcell"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-      assigned.join(broadcast(probes), col("cell") === col("pcell") &&
-          col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id"),
-          round(cos(col("v"), col("p")), 6).as("cos_sim"))
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= IvfTopK)
-        .orderBy(col("probe_id"), col("rk"))
+        graft.functions.Barriers.opaque(codebook.cell(col("v"))))
+      // probes get their OWN scan (fresh expression ids): the join in
+      // ivfTopK is otherwise a self-join whose relation dedup can miss
+      // attribute references nested inside the explode(transform(...))
+      // lambda (observed: runtime ATTRIBUTE_NOT_FOUND) — and a separate
+      // scan also pushes the probe-id filter down to its own parquet read
+      ivfTopK(assigned, vectors(s, dir), codebook)
     },
     // Index-at-ingest, step 1: TRAIN the IVF index once — assign every
     // corpus vector to its nearest literal-codebook cell — and persist
@@ -409,20 +391,17 @@ object SimilarityOps {
     // side. Oracle replays both slices' assignments from raw parquet.
     "ann_ivf_delta_stored" -> { (s, dir) =>
       val root = StoreRoots.tmpRoot("ivfdeltaidx", dir)
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val e = embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      StoreRoots.reset(s, root)
+      val e = vectors(s, dir)
       // codebook FROZEN from the full id domain (seeds are vec_id <
       // IvfCells literals) — base and batch must share it, or the index
       // would mix geometries
-      val cellSims = ivfCellSims(e)
-      def assign(df: DataFrame) = df.select(col("vec_id"),
-        array_max(cellSims(col("v"))).getField("cell").as("cell"))
-      graft.sources.GraftStore.write(
-        assign(e.filter(col("vec_id") % 5 =!= 0)), root, overwrite = true)
-      graft.sources.GraftStore.write(
-        assign(e.filter(col("vec_id") % 5 === 0)), root)
+      val codebook = ivfCellSims(e)
+      graft.sources.GraftStore.write(e.filter(col("vec_id") % 5 =!= 0)
+        .select(col("vec_id"), codebook.cell(col("v")).as("cell")),
+        root, overwrite = true)
+      graft.sources.GraftStore.write(e.filter(col("vec_id") % 5 === 0)
+        .select(col("vec_id"), codebook.cell(col("v")).as("cell")), root)
       val base = s.read.format("graft-store").option("version", 1L).load(root)
         .groupBy(col("cell")).agg(count(lit(1)).as("n_base"))
       val delta = graft.sources.GraftStore.readChanges(s, root, sinceVersion = 1L)
@@ -460,30 +439,18 @@ object SimilarityOps {
     "ann_ivf_tombstone_stored" -> { (s, dir) =>
       val baseRoot = StoreRoots.tmpRoot("ivftombbase", dir)
       val idxRoot = StoreRoots.tmpRoot("ivftombidx", dir)
-      Seq(baseRoot, idxRoot).foreach { r =>
-        val p = new org.apache.hadoop.fs.Path(r)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
-      val e = embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val cellSims = ivfCellSims(e)
+      Seq(baseRoot, idxRoot).foreach(StoreRoots.reset(s, _))
+      val e = vectors(s, dir)
+      val codebook = ivfCellSims(e)
       // v1 of both stores; the base repartitions so the copy-on-write
       // rewrite has survivors in every touched file (the CDC except
       // actually filters, instead of removed == dead trivially)
       graft.sources.GraftStore.write(e.repartition(4), baseRoot,
         overwrite = true)
       graft.sources.GraftStore.write(
-        e.select(col("vec_id"),
-          array_max(cellSims(col("v"))).getField("cell").as("cell")),
+        e.select(col("vec_id"), codebook.cell(col("v")).as("cell")),
         idxRoot, overwrite = true)
-      // the takedown batch: vec_ids [100, 220) leave the corpus
-      graft.sources.GraftStore.delete(baseRoot, Array(
-        org.apache.spark.sql.sources.And(
-          org.apache.spark.sql.sources.GreaterThanOrEqual("vec_id", 100L),
-          org.apache.spark.sql.sources.LessThan("vec_id", 220L))))
-      val dead = graft.sources.GraftStore.netDeletedKeys(
-        s, baseRoot, sinceVersion = 1L, Seq("vec_id"))
-      graft.sources.StoredIndex.appendTombstones(s, idxRoot, dead)
+      val dead = takeDown(s, baseRoot, idxRoot)
       val idxV1 = s.read.format("graft-store").option("version", 1L)
         .load(idxRoot)
       // eager pins: compaction below OVERWRITES the index store and
@@ -540,21 +507,18 @@ object SimilarityOps {
       s.sql("CREATE NAMESPACE IF NOT EXISTS graftups.gold")
       s.sql("DROP TABLE IF EXISTS graftups.gold.ivf_ups")
       val idxRoot = StoreRoots.tmpRoot("ivfupsidx", dir)
-      val ip = new org.apache.hadoop.fs.Path(idxRoot)
-      ip.getFileSystem(s.sparkContext.hadoopConfiguration).delete(ip, true)
-      val e = embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val cellSims = ivfCellSims(e) // codebook FROZEN pre-merge
-      def assign(df: DataFrame) = df.select(col("vec_id"),
-        array_max(cellSims(col("v"))).getField("cell").as("cell"))
+      StoreRoots.reset(s, idxRoot)
+      val e = vectors(s, dir)
+      val codebook = ivfCellSims(e) // FROZEN pre-merge
       e.createOrReplaceTempView("emb_ups_src")
       s.sql("""CREATE TABLE graftups.gold.ivf_ups AS
               |SELECT vec_id, v FROM emb_ups_src""".stripMargin)
       val baseRoot = s"$wh/gold/ivf_ups"
       val v1 = graft.sources.GraftStore.currentVersion(baseRoot).get
-      graft.sources.GraftStore.write(assign(
-        s.read.format("graft-store").load(baseRoot)), idxRoot,
-        overwrite = true)
+      graft.sources.GraftStore.write(
+        s.read.format("graft-store").load(baseRoot)
+          .select(col("vec_id"), codebook.cell(col("v")).as("cell")),
+        idxRoot, overwrite = true)
       // ONE MERGE: corrected embeddings (negated — cells flip), a
       // revocation range, and late arrivals keyed past the domain
       s.sql("""MERGE INTO graftups.gold.ivf_ups t USING (
@@ -578,7 +542,8 @@ object SimilarityOps {
       val changed = graft.sources.GraftStore.readChanges(s, baseRoot, v1)
       graft.sources.StoredIndex.appendTombstones(s, idxRoot,
         changed.select(col("vec_id")).union(dead).distinct())
-      graft.sources.StoredIndex.appendRows(s, idxRoot, assign(changed))
+      graft.sources.StoredIndex.appendRows(s, idxRoot,
+        changed.select(col("vec_id"), codebook.cell(col("v")).as("cell")))
       graft.sources.StoredIndex.readLive(s, idxRoot, Seq("vec_id"))
         .groupBy(col("cell"))
         .agg(count(lit(1)).as("n_live"),
@@ -601,49 +566,23 @@ object SimilarityOps {
     // mask reaches the ranking (deleted candidates vanish AND survivors'
     // ranks close up), not merely the census counts of step 4.
     "ann_ivf_probe_live" -> { (s, dir) =>
-      val cos = graft.functions.VectorFunctions.cosine_sim _
       val baseRoot = StoreRoots.tmpRoot("ivflivebase", dir)
       val idxRoot = StoreRoots.tmpRoot("ivfliveidx", dir)
-      Seq(baseRoot, idxRoot).foreach { r =>
-        val p = new org.apache.hadoop.fs.Path(r)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
-      val e = embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val cellSims0 = ivfCellSims(e)
+      Seq(baseRoot, idxRoot).foreach(StoreRoots.reset(s, _))
+      val e = vectors(s, dir)
+      val codebook0 = ivfCellSims(e)
       graft.sources.GraftStore.write(e.repartition(4), baseRoot,
         overwrite = true)
       graft.sources.GraftStore.write(
-        e.select(col("vec_id"),
-          array_max(cellSims0(col("v"))).getField("cell").as("cell"),
-          col("v")),
+        e.select(col("vec_id"), codebook0.cell(col("v")).as("cell"), col("v")),
         idxRoot, overwrite = true)
-      graft.sources.GraftStore.delete(baseRoot, Array(
-        org.apache.spark.sql.sources.And(
-          org.apache.spark.sql.sources.GreaterThanOrEqual("vec_id", 100L),
-          org.apache.spark.sql.sources.LessThan("vec_id", 220L))))
-      graft.sources.StoredIndex.appendTombstones(s, idxRoot,
-        graft.sources.GraftStore.netDeletedKeys(s, baseRoot, 1L, Seq("vec_id")))
+      takeDown(s, baseRoot, idxRoot)
       // each side reads the live view independently (fresh expression
       // ids — the ann_ivf_probe self-join-dedup hazard)
       val idx = graft.sources.StoredIndex.readLive(s, idxRoot, Seq("vec_id"))
       val idxProbes = graft.sources.StoredIndex.readLive(s, idxRoot, Seq("vec_id"))
-      val cellSims = ivfCellSims(idxProbes.select(col("vec_id"), col("v")))
-      val probes = idxProbes
-        .filter(col("vec_id").isin(IvfProbeIds.map(_.toLong): _*))
-        .select(col("vec_id").as("probe_id"), col("v").as("p"),
-          explode(transform(
-            slice(reverse(array_sort(cellSims(col("v")))), 1, IvfNProbe),
-            c => c.getField("cell"))).as("pcell"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-      idx.join(broadcast(probes), col("cell") === col("pcell") &&
-          col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id"),
-          round(cos(col("v"), col("p")), 6).as("cos_sim"))
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= IvfTopK)
-        .orderBy(col("probe_id"), col("rk"))
+      ivfTopK(idx, idxProbes,
+        ivfCellSims(idxProbes.select(col("vec_id"), col("v"))))
     },
     // Index-at-ingest, step 2: PROBE the stored IVF index. Everything —
     // centroids (the K index rows with vec_id < IvfCells), probe
@@ -654,29 +593,14 @@ object SimilarityOps {
     // Hash-gated against the same oracle as ann_ivf_probe: the stored
     // index must reproduce the exact candidate rule.
     "ann_ivf_probe_stored" -> { (s, dir) =>
-      val cos = graft.functions.VectorFunctions.cosine_sim _
-      val idx = storedIvfIndex(s, dir)
       // probe side gets its OWN snapshot read (fresh expression ids —
       // the ann_ivf_probe self-join-dedup hazard applies to DSv2 scans
       // too), and the centroid collect pulls K rows from the INDEX, not
       // from a training pass
+      val idx = storedIvfIndex(s, dir)
       val idxProbes = storedIvfIndex(s, dir)
-      val cellSims = ivfCellSims(idxProbes.select(col("vec_id"), col("v")))
-      val probes = idxProbes
-        .filter(col("vec_id").isin(IvfProbeIds.map(_.toLong): _*))
-        .select(col("vec_id").as("probe_id"), col("v").as("p"),
-          explode(transform(
-            slice(reverse(array_sort(cellSims(col("v")))), 1, IvfNProbe),
-            c => c.getField("cell"))).as("pcell"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id")).orderBy(col("cos_sim").desc, col("vec_id"))
-      idx.join(broadcast(probes), col("cell") === col("pcell") &&
-          col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id"),
-          round(cos(col("v"), col("p")), 6).as("cos_sim"))
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= IvfTopK)
-        .orderBy(col("probe_id"), col("rk"))
+      ivfTopK(idx, idxProbes,
+        ivfCellSims(idxProbes.select(col("vec_id"), col("v"))))
     },
     // Hard-negative mining — the contrastive-training data op that
     // closes the retrieval loop: for each sampled labeled anchor, the
@@ -696,10 +620,9 @@ object SimilarityOps {
       val e = embeddings(s, dir)
         .select(col("vec_id"), col("label"),
           col("embedding").cast("array<double>").as("v"))
-      val cellSims = ivfCellSims(e.select(col("vec_id"), col("v")))
+      val codebook = ivfCellSims(e.select(col("vec_id"), col("v")))
       val assigned = e.withColumn("cell",
-        graft.functions.Barriers.opaque(
-          array_max(cellSims(col("v"))).getField("cell")))
+        graft.functions.Barriers.opaque(codebook.cell(col("v"))))
       // fresh scan for anchors (expression-id hygiene; pushes the
       // anchor-sample filter to its own parquet read — see ann_ivf_probe)
       val eA = embeddings(s, dir)
@@ -708,9 +631,7 @@ object SimilarityOps {
       val anchors = eA.filter(col("vec_id") % 97 === 0)
         .select(col("vec_id").as("anchor_id"),
           col("label").as("anchor_label"), col("v").as("p"),
-          explode(transform(
-            slice(reverse(array_sort(cellSims(col("v")))), 1, IvfNProbe),
-            c => c.getField("cell"))).as("pcell"))
+          codebook.probeCells(col("v")).as("pcell"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("anchor_id")).orderBy(col("cos_sim").desc, col("vec_id"))
       assigned.join(broadcast(anchors), col("cell") === col("pcell") &&
@@ -735,8 +656,7 @@ object SimilarityOps {
     // canonical k-means-on-Spark discipline: per-row argmin against a
     // broadcast codebook + map-side-combined partial sums.
     "emb_kmeans" -> { (s, dir) =>
-      val e = embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = vectors(s, dir)
       def argmin(codebook: Column, v: Column): Column =
         array_min(transform(codebook, c =>
           struct(round(sqDist(v, c.getField("cv")), 6).as("d"),
@@ -781,8 +701,7 @@ object SimilarityOps {
     // small aggregation; codes never leave the row, so at 100 TB this is
     // a pure scan — the memory win (64 floats → PqM bytes) is the point.
     "emb_pq_error" -> { (s, dir) =>
-      val e = embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = vectors(s, dir)
       val seeds = e.filter(col("vec_id") < PqK).collect().sortBy(_.getLong(0))
       val codebook = array((for {
         m <- 1 to PqM; r <- seeds
@@ -859,13 +778,11 @@ object SimilarityOps {
     // exceeds cells × dims. Determinism: 10dp centroid means, 6dp
     // distances, one 6dp ratio per vector, el10/mean6 cell means.
     "emb_silhouette" -> { (s, dir) =>
-      val e = embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val cellSims = ivfCellSims(e)
+      val e = vectors(s, dir)
+      val codebook = ivfCellSims(e)
       // 2 consumers (centroid agg + scoring) — pin ONE assignment pass
       val assigned = e.withColumn("cell",
-        graft.functions.Barriers.opaque(
-          array_max(cellSims(col("v"))).getField("cell")))
+        graft.functions.Barriers.opaque(codebook.cell(col("v"))))
         .localCheckpoint()
       val cents = assigned
         .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
@@ -907,8 +824,7 @@ object SimilarityOps {
     // touches only the 40-row shortlist. The trained-KMeans production
     // twin is SimilarityLib.pqTopKRerank (PqSpec).
     "ann_pq_rerank" -> { (s, dir) =>
-      val e = embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = vectors(s, dir)
       val seeds = e.filter(col("vec_id") < PqK).collect().sortBy(_.getLong(0))
       val codebook = array((for {
         m <- 1 to PqM; r <- seeds
@@ -965,10 +881,7 @@ object SimilarityOps {
     // the accept/reject number, sim error the margin explanation.
     "ann_int8_recall" -> { (s, dir) =>
       val cos = graft.functions.VectorFunctions.cosine_sim _
-      val e = SimilarityLib.quantizeInt8(
-        embeddings(s, dir)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
-        "v")
+      val e = SimilarityLib.quantizeInt8(vectors(s, dir), "v")
         .select(col("vec_id"), col("v"),
           col("q_codes").cast("array<double>").as("qv"))
       val probes = e.filter(col("vec_id").isin(IvfProbeIds.map(_.toLong): _*))
@@ -1016,8 +929,7 @@ object SimilarityOps {
     // id; the report ties break by vec_id.
     "emb_outlier_knn" -> { (s, dir) =>
       val cos = graft.functions.VectorFunctions.cosine_sim _
-      val e = embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = vectors(s, dir)
       // CORPUS-ADAPTIVE cell count (r16): the fixed 8-cell layout made
       // the within-cell pair join quadratic — measured shuffle ×4.03
       // per data doubling (109→438 MB at sf0.4→sf0.8). ⌊√n⌋ cells is
@@ -1094,8 +1006,7 @@ object SimilarityOps {
     "ann_binary_hamming" -> { (s, dir) =>
       val cos = graft.functions.VectorFunctions.cosine_sim _
       val dot = graft.functions.VectorFunctions.vec_dot _
-      val e = embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = vectors(s, dir)
         .withColumn("sv", transform(col("v"),
           x => when(x >= 0, lit(1.0)).otherwise(lit(-1.0))))
       val probes = e.filter(col("vec_id").isin(IvfProbeIds.map(_.toLong): _*))
@@ -1135,8 +1046,7 @@ object SimilarityOps {
       // shortlist, never the corpus
       val ivf = ivfProbeRows(s, dir)
         .select(col("probe_id"), col("vec_id"), lit(1).as("hit"))
-      val e = embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = vectors(s, dir)
       val probes = e.filter(col("vec_id").isin(IvfProbeIds.map(_.toLong): _*))
         .select(col("vec_id").as("probe_id"), col("v").as("p"))
       val w = org.apache.spark.sql.expressions.Window
@@ -1172,8 +1082,7 @@ object SimilarityOps {
       // K-bounded materialization (the ann_ivf_recall note)
       val ivf = ivfProbeRows(s, dir)
         .select(col("probe_id"), col("vec_id"), col("rk"))
-      val e = embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = vectors(s, dir)
       val probes = e.filter(col("vec_id").isin(IvfProbeIds.map(_.toLong): _*))
         .select(col("vec_id").as("probe_id"), col("v").as("p"))
       val w = org.apache.spark.sql.expressions.Window
@@ -1248,8 +1157,7 @@ object SimilarityOps {
     // decimal-sum bin means.
     "emb_anisotropy" -> { (s, dir) =>
       val cos = graft.functions.VectorFunctions.cosine_sim _
-      val e = embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = vectors(s, dir)
       val pairs = e.select(col("vec_id"), col("v"))
         .join(e.select((col("vec_id") - 199).as("vec_id"), col("v").as("vb")),
           Seq("vec_id"))
@@ -1287,8 +1195,7 @@ object SimilarityOps {
     // are 6dp-rounded cosines (one LEAST lattice — order-independent).
     "emb_coreset_kcenter" -> { (s, dir) =>
       val cos = graft.functions.VectorFunctions.cosine_sim _
-      var mind = embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      var mind = vectors(s, dir)
         .withColumn("mind", lit(2.0))
         .localCheckpoint(eager = false)
       // a corpus of fewer than K vectors runs out of candidates: the
@@ -1332,7 +1239,7 @@ object SimilarityOps {
     // neighbor), scored by cos1/cos2 (the margin criterion: how much
     // the best beats the runner-up — raw cosine thresholds don't
     // transfer across language pairs, margins do). Candidate generation
-    // is the ann_ivf_probe geometry, NOT a cross join: the B population
+    // is the IvfCodebook geometry, NOT a cross join: the B population
     // is indexed into its nearest literal-codebook cell, each A vector
     // probes its IvfNProbe nearest cells, and only cell-colocated pairs
     // are scored — an equi-join on the cell key, so pair count scales as
@@ -1365,7 +1272,6 @@ object SimilarityOps {
         .orderBy(col("a_id"))
     })
 
-  /** ann_ivf_probe geometry, shared by query and oracle. */
   /** MMR re-rank constants: shortlist size, selected count. λ = 0.7 is
     * written as paired literals 0.7 / 0.3 at both use sites (Spark and
     * DuckDB) — never 1−λ, which differs from 0.3 in f64. */
@@ -1386,8 +1292,7 @@ object SimilarityOps {
     * probe + TakeOrderedAndProject, zero shuffles of the corpus). */
   private[operators] def mmrShortlist(s: SparkSession, dir: String): DataFrame = {
     val cosF = graft.functions.VectorFunctions.cosine_sim _
-    val e = embeddings(s, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val e = vectors(s, dir)
     val probe = e.filter(col("vec_id") === PROBE_ID).select(col("v").as("p"))
     e.filter(col("vec_id") =!= PROBE_ID)
       .crossJoin(broadcast(probe))
@@ -1469,26 +1374,19 @@ object SimilarityOps {
   /** IVF-routed candidates of PROBE_ID as (vec_id, v, cs, rel): the
     * corpus assigned to its nearest literal-codebook cell (pure codegen
     * projection), the probe exploded onto its IvfNProbe nearest cells,
-    * and cosine scored ONLY for cell-colocated rows — the ann_ivf_probe
-    * geometry, shared by the MMR and RRF routed twins. The probe gets
+    * and cosine scored ONLY for cell-colocated rows — the IvfCodebook
+    * geometry, here shared by the MMR and RRF routed twins. The probe gets
     * its own scan (fresh expression ids + pushed-down id filter — the
     * self-join-dedup hazard noted in ann_ivf_probe) and the lambda-
     * derived cell key is opaque-wrapped (OpaqueIdentity scaladoc). */
   private[operators] def ivfProbeCandidates(s: SparkSession, dir: String): DataFrame = {
     val cos = graft.functions.VectorFunctions.cosine_sim _
-    val e = embeddings(s, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val cellSims = ivfCellSims(e)
+    val e = vectors(s, dir)
+    val codebook = ivfCellSims(e)
     val assigned = e.withColumn("cell",
-      graft.functions.Barriers.opaque(
-        array_max(cellSims(col("v"))).getField("cell")))
-    val eP = embeddings(s, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val probe = eP.filter(col("vec_id") === PROBE_ID)
-      .select(col("v").as("p"),
-        explode(transform(
-          slice(reverse(array_sort(cellSims(col("v")))), 1, IvfNProbe),
-          c => c.getField("cell"))).as("pcell"))
+      graft.functions.Barriers.opaque(codebook.cell(col("v"))))
+    val probe = vectors(s, dir).filter(col("vec_id") === PROBE_ID)
+      .select(col("v").as("p"), codebook.probeCells(col("v")).as("pcell"))
     assigned.join(broadcast(probe), col("cell") === col("pcell") &&
         col("vec_id") =!= PROBE_ID)
       .select(col("vec_id"), col("v"),
@@ -1505,8 +1403,7 @@ object SimilarityOps {
   private[operators] def mrlTierTopK(s: SparkSession, dir: String): DataFrame = {
     val cos = graft.functions.VectorFunctions.cosine_sim _
     val tiers = Seq(64, 32, 16, 8)
-    val e = embeddings(s, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val e = vectors(s, dir)
     val probes = e.filter(col("vec_id").isin(IvfProbeIds.map(_.toLong): _*))
       .select(col("vec_id").as("probe_id"), col("v").as("p"))
     val cosCols = tiers.map(d =>
@@ -1535,19 +1432,83 @@ object SimilarityOps {
       .orderBy(col("rel").desc, col("vec_id"))
       .limit(MmrShortlist)
 
+  /** ann_ivf_probe geometry, shared by query and oracle. */
   private val IvfCells = 8
   private val IvfNProbe = 2
   private val IvfTopK = 5
   private val IvfProbeIds = Seq(3, 11, 42)
 
-  /** Deterministic literal IVF codebook (seeds = vec_id < IvfCells) as a
-    * per-row cosine projection: returns a Column function mapping a
-    * vector column to the array of (sim, -cell, cell) structs,
-    * lexicographically ordered so array_max / sort mean "sim desc, ties
-    * to the smallest cell". The bounded-collect codebook shape shared by
-    * ann_ivf_probe and emb_bitext_mine — K×d literals broadcast in the
-    * plan, assignment is pure codegen, no shuffle. `e` must expose
-    * (vec_id, v). */
+  /** The IVF assignment rule over a literal codebook. `cellSims` maps a
+    * vector column to the array of (sim, -cell, cell) structs, one per
+    * cell, lexicographically ordered so array_max / sort mean "sim desc,
+    * ties to the smallest cell". Call sites alias the columns themselves
+    * and wrap a join key in `Barriers.opaque` (OpaqueIdentity scaladoc). */
+  private final class IvfCodebook(cellSims: Column => Column) {
+    /** The nearest cell, ties to the smaller cell id. */
+    def cell(v: Column): Column = array_max(cellSims(v)).getField("cell")
+
+    /** The IvfNProbe nearest cells, exploded one row each. */
+    def probeCells(v: Column): Column = explode(transform(
+      slice(reverse(array_sort(cellSims(v))), 1, IvfNProbe),
+      c => c.getField("cell")))
+  }
+
+  /** Deterministic literal IVF codebook (seeds = vec_id < IvfCells): the
+    * bounded-collect codebook shape shared by the ann_ivf family,
+    * ann_hard_negatives, emb_silhouette, the IVF-routed MMR/RRF twins and
+    * emb_bitext_mine — K×d literals broadcast in the plan, assignment is
+    * pure codegen, no shuffle. `e` must expose (vec_id, v). */
+  private def ivfCellSims(e: DataFrame): IvfCodebook = {
+    val cos = graft.functions.VectorFunctions.cosine_sim _
+    val cents = e.filter(col("vec_id") < IvfCells).collect().sortBy(_.getLong(0))
+    val centArr = array(cents.map { r =>
+      struct(lit(r.getLong(0)).as("cell"),
+        typedLit(r.getSeq[Double](1)).as("cv"))
+    }.toIndexedSeq: _*)
+    new IvfCodebook(v => transform(centArr, c =>
+      struct(round(cos(v, c.getField("cv")), 6).as("sim"),
+        (-c.getField("cell")).as("negc"), c.getField("cell").as("cell"))))
+  }
+
+  /** The ann_ivf_probe ranking, shared by the parquet, stored and live
+    * probes: the IvfProbeIds probes fan out onto their IvfNProbe nearest
+    * cells (broadcast), join the corpus on the cell key, score cosine
+    * only for cell-colocated rows and keep the exact top-IvfTopK per
+    * probe. `corpus` exposes (vec_id, v, cell); `probeSide` exposes
+    * (vec_id, v) and must be a read of its own (fresh expression ids —
+    * the self-join hazard noted in ann_ivf_probe). */
+  private def ivfTopK(corpus: DataFrame, probeSide: DataFrame,
+      codebook: IvfCodebook): DataFrame = {
+    val cos = graft.functions.VectorFunctions.cosine_sim _
+    val probes = probeSide.filter(col("vec_id").isin(IvfProbeIds.map(_.toLong): _*))
+      .select(col("vec_id").as("probe_id"), col("v").as("p"),
+        codebook.probeCells(col("v")).as("pcell"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("probe_id")).orderBy(col("cos_sim").desc, col("vec_id"))
+    corpus.join(broadcast(probes), col("cell") === col("pcell") &&
+        col("vec_id") =!= col("probe_id"))
+      .select(col("probe_id"), col("vec_id"),
+        round(cos(col("v"), col("p")), 6).as("cos_sim"))
+      .withColumn("rk", row_number().over(w).cast("long"))
+      .filter(col("rk") <= IvfTopK)
+      .orderBy(col("probe_id"), col("rk"))
+  }
+
+  /** The takedown batch of the live-index queries: vec_ids [100, 220)
+    * leave the base store (v1) as a row-level DELETE, the net-deleted
+    * keys are recovered from its file-level CDC, and the index absorbs
+    * them as one tombstone append. Returns the dead keys. */
+  private def takeDown(s: SparkSession, baseRoot: String, idxRoot: String): DataFrame = {
+    graft.sources.GraftStore.delete(baseRoot, Array(
+      org.apache.spark.sql.sources.And(
+        org.apache.spark.sql.sources.GreaterThanOrEqual("vec_id", 100L),
+        org.apache.spark.sql.sources.LessThan("vec_id", 220L))))
+    val dead = graft.sources.GraftStore.netDeletedKeys(
+      s, baseRoot, sinceVersion = 1L, Seq("vec_id"))
+    graft.sources.StoredIndex.appendTombstones(s, idxRoot, dead)
+    dead
+  }
+
   /** The ann_ivf_probe result as a literal K-bounded DataFrame
     * (k·|probes| rows collected once): composing queries (recall, NDCG)
     * join it against their own corpus scans, and re-planning the probe
@@ -1574,19 +1535,16 @@ object SimilarityOps {
     val cos = graft.functions.VectorFunctions.cosine_sim _
     val e = embeddings(s, dir).select(col("vec_id"), col("label"),
       col("embedding").cast("array<double>").as("v"))
-    val cellSims = ivfCellSims(e.select(col("vec_id"), col("v")))
+    val codebook = ivfCellSims(e.select(col("vec_id"), col("v")))
     val eB = embeddings(s, dir).select(col("vec_id"), col("label"),
       col("embedding").cast("array<double>").as("v"))
     val srcA = e.filter(col("label") === 0)
       .select(col("vec_id").as("a_id"), col("v").as("va"),
-        explode(transform(
-          slice(reverse(array_sort(cellSims(col("v")))), 1, IvfNProbe),
-          c => c.getField("cell"))).as("pcell"))
+        codebook.probeCells(col("v")).as("pcell"))
     val srcB = eB.filter(col("label") === 1)
       .select(col("vec_id").as("b_id"), col("v").as("vb"),
         // opaque: lambda-derived join key (OpaqueIdentity scaladoc)
-        graft.functions.Barriers.opaque(
-          array_max(cellSims(col("v"))).getField("cell")).as("cell"))
+        graft.functions.Barriers.opaque(codebook.cell(col("v"))).as("cell"))
     srcA.join(srcB, col("pcell") === col("cell"))
       .select(col("a_id"), col("b_id"),
         round(cos(col("va"), col("vb")), 6).as("c"))
@@ -1596,12 +1554,8 @@ object SimilarityOps {
     * with its nearest-literal-codebook cell assignment — the artifact
     * ann_ivf_index_stored persists and ann_ivf_probe_stored scans. */
   private def ivfIndexTable(s: SparkSession, dir: String): DataFrame = {
-    val e = embeddings(s, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val cellSims = ivfCellSims(e)
-    e.select(col("vec_id"),
-      array_max(cellSims(col("v"))).getField("cell").as("cell"),
-      col("v"))
+    val e = vectors(s, dir)
+    e.select(col("vec_id"), ivfCellSims(e).cell(col("v")).as("cell"), col("v"))
   }
 
   /** Snapshot-pinned read of the stored IVF index, building it once per
@@ -1610,18 +1564,6 @@ object SimilarityOps {
   private def storedIvfIndex(s: SparkSession, dir: String): DataFrame =
     graft.sources.GraftStore.materializeOnce(s,
       StoreRoots.tmpRoot("ivfidx", dir))(ivfIndexTable(s, dir))
-
-  private def ivfCellSims(e: DataFrame): Column => Column = {
-    val cos = graft.functions.VectorFunctions.cosine_sim _
-    val cents = e.filter(col("vec_id") < IvfCells).collect().sortBy(_.getLong(0))
-    val centArr = array(cents.map { r =>
-      struct(lit(r.getLong(0)).as("cell"),
-        typedLit(r.getSeq[Double](1)).as("cv"))
-    }.toIndexedSeq: _*)
-    (v: Column) => transform(centArr, c =>
-      struct(round(cos(v, c.getField("cv")), 6).as("sim"),
-        (-c.getField("cell")).as("negc"), c.getField("cell").as("cell")))
-  }
 
   /** emb_kmeans / emb_pq_error geometry, shared by query and oracle. */
   private val KmK = 8

@@ -88,9 +88,8 @@ object SourceOps {
       // then refuses the name (LOCATION_ALREADY_EXISTS). Reset both.
       def reset(table: String): Unit = {
         s.sql(s"DROP TABLE IF EXISTS $table")
-        val loc = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), table)
-        loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
+        StoreRoots.reset(s, new org.apache.hadoop.fs.Path(
+          s.conf.get("spark.sql.warehouse.dir"), table).toString)
       }
       reset(ot); reset(ct)
       Layout.writeBucketed(orders(s, dir)
@@ -281,8 +280,7 @@ object SourceOps {
     // so compaction converts O(epochs) open costs into O(targetFiles).
     "src_store_compact" -> { (s, dir) =>
       val root = storeRoot(dir) + "-compact"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      StoreRoots.reset(s, root)
       val base = orders(s, dir).select(col("o_orderkey"),
         col("o_orderpriority"), col("o_totalprice"))
       def slice(pfx: String) = base.filter(col("o_orderpriority").startsWith(pfx))
@@ -315,8 +313,7 @@ object SourceOps {
     // never a data scan.
     "src_store_vacuum" -> { (s, dir) =>
       val root = storeRoot(dir) + "-vacuum"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      StoreRoots.reset(s, root)
       val base = orders(s, dir).select(col("o_orderkey"),
         col("o_orderstatus"), col("o_totalprice"))
       GraftStore.write(base.filter(col("o_orderstatus") === "F").repartition(4),
@@ -374,8 +371,7 @@ object SourceOps {
     "src_store_timetravel" -> { (s, dir) =>
       val root = storeRoot(dir) + "-tt"
       // fresh store each run → deterministic version numbers (1, 2)
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      StoreRoots.reset(s, root)
       val base = orders(s, dir).select(col("o_orderkey"), col("o_custkey"),
         col("o_totalprice"), col("o_orderstatus"))
       GraftStore.write(base.filter(col("o_orderstatus") === "F"), root,
@@ -689,8 +685,7 @@ object SourceOps {
     // covers the rest.)
     "src_store_snapshots" -> { (s, dir) =>
       val root = storeRoot(dir) + "-snapmeta"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      StoreRoots.reset(s, root)
       val base = orders(s, dir).select(col("o_orderkey"), col("o_totalprice"))
       GraftStore.write(base.filter(col("o_orderkey") % 4 === 0), root,
         overwrite = true)
@@ -716,8 +711,7 @@ object SourceOps {
     // reproducible by name forever.
     "src_store_wap" -> { (s, dir) =>
       val root = storeRoot(dir) + "-wap"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      StoreRoots.reset(s, root)
       val prod = root + "/prod"
       val stage = root + "/staging"
       val base = orders(s, dir).select(col("o_orderkey"), col("o_totalprice"))
@@ -768,8 +762,7 @@ object SourceOps {
     // extra line-read before the ordinary pinned-manifest scan.
     "src_store_tag" -> { (s, dir) =>
       val root = storeRoot(dir) + "-tag"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      StoreRoots.reset(s, root)
       val base = orders(s, dir).select(col("o_orderkey"),
         col("o_totalprice"), col("o_orderstatus"))
       GraftStore.write(base.filter(col("o_orderstatus") === "F"), root,
@@ -802,8 +795,7 @@ object SourceOps {
     // exercised with deterministic counts.
     "src_store_diff" -> { (s, dir) =>
       val root = storeRoot(dir) + "-diff"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      StoreRoots.reset(s, root)
       val base = orders(s, dir).select(col("o_orderkey"), col("o_totalprice"))
       GraftStore.write(base.filter(col("o_orderkey") % 10 =!= 0), root,
         overwrite = true)
@@ -855,8 +847,7 @@ object SourceOps {
     // are the next tier and change the read path, not this contract.
     "src_store_delete" -> { (s, dir) =>
       val root = storeRoot(dir) + "-del"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      StoreRoots.reset(s, root)
       val base = orders(s, dir).select(col("o_orderkey"), col("o_totalprice"))
       GraftStore.write(base, root, overwrite = true)
       val v1 = s.read.format("graft-store").option("version", 1).load(root)
@@ -876,8 +867,7 @@ object SourceOps {
     },
     "src_store_merge" -> { (s, dir) =>
       val root = storeRoot(dir) + "-merge"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      StoreRoots.reset(s, root)
       val base = orders(s, dir).select(col("o_orderkey"), col("o_totalprice"))
       GraftStore.write(base.filter(col("o_orderkey") % 3 =!= 0), root,
         overwrite = true)
@@ -917,8 +907,7 @@ object SourceOps {
     // passing means the file-level delta IS exactly the appended rows.
     "src_store_changes" -> { (s, dir) =>
       val root = storeRoot(dir) + "-changes"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      StoreRoots.reset(s, root)
       val base = orders(s, dir).select(col("o_orderkey"), col("o_custkey"),
         col("o_totalprice"), col("o_orderpriority"))
       GraftStore.write(base.filter(col("o_orderkey") % 3 === 0), root,
@@ -945,8 +934,7 @@ object SourceOps {
     // rescan costs the corpus; the refresh costs the delta.
     "src_store_ivm" -> { (s, dir) =>
       val root = storeRoot(dir) + "-ivm"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      StoreRoots.reset(s, root)
       val base = orders(s, dir).select(col("o_orderkey"),
         col("o_totalprice"), col("o_orderpriority"))
       GraftStore.write(base.filter(col("o_orderkey") % 3 === 0), root,
@@ -979,8 +967,7 @@ object SourceOps {
     // driver-side manifest walks that never open a data file.
     "src_store_expire" -> { (s, dir) =>
       val root = storeRoot(dir) + "-expire"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      StoreRoots.reset(s, root)
       val base = orders(s, dir).select(col("o_orderkey"), col("o_totalprice"))
       GraftStore.write(base.filter(col("o_orderkey") % 3 === 0)
         .repartition(2), root, overwrite = true)                     // v1
@@ -1018,8 +1005,7 @@ object SourceOps {
     // the DML delta — rewritten files only, resolved at planning time.
     "src_store_ivm_delete" -> { (s, dir) =>
       val root = storeRoot(dir) + "-ivmdel"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      StoreRoots.reset(s, root)
       val base = orders(s, dir).select(col("o_orderkey"),
         col("o_totalprice"), col("o_orderpriority"))
       GraftStore.write(base.repartition(4), root, overwrite = true)  // v1
@@ -1042,8 +1028,7 @@ object SourceOps {
     },
     "src_store_evolve" -> { (s, dir) =>
       val root = storeRoot(dir) + "-evolve"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      StoreRoots.reset(s, root)
       val base = orders(s, dir).select(col("o_orderkey"), col("o_totalprice"))
       GraftStore.write(base.filter(col("o_orderkey") % 2 === 0), root,
         overwrite = true)
@@ -1072,8 +1057,7 @@ object SourceOps {
     // replays the filter+aggregate on the raw parquet.
     "src_store_skip" -> { (s, dir) =>
       val root = storeRoot(dir) + "-skip"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      StoreRoots.reset(s, root)
       GraftStore.write(
         orders(s, dir).select(col("o_orderkey"), col("o_custkey"),
           col("o_totalprice")).repartitionByRange(8, col("o_orderkey")),

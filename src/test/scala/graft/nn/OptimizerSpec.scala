@@ -39,6 +39,37 @@ class OptimizerSpec extends AnyFunSuite {
     assert(math.abs(w(0)(0, 1) - (-2.0 + 0.01)) < 1e-6)
   }
 
+  test("adam: five steps on 3x4 and 1x4 tensors are bit-identical to the tensor-form update") {
+    val rnd = new scala.util.Random(5)
+    def draw(): Tensors = Array(
+      DenseMatrix.fill(3, 4)(rnd.nextGaussian()), DenseMatrix.fill(1, 4)(rnd.nextGaussian()))
+    val (lr, beta1, beta2, eps) = (0.003, 0.9, 0.999, 1e-8)
+    val w = draw()
+    val ref = Tensors.copy(w)
+    val m = Tensors.zerosLike(w)
+    val v = Tensors.zerosLike(w)
+    val opt = Optimizer.build("adam", lr)
+    for (t <- 1 to 5) {
+      val g = draw()
+      opt.step(w, g)
+      // the reference: Adam written over whole breeze tensors
+      val b1c = 1.0 - math.pow(beta1, t.toDouble)
+      val b2c = 1.0 - math.pow(beta2, t.toDouble)
+      for (i <- ref.indices) {
+        m(i) := m(i) * beta1 + g(i) * (1.0 - beta1)
+        v(i) := v(i) * beta2 + (g(i) *:* g(i)) * (1.0 - beta2)
+        val mHat = m(i) / b1c
+        val vHat = v(i) / b2c
+        ref(i) :-= (mHat /:/ (breeze.numerics.sqrt(vHat) + eps)) * lr
+      }
+      for (i <- w.indices) {
+        val bits = (x: DenseMatrix[Double]) =>
+          x.toArray.map(java.lang.Double.doubleToRawLongBits).toSeq
+        assert(bits(w(i)) == bits(ref(i)), s"tensor $i differs after step $t")
+      }
+    }
+  }
+
   test("adagrad first step: w -= lr*g/sqrt(init+g²)") {
     val w = w0
     Optimizer.build("adagrad", 0.1, Map("initial_accumulator_value" -> 0.1)).step(w, g0)

@@ -143,6 +143,30 @@ class PlanShapeSpec extends AnyFunSuite {
     SparkEntry.queries(name)(spark, dir).queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
 
+  test("ann_ivf_probe_live: both sides read the tombstone-masked index; candidates ride the cell equi-join") {
+    val p = fplan("ann_ivf_probe_live")
+    val tree = p.linesIterator.takeWhile(_.nonEmpty).toVector
+    // every scan is the graft-store index (the live view and its
+    // tombstone set); the parquet corpus never appears in the probe
+    val scans = tree.filter(_.contains("Scan"))
+    assert(scans.nonEmpty && scans.forall(_.contains("BatchScan graft_store")), p)
+    assert(!p.contains("Scan parquet"), p)
+    // candidates ride the cell equi-join against the broadcast probes
+    val i = tree.indexWhere(_.contains("BroadcastHashJoin Inner"))
+    assert(i >= 0, p)
+    val at = tree(i).indexOf("BroadcastHashJoin")
+    val j = tree.indexWhere(l => l.startsWith("+- ", at) && l.take(at).trim.isEmpty, i + 1)
+    assert(j > i, p)
+    val corpusSide = tree.slice(i + 1, j)
+    val probeSide = tree.drop(j).takeWhile(_.take(at).trim.isEmpty)
+    // the tombstone mask is a broadcast left-outer join on BOTH sides
+    assert(corpusSide.exists(_.contains("BroadcastHashJoin LeftOuter")), p)
+    assert(probeSide.exists(_.contains("BroadcastHashJoin LeftOuter")), p)
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
+    // per-probe top-k prunes before its shuffle
+    assert(p.contains("WindowGroupLimit"), p)
+  }
+
   test("src_docgen_agg: doc_id range is absorbed into generation; text pruned from the scan") {
     val p = fplan("src_docgen_agg")
     // pushdown narrows the generated range itself — [2000,12000) out of

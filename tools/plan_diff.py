@@ -17,7 +17,15 @@ the plan:
   - `plan_id=123`,
   - RDD ids `RDD[123]` of checkpointed inputs,
   - the source line of the call that built such an RDD (`Foo.scala:123`),
-    which moves whenever code above it is edited.
+    which moves whenever code above it is edited,
+  - the process id in per-process store roots, `-p<pid>` in
+    `graft-store-<kind>-<fixture>-p<pid>` (StoreRoots.tmpRoot) and in
+    `graft-sql-warehouse-p<pid>` (SourceOps.sqlWarehouse), written `-pN`,
+  - the identity hash in an object's default `toString` (`Foo@1f8e9877`,
+    written `Foo@N`) and the JVM-generated class name of a function
+    object (`Foo$$$Lambda$123/0x00007f...`, written `Foo$$$Lambda$N`).
+Spark-side paths relative to the working directory (`spark-warehouse/`)
+are kept, so dump both trees from the same directory.
 It prints the first differing line of each differing query and any
 query dumped on one side only, and exits 1 on any difference, 0 if
 every plan matches.
@@ -31,6 +39,9 @@ _TOKENS = [
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"\.scala:\d+"), ".scala:N"),
+    (re.compile(r"(graft-store-[\w.-]*?-p|graft-sql-warehouse-p)\d+\b"), r"\1N"),
+    (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+"), "$Lambda$N"),
+    (re.compile(r"(?<=[\w$])@[0-9a-f]{1,8}\b"), "@N"),
 ]
 
 
