@@ -43,5 +43,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // every session built with these extensions (graft.plans.AsOfJoin)
     ext.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)
     ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsOfJoin)
+    // and so does the block-inference node (graft.plans.BlockPredict)
+    ext.injectPlannerStrategy(_ => new graft.plans.BlockPredictStrategy)
+    ext.injectOptimizerRule(_ => graft.plans.PushThroughBlockPredict)
   }
 }

@@ -1,14 +1,15 @@
 package graft.ml
 
 import org.apache.spark.ml.{Estimator, Model}
-import org.apache.spark.ml.linalg.{Vector, Vectors, SQLDataTypes}
+import org.apache.spark.ml.linalg.{Vector, SQLDataTypes}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.param.shared.{HasInputCol, HasLabelCol, HasPredictionCol}
 import org.apache.spark.ml.util._
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import graft.nn.{NetSpec, Network, Tensors}
+import graft.plans.BlockPredict
 import graft.train.HogwildTrainer
 
 /** Shared params — the 21 parameters of the reference's `SparkAsyncDL`
@@ -178,7 +179,7 @@ class SparkAsyncDL(override val uid: String) extends Estimator[SparkAsyncDLModel
 
     val model = new SparkAsyncDLModel(uid + "_model")
       .setModelJson($(tensorflowGraph))
-      .setModelWeights(Tensors.toJson(weights))
+      .setWeights(weights)
       .setInputCol(inCol)
       .setPredictionCol($(predictionCol))
     copyValues(model).setParent(this)
@@ -197,12 +198,15 @@ class SparkAsyncDL(override val uid: String) extends Estimator[SparkAsyncDLModel
 object SparkAsyncDL extends DefaultParamsReadable[SparkAsyncDL]
 
 /** Fitted model — parity with `SparkAsyncDLModel` (`tensorflow_async.py:
-  * 51-99`). transform() is an appended projection (`withColumn` + UDF over
-  * broadcast weights) so Catalyst keeps pruning/pushdown working around it
-  * — the reference instead rebuilt every row via `mapPartitions(...).toDF()`
-  * re-inferring the schema (a bug class we drop, SURVEY.md §1). Weights
-  * deserialize ONCE on the driver and ship via broadcast, not once per
-  * partition per query (`ml_util.py:57-58` cost eliminated). */
+  * 51-99`). transform() appends the prediction column through one Catalyst
+  * operator, [[graft.plans.BlockPredict]]: per partition it runs the net
+  * once per block of rows as one matrix forward, and Catalyst still pushes
+  * filters below it and prunes the columns it does not read. The reference
+  * instead rebuilt every row via `mapPartitions(...).toDF()`, re-inferring
+  * the schema and hiding the plan from the optimizer (a bug class we drop,
+  * SURVEY.md §1). Weights deserialize ONCE on the driver and ship via
+  * broadcast, not once per partition per query (`ml_util.py:57-58` cost
+  * eliminated). */
 class SparkAsyncDLModel(override val uid: String) extends Model[SparkAsyncDLModel]
     with AsyncDLParams with DefaultParamsWritable {
 
@@ -217,12 +221,27 @@ class SparkAsyncDLModel(override val uid: String) extends Model[SparkAsyncDLMode
   def setPredictionCol(v: String): this.type = set(predictionCol, v)
 
   def spec: NetSpec = NetSpec.fromJson($(modelJson))
-  def weights: Tensors.Tensors = Tensors.fromJson($(modelWeights))
+
+  /** The weights as tensors, parsed once per weights value and shared with
+    * the model (do not mutate them). Keyed by identity, like the broadcast
+    * below: the weights Param value is the same String instance until
+    * someone sets a new one. A model returned by `fit` starts out holding
+    * the tensors it was built from, so it never parses its own JSON. */
+  @transient private var parsed: (String, Tensors.Tensors) = _
+  def weights: Tensors.Tensors = synchronized {
+    val wj = $(modelWeights)
+    if (parsed == null || (parsed._1 ne wj)) parsed = (wj, Tensors.fromJson(wj))
+    parsed._2
+  }
+  private[ml] def setWeights(ts: Tensors.Tensors): this.type = synchronized {
+    val wj = Tensors.toJson(ts)
+    parsed = (wj, ts)
+    set(modelWeights, wj)
+  }
 
   /** One broadcast per (context, weights) — repeated transform() calls on
     * a long-lived model must not accumulate broadcast blocks on the
-    * executors. Keyed by identity: the weights Param value is the same
-    * String instance until someone sets a new one. */
+    * executors. */
   @transient private var cachedBc
       : (org.apache.spark.SparkContext, String, org.apache.spark.broadcast.Broadcast[Tensors.Tensors]) = _
   private def weightsBroadcast(spark: org.apache.spark.sql.SparkSession)
@@ -235,38 +254,14 @@ class SparkAsyncDLModel(override val uid: String) extends Model[SparkAsyncDLMode
   }
 
   override def transform(dataset: Dataset[_]): DataFrame = {
-    transformSchema(dataset.schema, logging = true)
-    import org.apache.spark.sql.types.{ArrayType, FloatType}
-    val spark = dataset.sparkSession
-    val net = new Network(spec) // built once on the driver, serializes with the closure
-    val bcWeights = weightsBroadcast(spark)
-    val scalar = spec.outputDim == 1 // scalar-vs-vector output rule (`ml_util.py:76-81`)
-    val inType = dataset.schema($(inputCol)).dataType
-    // typed UDFs per input column type: ml Vector (dense/sparse) or raw arrays
-    val predictCol = inType match {
-      case dt if dt == SQLDataTypes.VectorType =>
-        if (scalar) udf((v: Vector) => net.predictRow(v.toArray, bcWeights.value)(0))
-          .apply(col($(inputCol)))
-        else udf((v: Vector) => Vectors.dense(net.predictRow(v.toArray, bcWeights.value)))
-          .apply(col($(inputCol)))
-      case ArrayType(FloatType, _) =>
-        if (scalar) udf((s: Seq[Float]) =>
-            net.predictRow(s.map(_.toDouble).toArray, bcWeights.value)(0))
-          .apply(col($(inputCol)))
-        else udf((s: Seq[Float]) =>
-            Vectors.dense(net.predictRow(s.map(_.toDouble).toArray, bcWeights.value)))
-          .apply(col($(inputCol)))
-      case _ => // array<double> and friends
-        if (scalar) udf((s: Seq[Double]) => net.predictRow(s.toArray, bcWeights.value)(0))
-          .apply(col($(inputCol)))
-        else udf((s: Seq[Double]) => Vectors.dense(net.predictRow(s.toArray, bcWeights.value)))
-          .apply(col($(inputCol)))
-    }
-    dataset.withColumn($(predictionCol), predictCol)
+    val schema = transformSchema(dataset.schema, logging = true)
+    BlockPredict(dataset.toDF(), $(inputCol), schema.last, new Network(spec),
+      weightsBroadcast(dataset.sparkSession))
   }
 
   override def transformSchema(schema: StructType): StructType = {
     require(schema.fieldNames.contains($(inputCol)), s"missing input column ${$(inputCol)}")
+    // scalar-vs-vector output rule (`ml_util.py:76-81`)
     val outType = if (spec.outputDim == 1) DoubleType else SQLDataTypes.VectorType
     StructType(schema.fields :+ StructField($(predictionCol), outType, nullable = false))
   }

@@ -317,7 +317,9 @@ final class Network(val spec: NetSpec) extends Serializable {
   def loss(x: DenseMatrix[Double], y: DenseMatrix[Double], ts: Tensors): Double =
     lossFn.loss(forward(x, ts), y)
 
-  /** Predict a single example; used by the inference UDF. */
+  /** Predict a single example: the one-row call of [[forward]]. Batch
+    * inference (`graft.plans.BlockPredict`) calls `forward` on blocks of
+    * rows laid out the same way, one row per matrix row. */
   def predictRow(features: Array[Double], ts: Tensors): Array[Double] = {
     val x = new DenseMatrix(1, features.length, features)
     forward(x, ts).toDenseVector.toArray

@@ -30,15 +30,18 @@ object Layout {
     b.join(s, Seq(key, salt)).drop(salt)
   }
 
-  /** Write a bucketed + sorted copy of `df` as a managed table so repeated
+  /** Write a bucketed + sorted copy of `df` as a table so repeated
     * joins/aggregations on `key` skip their shuffle (bucket pruning +
-    * co-located join). */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write.mode("overwrite")
+    * co-located join). The table is managed, under the session's
+    * warehouse, unless `path` names where to store it. */
+  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int,
+      path: Option[String] = None): Unit = {
+    val w = df.write.mode("overwrite")
       .bucketBy(buckets, key)
       .sortBy(key)
       .format("parquet")
-      .saveAsTable(table)
+    path.fold(w)(w.option("path", _)).saveAsTable(table)
+  }
 
   /** Top-N most frequent values of `key` with counts — the skew report
     * you run before deciding to salt. One pass, partial-aggregated. */

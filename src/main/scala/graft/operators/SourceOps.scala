@@ -83,21 +83,22 @@ object SourceOps {
       val sfTag = new java.io.File(dir).getName.replace('.', '_')
       val ot = s"graft_bucketed_orders_$sfTag"
       val ct = s"graft_bucketed_customer_$sfTag"
-      // a prior JVM's run leaves the managed location on disk while the
-      // fresh in-memory catalog has forgotten the table — saveAsTable
-      // then refuses the name (LOCATION_ALREADY_EXISTS). Reset both.
-      def reset(table: String): Unit = {
+      // each table at an explicit path under a per-process tmp root: the
+      // default warehouse is relative to the working directory, which
+      // would print the checkout's location into the plan. The table is
+      // dropped and its files deleted first, so every run writes afresh.
+      val root = StoreRoots.tmpRoot("bucketed", dir)
+      def write(df: DataFrame, table: String, key: String): Unit = {
+        val path = s"$root/$table"
         s.sql(s"DROP TABLE IF EXISTS $table")
-        StoreRoots.reset(s, new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), table).toString)
+        StoreRoots.reset(s, path)
+        Layout.writeBucketed(df, table, key, buckets = 8, path = Some(path))
       }
-      reset(ot); reset(ct)
-      Layout.writeBucketed(orders(s, dir)
+      write(orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
-        ot, "o_custkey", buckets = 8)
-      Layout.writeBucketed(customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment")),
-        ct, "c_custkey", buckets = 8)
+        ot, "o_custkey")
+      write(customer(s, dir).select(col("c_custkey"), col("c_mktsegment")),
+        ct, "c_custkey")
       s.table(ot).hint("merge")
         .join(s.table(ct), col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment"))

@@ -127,6 +127,27 @@ class SparkAsyncDLSpec extends AnyFunSuite {
     assert(a.sameElements(b), "loaded model predicts differently")
   }
 
+  test("predictions follow setModelWeights made after a transform, and survive save/load") {
+    val spec = blobSpec
+    val net = new graft.nn.Network(spec)
+    val (w1, w2) = (net.initWeights(1L), net.initWeights(2L))
+    val df = blobsDf(20)
+    val feats = df.select("features").collect().map(_.getAs[Vector](0).toArray)
+    def preds(m: SparkAsyncDLModel) =
+      m.transform(df).select("predicted").collect().map(_.getDouble(0)).toSeq
+    def oneRow(w: graft.nn.Tensors.Tensors) = feats.map(f => net.predictRow(f, w)(0)).toSeq
+    val model = new SparkAsyncDLModel().setModelJson(spec.toJson).setInputCol("features")
+      .setWeights(w1)
+    assert(model.weights eq w1, "the model parsed the tensors it was built from")
+    assert(preds(model) == oneRow(w1))
+    model.setModelWeights(graft.nn.Tensors.toJson(w2))
+    assert(preds(model) == oneRow(w2))
+    assert(oneRow(w1) != oneRow(w2))
+    val dir = Files.createTempDirectory("graft_weights").toString + "/m"
+    model.write.overwrite().save(dir)
+    assert(preds(SparkAsyncDLModel.load(dir)) == oneRow(w2))
+  }
+
   test("save/load full pipeline (test_save_pipeline)") {
     val raw = blobsDf(50).selectExpr("label", "features as rawfeat")
     val assembler = new VectorAssembler()

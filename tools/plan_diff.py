@@ -24,8 +24,8 @@ the plan:
   - the identity hash in an object's default `toString` (`Foo@1f8e9877`,
     written `Foo@N`) and the JVM-generated class name of a function
     object (`Foo$$$Lambda$123/0x00007f...`, written `Foo$$$Lambda$N`).
-Spark-side paths relative to the working directory (`spark-warehouse/`)
-are kept, so dump both trees from the same directory.
+No plan prints a path under the working directory, so two checkouts of
+one tree, each dumped from its own directory, compare equal.
 It prints the first differing line of each differing query and any
 query dumped on one side only, and exits 1 on any difference, 0 if
 every plan matches.
