@@ -269,35 +269,43 @@ object Multimodal {
       bb.array()
     }
 
-    /** Parse the container: (sampleRate, channels, bitsPerSample,
-      * nSampleFrames). None for anything that is not a complete WAV —
-      * corrupt payloads become null metadata rows, not task failures.
-      * Walks chunks with the even-byte padding rule rather than
-      * assuming fmt/data at fixed offsets. */
-    def parseWavHeader(p: Array[Byte]): Option[(Int, Int, Int, Long)] = {
+    private def str(p: Array[Byte], off: Int) = new String(p, off, 4, "US-ASCII")
+    private def u32(p: Array[Byte], off: Int) =
+      ByteBuffer.wrap(p, off, 4).order(ByteOrder.LITTLE_ENDIAN).getInt & 0xffffffffL
+    private def u16(p: Array[Byte], off: Int) =
+      ByteBuffer.wrap(p, off, 2).order(ByteOrder.LITTLE_ENDIAN).getShort & 0xffff
+
+    /** One walk of the RIFF chunk list: (offset of the last complete
+      * `fmt ` chunk, offset of the last `data` chunk's payload, that
+      * chunk's declared length), with -1 for a chunk not found. None
+      * unless `p` opens with a RIFF/WAVE header. Walks chunks with the
+      * even-byte padding rule rather than assuming fixed offsets. */
+    private def walkChunks(p: Array[Byte]): Option[(Int, Int, Long)] = {
       if (p == null || p.length < 12) return None
-      def str(off: Int) = new String(p, off, 4, "US-ASCII")
-      def u32(off: Int) =
-        ByteBuffer.wrap(p, off, 4).order(ByteOrder.LITTLE_ENDIAN).getInt & 0xffffffffL
-      def u16(off: Int) =
-        ByteBuffer.wrap(p, off, 2).order(ByteOrder.LITTLE_ENDIAN).getShort & 0xffff
-      if (str(0) != "RIFF" || str(8) != "WAVE") return None
+      if (str(p, 0) != "RIFF" || str(p, 8) != "WAVE") return None
       var off = 12
-      var fmt: Option[(Int, Int, Int)] = None
+      var fmt = -1
+      var data = -1
       var dataLen = -1L
       while (off + 8 <= p.length) {
-        val id = str(off)
-        val len = u32(off + 4)
-        if (id == "fmt " && off + 24 <= p.length)
-          fmt = Some((u32(off + 12).toInt, u16(off + 10), u16(off + 22)))
-        else if (id == "data") dataLen = len
+        val id = str(p, off)
+        val len = u32(p, off + 4)
+        if (id == "fmt " && off + 24 <= p.length) fmt = off
+        else if (id == "data") { data = off + 8; dataLen = len }
         off += 8 + len.toInt + (len.toInt & 1) // chunks pad to even length
       }
-      fmt.collect {
-        case (rate, ch, bits) if dataLen >= 0 && ch > 0 && bits >= 8 =>
-          (rate, ch, bits, dataLen / (ch.toLong * bits / 8))
-      }
+      Some((fmt, data, dataLen))
     }
+
+    /** Parse the container: (sampleRate, channels, bitsPerSample,
+      * nSampleFrames). None for anything that is not a complete WAV —
+      * corrupt payloads become null metadata rows, not task failures. */
+    def parseWavHeader(p: Array[Byte]): Option[(Int, Int, Int, Long)] =
+      for {
+        (fmt, _, dataLen) <- walkChunks(p) if fmt >= 0 && dataLen >= 0
+        ch = u16(p, fmt + 10)
+        bits = u16(p, fmt + 22) if ch > 0 && bits >= 8
+      } yield (u32(p, fmt + 12).toInt, ch, bits, dataLen / (ch.toLong * bits / 8))
 
     /** Duration in whole milliseconds — the metadata column a media
       * table carries without ever decoding samples. */
@@ -313,31 +321,14 @@ object Multimodal {
       * proving the parser reads real signal, not just headers. None if
       * the container is malformed, not 16-bit, or holds fewer than `n`
       * sample values. */
-    def readSamples(p: Array[Byte], n: Int): Option[Array[Int]] = {
-      if (p == null || p.length < 12) return None
-      def str(off: Int) = new String(p, off, 4, "US-ASCII")
-      def u32(off: Int) =
-        ByteBuffer.wrap(p, off, 4).order(ByteOrder.LITTLE_ENDIAN).getInt & 0xffffffffL
-      def u16(off: Int) =
-        ByteBuffer.wrap(p, off, 2).order(ByteOrder.LITTLE_ENDIAN).getShort & 0xffff
-      if (str(0) != "RIFF" || str(8) != "WAVE") return None
-      var off = 12
-      var bits = -1
-      var data = -1
-      var dataLen = -1L
-      while (off + 8 <= p.length) {
-        val id = str(off)
-        val len = u32(off + 4)
-        if (id == "fmt " && off + 24 <= p.length) bits = u16(off + 22)
-        else if (id == "data") { data = off + 8; dataLen = len }
-        off += 8 + len.toInt + (len.toInt & 1)
+    def readSamples(p: Array[Byte], n: Int): Option[Array[Int]] =
+      walkChunks(p).collect {
+        case (fmt, data, dataLen) if fmt >= 0 && u16(p, fmt + 22) == 16 &&
+            data >= 0 && dataLen >= n.toLong * 2 && data + n * 2 <= p.length =>
+          Array.tabulate(n)(i =>
+            ByteBuffer.wrap(p, data + i * 2, 2).order(ByteOrder.LITTLE_ENDIAN)
+              .getShort.toInt)
       }
-      if (bits != 16 || data < 0 || dataLen < n.toLong * 2 ||
-        data + n * 2 > p.length) return None
-      Some(Array.tabulate(n)(i =>
-        ByteBuffer.wrap(p, data + i * 2, 2).order(ByteOrder.LITTLE_ENDIAN)
-          .getShort.toInt))
-    }
   }
 
   /** Container-agnostic byte-level operators — the fallback tier for

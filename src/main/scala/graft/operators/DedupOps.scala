@@ -81,6 +81,25 @@ object DedupOps {
         concat(col(s"h${2 * b + 1}"), col(s"h${2 * b + 2}"))): _*)))
       .toDF("doc_id", "band", "bh")
 
+  /** Shared-group counts of a DF-capped shingle-group table: every pair
+    * of docs sharing a group, with `inter` = groups shared and `sza`,
+    * `szb` = each doc's group count, as (doc_b, doc_a, inter, sza, szb).
+    * Precondition: `grouped` holds one `docs` array per group, sorted,
+    * distinct and capped at [[MaxShingleDf]], so pairs come out
+    * `doc_a < doc_b` and no group fans out past MaxShingleDf². Callers
+    * apply their own ratio and threshold. */
+  private def sharedCounts(grouped: DataFrame): DataFrame = {
+    val inter = DedupLib.arrayPairs(grouped.filter(size(col("docs")) >= 2),
+        "docs", "doc_a", "doc_b")
+      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
+    val sizes = grouped
+      .select(explode(col("docs")).as("doc_id"))
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
+    inter
+      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sza"), "doc_a")
+      .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "szb"), "doc_b")
+  }
+
   /** Snapshot-pinned read of the stored MinHash signature table,
     * building it once per process if absent — the dedup half of the
     * index-at-ingest story (the ANN half is `ann_ivf_index_stored`):
@@ -116,23 +135,26 @@ object DedupOps {
       .select(col("doc_id"), col("source"), col("pos"),
         expr(s"substring(text, pos, $k)").as("gh"))
       .localCheckpoint()
+    sharedGramSpans(g, k)
+  }
+
+  /** Maximal cross-doc duplicated spans of the gram table `g`
+    * (doc_id, source, pos, gh = the k-char gram at pos): grams held by
+    * ≥2 distinct docs are located by a grouped aggregate + semi-join
+    * (never a pair join), and their positions union-merge per doc into
+    * maximal [st, en) spans by the running-max-of-ends sweep, intervals
+    * [pos, pos+k). Shared by the stride-1 and the winnowing-seeded
+    * substring-dedup variants. */
+  private def sharedGramSpans(g: DataFrame, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val dup = g.groupBy(col("gh"))
       .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
       .filter(col("lo") =!= col("hi"))
       .select(col("gh"))
-    mergeIslands(g.join(dup, Seq("gh"), "semi"), k)
-  }
-
-  /** Union-merge per-doc hit positions into maximal [st, en) spans — the
-    * running-max-of-ends sweep shared by the stride-1 and the
-    * winnowing-seeded substring-dedup variants. `hits` must expose
-    * (doc_id, source, pos); intervals are [pos, pos+k). */
-  private def mergeIslands(hits: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val byPos = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val prevEnd = max(col("pos") + k)
       .over(byPos.rowsBetween(Window.unboundedPreceding, -1))
-    hits
+    g.join(dup, Seq("gh"), "semi")
       .withColumn("brk",
         when(col("pos") > coalesce(prevEnd, lit(-1)), 1L).otherwise(0L))
       .withColumn("island",
@@ -183,12 +205,28 @@ object DedupOps {
         col("posi").cast("long").as("pos"),
         expr(s"substring(text, posi, $k)").as("gh"))
       .localCheckpoint()
-    val dup = g.groupBy(col("gh"))
-      .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
-      .filter(col("lo") =!= col("hi"))
-      .select(col("gh"))
-    mergeIslands(g.join(dup, Seq("gh"), "semi"), k)
+    sharedGramSpans(g, k)
   }
+
+  /** One row per word of `docs` with its md5 hex digest `hex` — the
+    * SimHash bit source both engines replay. */
+  private def md5Words(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
+      .withColumn("hex", md5(col("word")))
+
+  /** Value 0–15 of the `p`-th (1-based) hex digit of [[md5Words]]' `hex`. */
+  private def hexNibble(p: Int): Column = {
+    val a = ascii(substring(col("hex"), p, 1))
+    when(a >= 97, a - 87).otherwise(a - 48)
+  }
+
+  /** Per-source report of duplicated `spans` (doc_id, source, st, en):
+    * docs affected, span count and duplicated chars. */
+  private def spanReport(spans: DataFrame): DataFrame =
+    spans.groupBy(col("source"))
+      .agg(count_distinct(col("doc_id")).as("docs_affected"),
+        count(lit(1)).as("dup_spans"),
+        sum(col("en") - col("st")).cast("long").as("dup_chars"))
 
   /** Excise `spans` (doc_id, st, en half-open) from `docs` and hash the
     * reconstructed survivor text — the shared cut algebra behind the
@@ -279,11 +317,7 @@ object DedupOps {
     // stride and seeds candidates from dedup_winnowing fingerprints, or
     // runs suffix arrays per partition as Lee et al. do.
     "dedup_substring" -> { (s, dir) =>
-      dupSpans(documents(s, dir))
-        .groupBy(col("source"))
-        .agg(count_distinct(col("doc_id")).as("docs_affected"),
-          count(lit(1)).as("dup_spans"),
-          sum(col("en") - col("st")).cast("long").as("dup_chars"))
+      spanReport(dupSpans(documents(s, dir)))
         .orderBy(col("source"))
     },
     // The CUT, not just the report: duplicated spans excised and each
@@ -321,11 +355,7 @@ object DedupOps {
     // containment spec measures against (every winnowed span is inside
     // a stride-1 span; shared spans ≥ k+W-1 chars are never missed).
     "dedup_substring_winnowed" -> { (s, dir) =>
-      dupSpansWinnowed(documents(s, dir))
-        .groupBy(col("source"))
-        .agg(count_distinct(col("doc_id")).as("docs_affected"),
-          count(lit(1)).as("dup_spans"),
-          sum(col("en") - col("st")).cast("long").as("dup_chars"))
+      spanReport(dupSpansWinnowed(documents(s, dir)))
         .orderBy(col("source"))
     },
     // MinHash + LSH banding → candidate near-dup pairs. One md5 per
@@ -359,12 +389,8 @@ object DedupOps {
         .orderBy(col("mask"))
     },
     "dedup_minhash_lsh" -> { (s, dir) =>
-      val bands = lshBands(documents(s, dir).select(col("doc_id"), col("text")))
-      val a = bands.as("a"); val b = bands.as("b")
-      a.join(b, col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
+      DedupLib.candidatePairs(
+          lshBands(documents(s, dir).select(col("doc_id"), col("text"))))
         .orderBy(col("doc_a"), col("doc_b"))
     },
     // Index-at-ingest for near-dup: persist the per-doc K-column
@@ -388,12 +414,7 @@ object DedupOps {
     // between the two is the measured signature-computation tax the
     // ingest-time index removes from every dedup pass.
     "dedup_minhash_lsh_stored" -> { (s, dir) =>
-      val bands = lshBandsFromSig(storedMinhashSig(s, dir))
-      val a = bands.as("a"); val b = bands.as("b")
-      a.join(b, col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
+      DedupLib.candidatePairs(lshBandsFromSig(storedMinhashSig(s, dir)))
         .orderBy(col("doc_a"), col("doc_b"))
     },
     // The INGEST LOOP composed end to end on the persisted signature
@@ -461,20 +482,14 @@ object DedupOps {
       val dead = graft.sources.GraftStore.netDeletedKeys(
         s, baseRoot, sinceVersion = 1L, Seq("doc_id"))
       graft.sources.StoredIndex.appendTombstones(s, idxRoot, dead)
-      def pairsFrom(sig: DataFrame): DataFrame = {
-        val a = lshBandsFromSig(sig).as("a")
-        val b = lshBandsFromSig(sig).as("b")
-        a.join(b, col("a.band") === col("b.band") &&
-            col("a.bh") === col("b.bh") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-          .distinct()
-      }
       // eager pin: compaction overwrites + vacuums the index store, so
       // the live-view pairs must materialize first
-      val livePairs = pairsFrom(graft.sources.StoredIndex.readLive(
-        s, idxRoot, Seq("doc_id"))).localCheckpoint(eager = true)
+      val livePairs = DedupLib.candidatePairs(lshBandsFromSig(
+        graft.sources.StoredIndex.readLive(s, idxRoot, Seq("doc_id"))))
+        .localCheckpoint(eager = true)
       graft.sources.StoredIndex.compactTombstones(s, idxRoot, Seq("doc_id"))
-      val afterPairs = pairsFrom(graft.sources.GraftStore.read(s, idxRoot))
+      val afterPairs = DedupLib.candidatePairs(lshBandsFromSig(
+        graft.sources.GraftStore.read(s, idxRoot)))
       livePairs.unionByName(afterPairs)
         .groupBy(col("doc_a"), col("doc_b"))
         .agg(count(lit(1)).as("n_views"))
@@ -482,15 +497,9 @@ object DedupOps {
     },
     // 16-bit SimHash per document (md5-derived bit family)
     "dedup_simhash" -> { (s, dir) =>
-      val words = documents(s, dir)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-        .withColumn("hex", md5(col("word")))
-      val hexVal: Int => Column = p => {
-        val a = ascii(substring(col("hex"), p, 1))
-        when(a >= 97, a - 87).otherwise(a - 48)
-      }
+      val words = md5Words(documents(s, dir))
       val sumCols = (1 to 16).map(p =>
-        sum(when(hexVal(p) >= 8, 1).otherwise(-1)).as(s"s$p"))
+        sum(when(hexNibble(p) >= 8, 1).otherwise(-1)).as(s"s$p"))
       val sums = words.groupBy(col("doc_id")).agg(sumCols.head, sumCols.tail: _*)
       sums.select(col("doc_id"),
         (1 to 16).map(p =>
@@ -512,18 +521,12 @@ object DedupOps {
     // band values spread ~uniformly, so buckets stay tiny however the
     // corpus grows; the verify is one xor+popcount per candidate.
     "dedup_simhash_pairs" -> { (s, dir) =>
-      val words = documents(s, dir)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-        .withColumn("hex", md5(col("word")))
-      val hexVal: Int => Column = p => {
-        val a = ascii(substring(col("hex"), p, 1))
-        when(a >= 97, a - 87).otherwise(a - 48)
-      }
+      val words = md5Words(documents(s, dir))
       // decode each of the 15 nibbles ONCE in a projection; the 60 bit
       // sums then reference plain int columns (±1 as arithmetic, no
       // CASE) instead of re-evaluating ascii(substr(...)) 4x per char
       val withHv = words.select(col("doc_id") +:
-        (1 to 15).map(i => hexVal(i).as(s"hv$i")): _*)
+        (1 to 15).map(i => hexNibble(i).as(s"hv$i")): _*)
       val sumCols = (0 until 60).map { p =>
         sum(shiftright(col(s"hv${p / 4 + 1}"), p % 4).bitwiseAND(lit(1)) * 2 - 1)
           .as(s"s$p")
@@ -589,21 +592,7 @@ object DedupOps {
         .agg(sort_array(collect_set(col("doc_id"))).as("docs"))
         .filter(size(col("docs")) <= MaxShingleDf)
         .localCheckpoint(eager = false)
-      val inter = grouped
-        .filter(size(col("docs")) >= 2)
-        // generator-only pair expansion (posexplode + tail-slice explode):
-        // the nested transform lambdas allocated interpreted structs per
-        // pair — measured 1.4x warm / 4x cold on the affinity twin (r13)
-        .select(col("docs"), posexplode(col("docs")).as(Seq("i", "doc_a")))
-        .select(col("doc_a"), explode(slice(col("docs"), col("i") + lit(2),
-          size(col("docs")))).as("doc_b"))
-        .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
-      val sizes = grouped
-        .select(explode(col("docs")).as("doc_id"))
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      inter
-        .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sza"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "szb"), "doc_b")
+      sharedCounts(grouped)
         .withColumn("jaccard", round(col("inter").cast("double") /
           (col("sza") + col("szb") - col("inter")), 6))
         .filter(col("jaccard") >= 0.1)
@@ -625,21 +614,7 @@ object DedupOps {
         .agg(sort_array(collect_set(col("doc_id"))).as("docs"))
         .filter(size(col("docs")) <= MaxShingleDf)
         .localCheckpoint(eager = false)
-      val inter = grouped
-        .filter(size(col("docs")) >= 2)
-        // generator-only pair expansion (posexplode + tail-slice explode):
-        // the nested transform lambdas allocated interpreted structs per
-        // pair — measured 1.4x warm / 4x cold on the affinity twin (r13)
-        .select(col("docs"), posexplode(col("docs")).as(Seq("i", "doc_a")))
-        .select(col("doc_a"), explode(slice(col("docs"), col("i") + lit(2),
-          size(col("docs")))).as("doc_b"))
-        .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
-      val sizes = grouped
-        .select(explode(col("docs")).as("doc_id"))
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      inter
-        .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sza"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "szb"), "doc_b")
+      sharedCounts(grouped)
         .withColumn("containment", round(col("inter").cast("double") /
           least(col("sza"), col("szb")), 6))
         .filter(col("containment") >= 0.2)
@@ -728,11 +703,7 @@ object DedupOps {
       val grouped = pref.groupBy(col("lang"), col("bucket"))
         .agg(sort_array(collect_set(struct(col("doc_id"), col("pfx")))).as("docs"))
         .filter(size(col("docs")).between(2, MaxShingleDf))
-      grouped
-        // generator-only pair expansion (see the jaccard sites above)
-        .select(col("docs"), posexplode(col("docs")).as(Seq("i", "a")))
-        .select(col("a"), explode(slice(col("docs"), col("i") + lit(2),
-          size(col("docs")))).as("b"))
+      DedupLib.arrayPairs(grouped, "docs", "a", "b")
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
           levenshtein(col("a.pfx"), col("b.pfx")).cast("long").as("edit_dist"))
         .filter(col("edit_dist") <= 10)
@@ -916,16 +887,7 @@ object DedupOps {
       // while the checkpointed signature table stays |docs| × K slices.
       // eager=false keeps EXPLAIN job-free; materializes at first use.
       val sig = minhashSig(docs).localCheckpoint(eager = false)
-      val bands = sig.select(col("doc_id"), posexplode(array(
-        (0 until K / 2).map(b =>
-          concat(col(s"h${2 * b + 1}"), col(s"h${2 * b + 2}"))): _*)))
-        .toDF("doc_id", "band", "bh")
-      val a = bands.as("a"); val b = bands.as("b")
-      val pairs = a.join(b,
-          col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
+      val pairs = DedupLib.candidatePairs(lshBandsFromSig(sig))
       val sigA = sig.toDF("doc_a" +: (1 to K).map(i => s"a$i"): _*)
       val sigB = sig.toDF("doc_b" +: (1 to K).map(i => s"b$i"): _*)
       val agree = (1 to K).map(i =>
@@ -982,8 +944,8 @@ object DedupOps {
     },
     // winnowing (the MOSS scheme): per-doc fingerprints from
     // [[winnowFingerprints]], then pairs sharing >= WinnowMinShared
-    // fingerprints via the same DF-capped collect_set explosion as
-    // dedup_ngram_jaccard — no self-join of the fingerprint stream, and
+    // fingerprints via a DF-capped collect_set and
+    // [[DedupLib.arrayPairs]] — no self-join of the fingerprint stream, and
     // a boilerplate fingerprint shared by >MaxShingleDf docs is dropped
     // before it can fan out quadratically. Winnowing's claim vs plain
     // minhash: selection is LOCAL (any shared window of text guarantees
@@ -996,13 +958,7 @@ object DedupOps {
       val grouped = fps.groupBy(col("h"))
         .agg(sort_array(collect_set(col("doc_id"))).as("docs"))
         .filter(size(col("docs")).between(2, MaxShingleDf))
-      grouped
-        // generator-only pair expansion (posexplode + tail-slice explode):
-        // the nested transform lambdas allocated interpreted structs per
-        // pair — measured 1.4x warm / 4x cold on the affinity twin (r13)
-        .select(col("docs"), posexplode(col("docs")).as(Seq("i", "doc_a")))
-        .select(col("doc_a"), explode(slice(col("docs"), col("i") + lit(2),
-          size(col("docs")))).as("doc_b"))
+      DedupLib.arrayPairs(grouped, "docs", "doc_a", "doc_b")
         .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("n_shared"))
         .filter(col("n_shared") >= WinnowMinShared)
         .orderBy(col("doc_a"), col("doc_b"))
@@ -1267,12 +1223,12 @@ object DedupOps {
     * (start_a, start_b, len, n_fp), `len` in word positions (gram span
     * + the 3-word gram width).
     *
-    * Scale shape: pair generation reuses the banded DF-capped explosion
-    * of `dedup_winnowing` (never a fingerprint-stream self-join); the
-    * island windows partition by (pair, offset) — match-level volume,
-    * already past the band cap, orders of magnitude below corpus size —
-    * so the Window here is pair-local postprocessing, not a corpus
-    * shuffle. */
+    * Scale shape: pair generation is the DF-capped
+    * [[DedupLib.arrayPairs]] expansion (never a fingerprint-stream
+    * self-join); the island windows partition by (pair, offset) —
+    * match-level volume, already past the band cap, orders of magnitude
+    * below corpus size — so the Window here is pair-local
+    * postprocessing, not a corpus shuffle. */
   private[operators] def winnowSpans(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // no distinct(): winnowFingerprints dedups per-doc selections via
@@ -1287,11 +1243,7 @@ object DedupOps {
       .agg(sort_array(collect_set(struct(col("doc_id"), col("pos")))).as("es"))
       .filter(size(array_distinct(transform(col("es"), e => e("doc_id"))))
         .between(2, MaxShingleDf))
-    val matches = grouped
-      // generator-only pair expansion (see the jaccard sites above)
-      .select(col("es"), posexplode(col("es")).as(Seq("i", "a")))
-      .select(col("a"), explode(slice(col("es"), col("i") + lit(2),
-        size(col("es")))).as("b"))
+    val matches = DedupLib.arrayPairs(grouped, "es", "a", "b")
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.pos").as("pos_a"), col("b.pos").as("pos_b"))
       .filter(col("doc_a") < col("doc_b"))

@@ -14,6 +14,27 @@ import org.apache.spark.sql.expressions.Window
 object EventOps {
   import Tables._
 
+  /** Per-user session stats from `perSession` (user_id, sess_events):
+    * session count, events and the longest session's events. */
+  private def sessionStats(perSession: DataFrame): DataFrame =
+    perSession.groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_sessions"),
+        sum(col("sess_events")).cast("long").as("n_events"),
+        max(col("sess_events")).cast("long").as("max_session_events"))
+
+  /** Events per (event_type, year, month) of `ev` with the sum and max
+    * of `k`, the long-typed `props.k` read by one JSON extractor.
+    * Callers add their own ordering. */
+  private def propsByMonth(ev: DataFrame, k: Column): DataFrame =
+    ev.select(col("event_type"), k.as("k"),
+        // cast to long: DuckDB's year()/month() return BIGINT
+        year(col("ts")).cast("long").as("y"),
+        month(col("ts")).cast("long").as("m"))
+      .groupBy(col("event_type"), col("y"), col("m"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("k")).cast("long").as("sum_k"),
+        max(col("k")).cast("long").as("max_k"))
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // SCD2 dimension build — the temporal-table maintenance shape: each
     // user's event_type stream read as a change log, consecutive equal
@@ -685,10 +706,7 @@ object EventOps {
           byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       val perSession = withGap.groupBy(col("user_id"), col("sess_id"))
         .agg(count(lit(1)).as("sess_events"))
-      perSession.groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_sessions"),
-          sum(col("sess_events")).cast("long").as("n_events"),
-          max(col("sess_events")).cast("long").as("max_session_events"))
+      sessionStats(perSession)
         .orderBy(col("user_id"))
     },
     // weekly COHORT RETENTION: users grouped by their first-activity
@@ -819,10 +837,7 @@ object EventOps {
       val perSession = events(s, dir)
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
         .agg(count(lit(1)).as("sess_events"))
-      perSession.groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_sessions"),
-          sum(col("sess_events")).cast("long").as("n_events"),
-          max(col("sess_events")).cast("long").as("max_session_events"))
+      sessionStats(perSession)
         .orderBy(col("user_id"))
     },
     // as-of join: for each purchase, the most recent prior click by the
@@ -931,16 +946,8 @@ object EventOps {
     },
     // scalar JSON + date functions over the props column
     "events_json_props" -> { (s, dir) =>
-      events(s, dir)
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"),
-          // cast to long: DuckDB's year()/month() return BIGINT
-          year(col("ts")).cast("long").as("y"),
-          month(col("ts")).cast("long").as("m"))
-        .groupBy(col("event_type"), col("y"), col("m"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("k")).cast("long").as("sum_k"),
-          max(col("k")).cast("long").as("max_k"))
+      propsByMonth(events(s, dir),
+          get_json_object(col("props"), "$.k").cast("long"))
         .orderBy(col("event_type"), col("y"), col("m"))
     },
     // the Spark 4 VARIANT twin of events_json_props: parse_json once
@@ -952,15 +959,8 @@ object EventOps {
     // extraction, which is the point: the encoding is an engine-side
     // optimization, not a semantics change.
     "events_props_variant" -> { (s, dir) =>
-      events(s, dir)
-        .select(col("event_type"),
-          variant_get(parse_json(col("props")), "$.k", "long").as("k"),
-          year(col("ts")).cast("long").as("y"),
-          month(col("ts")).cast("long").as("m"))
-        .groupBy(col("event_type"), col("y"), col("m"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("k")).cast("long").as("sum_k"),
-          max(col("k")).cast("long").as("max_k"))
+      propsByMonth(events(s, dir),
+          variant_get(parse_json(col("props")), "$.k", "long"))
         .orderBy(col("event_type"), col("y"), col("m"))
     },
     // range join: purchases within the hour after each click, per user.
@@ -1836,23 +1836,7 @@ object EventOps {
     // exact decimal moment sums, means/variances at 6dp, V at 10dp,
     // ln Λ and p at 6dp (fixed-order double chain on both engines).
     "events_always_valid_p" -> { (s, dir) =>
-      val treated = col("user_id") % 2 === 1
-      def cnt(c: org.apache.spark.sql.Column) = sum(when(c, 1L))
-      def s1(c: org.apache.spark.sql.Column) =
-        sum(when(c, DetMean.el10(col("value"))))
-      def s2(c: org.apache.spark.sql.Column) =
-        sum(when(c, DetMean.el10(col("value") * col("value"))))
-      events(s, dir)
-        .groupBy(col("event_type"))
-        .agg(cnt(!treated).as("n0"), cnt(treated).as("n1"),
-          s1(!treated).as("sy0"), s1(treated).as("sy1"),
-          s2(!treated).as("syy0"), s2(treated).as("syy1"))
-        .withColumn("m0", DetMean.mean6(col("sy0"), col("n0")))
-        .withColumn("m1", DetMean.mean6(col("sy1"), col("n1")))
-        .withColumn("v0", round((col("syy0").cast("double") -
-          col("n0") * col("m0") * col("m0")) / (col("n0") - 1), 6))
-        .withColumn("v1", round((col("syy1").cast("double") -
-          col("n1") * col("m1") * col("m1")) / (col("n1") - 1), 6))
+      armMoments(events(s, dir), col("event_type"))
         .withColumn("s2p", round(((col("n0") - 1) * col("v0") +
           (col("n1") - 1) * col("v1")) / (col("n0") + col("n1") - 2), 6))
         .withColumn("vv", round(col("s2p") *
@@ -1885,22 +1869,8 @@ object EventOps {
     * data seen so far. Moment sums are exact decimals (order-
     * independent), so stream == batch bit-for-bit at any cut; the state
     * is six numbers regardless of corpus size. */
-  def welch(ev: DataFrame): DataFrame = {
-    val treated = col("user_id") % 2 === 1
-    def cnt(c: Column) = sum(when(c, 1L))
-    def s1(c: Column) = sum(when(c, DetMean.el10(col("value"))))
-    def s2(c: Column) =
-      sum(when(c, DetMean.el10(col("value") * col("value"))))
-    ev
-      .agg(cnt(!treated).as("n0"), cnt(treated).as("n1"),
-        s1(!treated).as("sy0"), s1(treated).as("sy1"),
-        s2(!treated).as("syy0"), s2(treated).as("syy1"))
-      .withColumn("m0", DetMean.mean6(col("sy0"), col("n0")))
-      .withColumn("m1", DetMean.mean6(col("sy1"), col("n1")))
-      .withColumn("v0", round((col("syy0").cast("double") -
-        col("n0") * col("m0") * col("m0")) / (col("n0") - 1), 6))
-      .withColumn("v1", round((col("syy1").cast("double") -
-        col("n1") * col("m1") * col("m1")) / (col("n1") - 1), 6))
+  def welch(ev: DataFrame): DataFrame =
+    armMoments(ev)
       .withColumn("se0", col("v0") / col("n0"))
       .withColumn("se1", col("v1") / col("n1"))
       .withColumn("t", round((col("m1") - col("m0")) /
@@ -1911,6 +1881,28 @@ object EventOps {
            col("se0") * col("se0") / (col("n0") - 1)), 2))
       .select(col("n0"), col("n1"), col("m0"), col("m1"),
         col("v0"), col("v1"), col("t"), col("df"))
+
+  /** Per-arm moments of `ev` grouped by `keys` (none: one global row),
+    * arms by user_id % 2 (1 = treated): counts `n0`/`n1`, exact decimal
+    * value sums `sy*` and square sums `syy*`, 6dp means `m*` and 6dp
+    * sample variances `v*`. The sums partial-aggregate map-side (and
+    * are the whole state of a streaming `ev`); the rest is projection. */
+  private def armMoments(ev: DataFrame, keys: Column*): DataFrame = {
+    val treated = col("user_id") % 2 === 1
+    def cnt(c: Column) = sum(when(c, 1L))
+    def s1(c: Column) = sum(when(c, DetMean.el10(col("value"))))
+    def s2(c: Column) =
+      sum(when(c, DetMean.el10(col("value") * col("value"))))
+    ev.groupBy(keys: _*)
+      .agg(cnt(!treated).as("n0"), cnt(treated).as("n1"),
+        s1(!treated).as("sy0"), s1(treated).as("sy1"),
+        s2(!treated).as("syy0"), s2(treated).as("syy1"))
+      .withColumn("m0", DetMean.mean6(col("sy0"), col("n0")))
+      .withColumn("m1", DetMean.mean6(col("sy1"), col("n1")))
+      .withColumn("v0", round((col("syy0").cast("double") -
+        col("n0") * col("m0") * col("m0")) / (col("n0") - 1), 6))
+      .withColumn("v1", round((col("syy1").cast("double") -
+        col("n1") * col("m1") * col("m1")) / (col("n1") - 1), 6))
   }
 
   /** `events_k_anonymity`'s quasi-identifier group sizes

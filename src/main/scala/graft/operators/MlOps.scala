@@ -22,6 +22,28 @@ object MlOps {
   private def bin3(p6: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.round(p6.cast("decimal(18,6)"), 3)
       .cast("double")
+
+  /** The calibration probe's logit: the first four embedding dims
+    * summed left to right, rounded to 6dp. */
+  private def probeLogit: Column = {
+    val v = col("embedding").cast("array<double>")
+    round(aggregate(slice(v, 1, 4), lit(0.0), (a, x) => a + x), 6)
+  }
+
+  /** The calibration probe's score: sigmoid of [[probeLogit]], 6dp. */
+  private def probeScore: Column =
+    round(lit(1.0) / (lit(1.0) + exp(-probeLogit)), 6)
+
+  /** The calibration probe's [[bin3]] score bins over `emb`, with
+    * `label >= 5` as the positive class: one row per bin `pb` with `n`,
+    * `npos` and the `extra` aggregates over the binned rows (`pb`,
+    * `pos`). The corpus collapses map-side to at most 1001 rows. */
+  private def probeBins(emb: DataFrame, extra: Column*): DataFrame =
+    emb.select(bin3(probeScore).as("pb"),
+        when(col("label") >= 5, 1L).otherwise(0L).as("pos"))
+      .groupBy(col("pb"))
+      .agg(count(lit(1)).as("n"), (sum(col("pos")).as("npos") +: extra): _*)
+
   import Tables._
   import VectorOps._
 
@@ -221,9 +243,7 @@ object MlOps {
     // and the divisions guard the empty-prediction edge with NULL, the
     // convention both engines share.
     "ml_pr_curve" -> { (s, dir) =>
-      val v = col("embedding").cast("array<double>")
-      val logit = round(aggregate(slice(v, 1, 4), lit(0.0), (a, x) => a + x), 6)
-      val p = round(lit(1.0) / (lit(1.0) + exp(-logit)), 6)
+      val p = probeScore
       val scored = embeddings(s, dir)
         .select(p.as("p"), when(col("label") >= 5, 1L).otherwise(0L).as("pos"))
         .select(col("p"), col("pos"),
@@ -250,14 +270,7 @@ object MlOps {
     // the tiny bin table. Completes the eval family: confusion matrix
     // (one point), PR curve (ten points), AUC (the integral).
     "ml_auc" -> { (s, dir) =>
-      val v = col("embedding").cast("array<double>")
-      val logit = round(aggregate(slice(v, 1, 4), lit(0.0), (a, x) => a + x), 6)
-      val p = round(lit(1.0) / (lit(1.0) + exp(-logit)), 6)
-      val bins = embeddings(s, dir)
-        .select(bin3(p).as("pb"),
-          when(col("label") >= 5, 1L).otherwise(0L).as("pos"))
-        .groupBy(col("pb"))
-        .agg(count(lit(1)).as("n"), sum(col("pos")).as("npos"))
+      val bins = probeBins(embeddings(s, dir))
       val w = org.apache.spark.sql.expressions.Window.orderBy(col("pb").desc)
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
       val tot = bins.agg(sum(col("n")).as("alln"), sum(col("npos")).as("allpos"))
@@ -290,9 +303,7 @@ object MlOps {
     // (≤ arms × 1001 rows), never the corpus.
     "ml_learning_curve" -> { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
-      val v = col("embedding").cast("array<double>")
-      val logit = round(aggregate(slice(v, 1, 4), lit(0.0), (a, x) => a + x), 6)
-      val p = round(lit(1.0) / (lit(1.0) + exp(-logit)), 6)
+      val p = probeScore
       val hx: Column => Column = a => when(a >= 97, a - 87).otherwise(a - 48)
       val hexAt: Int => Column = i =>
         hx(ascii(substring(md5(col("vec_id").cast("string")), i, 1)))
@@ -485,9 +496,7 @@ object MlOps {
     // as exact DECIMAL, so the whole diagram is engine-exact. One
     // projection + one ≤10-row aggregation.
     "ml_calibration_bins" -> { (s, dir) =>
-      val v = col("embedding").cast("array<double>")
-      val logit = round(aggregate(slice(v, 1, 4), lit(0.0), (a, x) => a + x), 6)
-      val p = round(lit(1.0) / (lit(1.0) + exp(-logit)), 6)
+      val p = probeScore
       embeddings(s, dir)
         .select(floor(p * 10).cast("long").as("bin"), p.as("p"),
           when(col("label") >= 5, 1L).otherwise(0L).as("pos"))
@@ -549,9 +558,7 @@ object MlOps {
     // BIGINT window sums over the bin table; each gain/lift divides
     // integers once at the end.
     "ml_lift_gain" -> { (s, dir) =>
-      val v = col("embedding").cast("array<double>")
-      val logit = round(aggregate(slice(v, 1, 4), lit(0.0), (a, x) => a + x), 6)
-      val p = round(lit(1.0) / (lit(1.0) + exp(-logit)), 6)
+      val p = probeScore
       val wc = org.apache.spark.sql.expressions.Window.orderBy(col("bucket").desc)
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
       val wt = org.apache.spark.sql.expressions.Window.partitionBy()
@@ -606,9 +613,7 @@ object MlOps {
     // partitioning). One corpus pass to 10 cells; the rest is bucket
     // arithmetic.
     "ml_woe_iv" -> { (s, dir) =>
-      val v = col("embedding").cast("array<double>")
-      val logit = round(aggregate(slice(v, 1, 4), lit(0.0), (a, x) => a + x), 6)
-      val p = round(lit(1.0) / (lit(1.0) + exp(-logit)), 6)
+      val p = probeScore
       val wt = org.apache.spark.sql.expressions.Window.partitionBy()
       embeddings(s, dir)
         .select(floor(p * 10).cast("long").as("bucket"),
@@ -638,9 +643,7 @@ object MlOps {
     // keeps the float work to a single expression), terms round to 10dp
     // and sum in exact decimal.
     "ml_mutual_info" -> { (s, dir) =>
-      val v = col("embedding").cast("array<double>")
-      val logit = round(aggregate(slice(v, 1, 4), lit(0.0), (a, x) => a + x), 6)
-      val p = round(lit(1.0) / (lit(1.0) + exp(-logit)), 6)
+      val p = probeScore
       val wx = org.apache.spark.sql.expressions.Window.partitionBy(col("bucket"))
       val wy = org.apache.spark.sql.expressions.Window.partitionBy(col("label"))
       val wt = org.apache.spark.sql.expressions.Window.partitionBy()
@@ -679,8 +682,16 @@ object MlOps {
       val wt = org.apache.spark.sql.expressions.Window.partitionBy()
       val d = documents(s, dir)
       val obs = d.groupBy(col("lang"), col("source")).agg(count(lit(1)).as("o"))
-      val grid = d.select(col("lang")).distinct()
-        .crossJoin(broadcast(d.select(col("source")).distinct()))
+      val langs = d.select(col("lang")).distinct()
+      val sources = d.select(col("source")).distinct()
+      val grid = langs.crossJoin(broadcast(sources))
+      // level counts from the level tables, not two countDistincts over
+      // the grid: Spark's rewrite of two distinct aggregates orders
+      // their Expand groups by expression-id hash, so the plan text
+      // changed from run to run. count(col) skips a NULL level as
+      // countDistinct does.
+      val levels = langs.agg(count(col("lang")).as("rl"))
+        .crossJoin(sources.agg(count(col("source")).as("rs")))
       grid.join(obs, Seq("lang", "source"), "left")
         .withColumn("o", coalesce(col("o"), lit(0L)))
         .withColumn("nl", sum(col("o")).over(wl))
@@ -692,14 +703,12 @@ object MlOps {
           round((col("o") - col("e")) * (col("o") - col("e")) / col("e"), 10)
             .cast("decimal(20,10)"))
         .agg(round(sum(col("term")), 6).cast("double").as("chi2"),
-          ((countDistinct(col("lang")) - 1) *
-            (countDistinct(col("source")) - 1)).as("dof"),
           count(lit(1)).as("n_cells"),
-          first(col("nn")).as("nn"),
-          least(countDistinct(col("lang")),
-            countDistinct(col("source"))).minus(1).as("mindim"))
-        .select(col("chi2"), col("dof"),
-          round(sqrt(col("chi2") / (col("nn") * col("mindim"))), 6)
+          first(col("nn")).as("nn"))
+        .crossJoin(broadcast(levels))
+        .select(col("chi2"), ((col("rl") - 1) * (col("rs") - 1)).as("dof"),
+          round(sqrt(col("chi2") /
+            (col("nn") * (least(col("rl"), col("rs")) - 1))), 6)
             .as("cramers_v"),
           col("n_cells"))
     },
@@ -952,10 +961,10 @@ object MlOps {
     // is miscalibration (bin forecast vs bin outcome rate), resolution
     // is how far bin outcome rates spread from the base rate (the
     // discriminative signal), and uncertainty is the irreducible
-    // ȳ(1−ȳ). Same score/label/bin setup as ml_auc and
-    // ml_calibration_bins; the Brier here uses the bin-mean forecast so
-    // the three-term identity is EXACT, and all four numbers come out
-    // of one row — the identity itself rides the hash gate.
+    // ȳ(1−ȳ). Score bins from [[probeBins]]; the Brier here uses the
+    // bin-mean forecast so the three-term identity is EXACT, and all
+    // four numbers come out of one row — the identity itself rides the
+    // hash gate.
     //
     // Scale shape: the corpus collapses map-side to ≤10³ score bins
     // carrying (n, npos, Σp); every term is then a decimal-sum fold
@@ -963,15 +972,7 @@ object MlOps {
     // means one division rounded 10dp; per-bin terms exact products of
     // those rounded 10dp into decimal sums; finals at 6dp.
     "ml_brier_decomposition" -> { (s, dir) =>
-      val v = col("embedding").cast("array<double>")
-      val logit = round(aggregate(slice(v, 1, 4), lit(0.0), (a, x) => a + x), 6)
-      val p = round(lit(1.0) / (lit(1.0) + exp(-logit)), 6)
-      val bins = embeddings(s, dir)
-        .select(bin3(p).as("pb"),
-          when(col("label") >= 5, 1L).otherwise(0L).as("pos"))
-        .groupBy(col("pb"))
-        .agg(count(lit(1)).as("n"), sum(col("pos")).as("npos"),
-          sum(DetMean.el10(col("pb"))).as("sp"))
+      val bins = probeBins(embeddings(s, dir), sum(DetMean.el10(col("pb"))).as("sp"))
       val base = bins.agg(sum(col("n")).as("nt"), sum(col("npos")).as("post"))
         .withColumn("ybar", round(col("post").cast("double") / col("nt"), 10))
       // per-bin terms multiply EXACTLY in decimal domain: pk/yk/ybar are
@@ -1003,8 +1004,8 @@ object MlOps {
     // better" call: AUC as the mean of per-positive placement values
     // V10 (share of negatives scored below, ties at ½ — the midrank
     // convention), SE² = S10/m + S01/n from the placement variances.
-    // Same score/label setup as ml_auc (sigmoid of the first 4
-    // embedding dims, 3dp score bins, label ≥ 5), so the two queries
+    // The [[probeBins]] of ml_auc (sigmoid of the first 4 embedding
+    // dims, 3dp score bins, label ≥ 5), so the two queries
     // together are the headline metric AND its uncertainty.
     //
     // Scale shape: placements come from the BINNED score table — the
@@ -1016,18 +1017,11 @@ object MlOps {
     // division rounded 10dp, count-weighted moments as exact decimal
     // sums, final auc/se at 6dp.
     "ml_auc_delong" -> { (s, dir) =>
-      val v = col("embedding").cast("array<double>")
-      val logit = round(aggregate(slice(v, 1, 4), lit(0.0), (a, x) => a + x), 6)
-      val p = round(lit(1.0) / (lit(1.0) + exp(-logit)), 6)
       val uA = org.apache.spark.sql.expressions.Window.orderBy(col("pb"))
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
       val uD = org.apache.spark.sql.expressions.Window.orderBy(col("pb").desc)
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-      val bins = embeddings(s, dir)
-        .select(bin3(p).as("pb"),
-          when(col("label") >= 5, 1L).otherwise(0L).as("pos"))
-        .groupBy(col("pb"))
-        .agg(count(lit(1)).as("n"), sum(col("pos")).as("npos"))
+      val bins = probeBins(embeddings(s, dir))
         .withColumn("nneg", col("n") - col("npos"))
       val tot = bins.agg(sum(col("npos")).as("m"), sum(col("nneg")).as("nn"))
       val pl = bins.crossJoin(broadcast(tot))
@@ -1074,14 +1068,7 @@ object MlOps {
     // text_zipf_slope discipline: 10dp terms, exact decimal sums,
     // closed form, finals 6dp).
     "ml_calibration_slope" -> { (s, dir) =>
-      val v = col("embedding").cast("array<double>")
-      val logit = round(aggregate(slice(v, 1, 4), lit(0.0), (a, x) => a + x), 6)
-      val p = round(lit(1.0) / (lit(1.0) + exp(-logit)), 6)
-      val bins = embeddings(s, dir)
-        .select(bin3(p).as("pb"),
-          when(col("label") >= 5, 1L).otherwise(0L).as("pos"))
-        .groupBy(col("pb"))
-        .agg(count(lit(1)).as("n"), sum(col("pos")).as("npos"))
+      val bins = probeBins(embeddings(s, dir))
         .withColumn("yk", round(col("npos").cast("double") / col("n"), 10))
       def dsum(c: org.apache.spark.sql.Column) =
         sum(round(c, 10).cast("decimal(28,10)")).cast("double")
@@ -1115,9 +1102,7 @@ object MlOps {
     // Integer counts; each rate divides once and rounds 6dp; gaps are
     // differences of already-rounded rates.
     "ml_fairness_audit" -> { (s, dir) =>
-      val v = col("embedding").cast("array<double>")
-      val logit = round(aggregate(slice(v, 1, 4), lit(0.0), (a, x) => a + x), 6)
-      val pred = logit > 0
+      val pred = probeLogit > 0
       val truth = col("label") >= 5
       val per = embeddings(s, dir)
         .groupBy((col("vec_id") % 3).as("cohort"))
@@ -1234,16 +1219,9 @@ object MlOps {
     // once and round 10dp; AP terms round 10dp into an exact decimal
     // sum; finals at 6dp.
     "ml_pr_auc" -> { (s, dir) =>
-      val v = col("embedding").cast("array<double>")
-      val logit = round(aggregate(slice(v, 1, 4), lit(0.0), (a, x) => a + x), 6)
-      val p = round(lit(1.0) / (lit(1.0) + exp(-logit)), 6)
       val wD = org.apache.spark.sql.expressions.Window.orderBy(col("pb").desc)
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      val bins = embeddings(s, dir)
-        .select(bin3(p).as("pb"),
-          when(col("label") >= 5, 1L).otherwise(0L).as("pos"))
-        .groupBy(col("pb"))
-        .agg(count(lit(1)).as("n"), sum(col("pos")).as("npos"))
+      val bins = probeBins(embeddings(s, dir))
         // 2 consumers (totals + curve): pin ONE corpus pass
         .localCheckpoint()
       val tot = bins.agg(sum(col("npos")).as("m"),
@@ -2298,31 +2276,48 @@ object MlOps {
   */
 object MultimodalOps {
   import Tables._
+  import org.apache.spark.sql.{Encoders, Row}
+  import org.apache.spark.sql.types._
+  import graft.multimodal.Multimodal.{ImageCodec, WavCodec}
 
   /** Per synthetic image: 64-bit average-hash + 56-bit difference-hash
     * (REAL PNG encode → ImageIO decode → integer-gray 8×8 crop), shared
     * by mm_image_phash and mm_phash_neardup; the oracles replay the
     * pixel formulas in SQL. */
-  private def imagePhashes(s: SparkSession, dir: String): DataFrame = {
-    import graft.multimodal.Multimodal.ImageCodec
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("phash", org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("dhash", org.apache.spark.sql.types.StringType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
+  private def imagePhashes(s: SparkSession, dir: String): DataFrame =
+    synthRows(s, dir, "doc_id" -> LongType, "phash" -> StringType,
+        "dhash" -> StringType) { id =>
+      val png = synthPng(id)
+      Iterator.single(Row(id, ImageCodec.averageHash8x8(png).get,
+        ImageCodec.differenceHash8x8(png).get))
+    }
+
+  /** Rows of the synthetic media frame: `rows` maps each doc_id < 200
+    * to its output rows, with the (name, type) `fields` as the non-null
+    * schema. The codec work runs executor-side in one mapPartitions, so
+    * payloads never reach the driver. */
+  private def synthRows(s: SparkSession, dir: String, fields: (String, DataType)*)(
+      rows: Long => Iterator[Row]): DataFrame = {
+    val schema = StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
     documents(s, dir)
       .select(col("doc_id")).filter(col("doc_id") < 200)
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getLong(0)
-          val w = 8 + (id % 57).toInt
-          val h = 8 + (id % 41).toInt
-          val png = ImageCodec.encodePng(w, h, seed = id, alpha = id % 2 == 1)
-          org.apache.spark.sql.Row(id, ImageCodec.averageHash8x8(png).get,
-            ImageCodec.differenceHash8x8(png).get)
-        }
-      }(enc)
+      .mapPartitions(_.flatMap(r => rows(r.getLong(0))))(Encoders.row(schema))
   }
+
+  /** The synthetic PNG of doc `id`: (8 + id % 57) × (8 + id % 41)
+    * pixels, alpha on odd ids — the formulas the oracles replay. */
+  private def synthPng(id: Long): Array[Byte] =
+    ImageCodec.encodePng(8 + (id % 57).toInt, 8 + (id % 41).toInt, seed = id,
+      alpha = id % 2 == 1)
+
+  private val WavRates = Array(8000, 16000, 44100)
+
+  /** The synthetic 16-bit PCM WAV of doc `id`: rate WavRates(id % 3),
+    * 1 + id % 2 channels, 100 + id % 400 sample frames of LCG noise
+    * seeded by `id` — the formulas the oracles replay. */
+  private def synthWav(id: Long): Array[Byte] =
+    WavCodec.encodeWav(WavRates((id % 3).toInt), 1 + (id % 2).toInt,
+      100 + (id % 400).toInt, seed = id)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // treat text as an opaque binary payload; deterministic fake "decode"
@@ -2350,31 +2345,16 @@ object MultimodalOps {
     // fails. Capped at 200 docs: the value is codec coverage, not volume
     // (the batch plumbing is load-tested by mm_frame_stats).
     "mm_image_meta" -> { (s, dir) =>
-      import graft.multimodal.Multimodal.ImageCodec
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("width", org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("height", org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("channels", org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("hdr_width", org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("hdr_height", org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("hdr_channels", org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("px00", org.apache.spark.sql.types.IntegerType, nullable = false)))
-      val enc = org.apache.spark.sql.Encoders.row(outSchema)
-      documents(s, dir)
-        .select(col("doc_id")).filter(col("doc_id") < 200)
-        .mapPartitions { rows =>
-          rows.map { r =>
-            val id = r.getLong(0)
-            val w = 8 + (id % 57).toInt
-            val h = 8 + (id % 41).toInt
-            val png = ImageCodec.encodePng(w, h, seed = id, alpha = id % 2 == 1)
-            val (dw, dh, dc) = ImageCodec.decodeMeta(png).get
-            val (hw, hh, hc) = ImageCodec.parsePngHeader(png).get
-            val px = ImageCodec.decodePixel(png, 0, 0).get
-            org.apache.spark.sql.Row(id, dw, dh, dc, hw, hh, hc, px)
-          }
-        }(enc)
+      synthRows(s, dir, "doc_id" -> LongType, "width" -> IntegerType,
+          "height" -> IntegerType, "channels" -> IntegerType,
+          "hdr_width" -> IntegerType, "hdr_height" -> IntegerType,
+          "hdr_channels" -> IntegerType, "px00" -> IntegerType) { id =>
+        val png = synthPng(id)
+        val (dw, dh, dc) = ImageCodec.decodeMeta(png).get
+        val (hw, hh, hc) = ImageCodec.parsePngHeader(png).get
+        val px = ImageCodec.decodePixel(png, 0, 0).get
+        Iterator.single(Row(id, dw, dh, dc, hw, hh, hc, px))
+      }
         .orderBy(col("doc_id"))
     },
     // audio sibling of mm_image_meta: per doc, synthesize a 16-bit PCM
@@ -2386,29 +2366,14 @@ object MultimodalOps {
     // row. Same executor-pure mapPartitions shape as the image path:
     // payloads never reach the driver.
     "mm_audio_meta" -> { (s, dir) =>
-      import graft.multimodal.Multimodal.WavCodec
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("sample_rate", org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("channels", org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("bits", org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("n_samples", org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("duration_ms", org.apache.spark.sql.types.LongType, nullable = false)))
-      val enc = org.apache.spark.sql.Encoders.row(outSchema)
-      documents(s, dir)
-        .select(col("doc_id")).filter(col("doc_id") < 200)
-        .mapPartitions { rows =>
-          val rates = Array(8000, 16000, 44100)
-          rows.map { r =>
-            val id = r.getLong(0)
-            val wav = WavCodec.encodeWav(
-              rates((id % 3).toInt), 1 + (id % 2).toInt,
-              100 + (id % 400).toInt, seed = id)
-            val (rate, ch, bits, n) = WavCodec.parseWavHeader(wav).get
-            val dur = WavCodec.durationMs(wav).get
-            org.apache.spark.sql.Row(id, rate, ch, bits, n, dur)
-          }
-        }(enc)
+      synthRows(s, dir, "doc_id" -> LongType, "sample_rate" -> IntegerType,
+          "channels" -> IntegerType, "bits" -> IntegerType,
+          "n_samples" -> LongType, "duration_ms" -> LongType) { id =>
+        val wav = synthWav(id)
+        val (rate, ch, bits, n) = WavCodec.parseWavHeader(wav).get
+        val dur = WavCodec.durationMs(wav).get
+        Iterator.single(Row(id, rate, ch, bits, n, dur))
+      }
         .orderBy(col("doc_id"))
     },
     // Perceptual-hash image dedup: aHash (64-bit average hash) computed
@@ -2479,33 +2444,17 @@ object MultimodalOps {
     // the 8×8 crop mm_image_phash checks. Per-row decode, no shuffle
     // until the 16-blocks-per-doc table groups.
     "mm_image_pool" -> { (s, dir) =>
-      import graft.multimodal.Multimodal.ImageCodec
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("by", org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("bx", org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("gray_sum", org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("n_px", org.apache.spark.sql.types.LongType, nullable = false)))
-      val enc = org.apache.spark.sql.Encoders.row(outSchema)
-      documents(s, dir)
-        .select(col("doc_id")).filter(col("doc_id") < 200)
-        .mapPartitions { rows =>
-          rows.flatMap { r =>
-            val id = r.getLong(0)
-            val png = ImageCodec.encodePng(
-              8 + (id % 57).toInt, 8 + (id % 41).toInt, seed = id,
-              alpha = id % 2 == 1)
-            ImageCodec.meanPoolBlocks(png, 4, 4).get.iterator.zipWithIndex.map {
-              case ((sum, n), i) =>
-                org.apache.spark.sql.Row(id, (i / 4).toLong, (i % 4).toLong, sum, n.toLong)
-            }
-          }
-        }(enc)
+      synthRows(s, dir, "doc_id" -> LongType, "by" -> LongType,
+          "bx" -> LongType, "gray_sum" -> LongType, "n_px" -> LongType) { id =>
+        ImageCodec.meanPoolBlocks(synthPng(id), 4, 4).get.iterator.zipWithIndex.map {
+          case ((sum, n), i) => Row(id, (i / 4).toLong, (i % 4).toLong, sum, n.toLong)
+        }
+      }
         .orderBy(col("doc_id"), col("by"), col("bx"))
     },
     // Sample-level audio proof — the WAV twin of mm_image_phash's
-    // pixel-level check: per doc, synthesize the same PCM WAV as
-    // mm_audio_meta, then read the first 8 SAMPLES back through the
+    // pixel-level check: per doc, synthesize its [[synthWav]] PCM WAV,
+    // then read the first 8 SAMPLES back through the
     // chunk-walking parser (WavCodec.readSamples — data located by
     // chunk walk, not fixed offsets) and emit signal stats (leading
     // samples, peak, energy). The generator's sample stream is an LCG
@@ -2514,28 +2463,13 @@ object MultimodalOps {
     // returns the true signal bytes, not plausible ones. Executor-pure
     // mapPartitions; payloads never reach the driver.
     "mm_audio_samples" -> { (s, dir) =>
-      import graft.multimodal.Multimodal.WavCodec
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("s1", org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("s2", org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("peak8", org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("energy8", org.apache.spark.sql.types.LongType, nullable = false)))
-      val enc = org.apache.spark.sql.Encoders.row(outSchema)
-      documents(s, dir)
-        .select(col("doc_id")).filter(col("doc_id") < 200)
-        .mapPartitions { rows =>
-          val rates = Array(8000, 16000, 44100)
-          rows.map { r =>
-            val id = r.getLong(0)
-            val wav = WavCodec.encodeWav(
-              rates((id % 3).toInt), 1 + (id % 2).toInt,
-              100 + (id % 400).toInt, seed = id)
-            val sm = WavCodec.readSamples(wav, 8).get
-            org.apache.spark.sql.Row(id, sm(0), sm(1),
-              sm.map(math.abs).max, sm.map(v => v.toLong * v).sum)
-          }
-        }(enc)
+      synthRows(s, dir, "doc_id" -> LongType, "s1" -> IntegerType,
+          "s2" -> IntegerType, "peak8" -> IntegerType,
+          "energy8" -> LongType) { id =>
+        val sm = WavCodec.readSamples(synthWav(id), 8).get
+        Iterator.single(Row(id, sm(0), sm(1),
+          sm.map(math.abs).max, sm.map(v => v.toLong * v).sum))
+      }
         .orderBy(col("doc_id"))
     },
     // Audio FINGERPRINT + match — the audio twin of
@@ -2564,34 +2498,18 @@ object MultimodalOps {
     // stays a 64-level recursive CTE. Scale: per-row codec work, one
     // per-clip window over 8 rows — embarrassingly parallel.
     "mm_audio_vad" -> { (s, dir) =>
-      import graft.multimodal.Multimodal.WavCodec
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("frame",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("energy",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      val enc = org.apache.spark.sql.Encoders.row(outSchema)
-      val frames = documents(s, dir)
-        .select(col("doc_id")).filter(col("doc_id") < 200)
-        .mapPartitions { rows =>
-          val rates = Array(8000, 16000, 44100)
-          rows.flatMap { r =>
-            val id = r.getLong(0)
-            val wav = WavCodec.encodeWav(rates((id % 3).toInt),
-              1 + (id % 2).toInt, 100 + (id % 400).toInt, seed = id)
-            val sm = WavCodec.readSamples(wav, 64).get
-            (0 until 8).map { f =>
-              var e = 0L
-              var i = 0
-              while (i < 8) {
-                val s0 = sm(f * 8 + i).toLong; e += s0 * s0; i += 1
-              }
-              org.apache.spark.sql.Row(id, f, e)
-            }
+      val frames = synthRows(s, dir, "doc_id" -> LongType,
+          "frame" -> IntegerType, "energy" -> LongType) { id =>
+        val sm = WavCodec.readSamples(synthWav(id), 64).get
+        Iterator.tabulate(8) { f =>
+          var e = 0L
+          var i = 0
+          while (i < 8) {
+            val s0 = sm(f * 8 + i).toLong; e += s0 * s0; i += 1
           }
-        }(enc)
+          Row(id, f, e)
+        }
+      }
       val w = org.apache.spark.sql.expressions.Window
       val wDoc = w.partitionBy(col("doc_id"))
       val wOrd = w.partitionBy(col("doc_id")).orderBy(col("frame"))
@@ -2617,32 +2535,16 @@ object MultimodalOps {
         .orderBy(col("doc_id"))
     },
     "mm_audio_fingerprint" -> { (s, dir) =>
-      import graft.multimodal.Multimodal.WavCodec
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("fp",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      val enc = org.apache.spark.sql.Encoders.row(outSchema)
-      val fps = documents(s, dir)
-        .select(col("doc_id")).filter(col("doc_id") < 200)
-        .mapPartitions { rows =>
-          val rates = Array(8000, 16000, 44100)
-          rows.map { r =>
-            val id = r.getLong(0)
-            val wav = WavCodec.encodeWav(
-              rates((id % 3).toInt), 1 + (id % 2).toInt,
-              100 + (id % 400).toInt, seed = id)
-            val sm = WavCodec.readSamples(wav, 16).get
-            var fp = 0L
-            var i = 1
-            while (i < 16) {
-              if (sm(i) > sm(i - 1)) fp |= 1L << (i - 1)
-              i += 1
-            }
-            org.apache.spark.sql.Row(id, fp)
-          }
-        }(enc)
+      val fps = synthRows(s, dir, "doc_id" -> LongType, "fp" -> LongType) { id =>
+        val sm = WavCodec.readSamples(synthWav(id), 16).get
+        var fp = 0L
+        var i = 1
+        while (i < 16) {
+          if (sm(i) > sm(i - 1)) fp |= 1L << (i - 1)
+          i += 1
+        }
+        Iterator.single(Row(id, fp))
+      }
       val groups = fps.groupBy(col("fp")).agg(count(lit(1)).as("n_matching"))
       fps.join(groups, Seq("fp"))
         .select(col("doc_id"), col("fp"), col("n_matching"))

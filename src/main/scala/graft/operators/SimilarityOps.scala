@@ -29,6 +29,35 @@ object SimilarityOps {
     * second-moment shape; the plan is dim-count-generic. */
   private val CovDims = 6
 
+  /** The second-moment row of the leading [[CovDims]] embedding dims,
+    * unpivoted to the upper triangle: one row per (i ≤ j) with `n`, the
+    * cross-product sum `sxy` and the per-dim sums `sx`, `sy`. The corpus
+    * collapses in ONE partial-aggregated pass to d + d(d+1)/2 + 1
+    * scalar sums; components round to 6dp and accumulate as exact
+    * decimals, so the sums are order-independent under any
+    * partitioning. Read by [[covOf]]. */
+  private def covMoments(emb: DataFrame): DataFrame = {
+    val d = CovDims
+    val comps = (1 to d).map(i =>
+      round(element_at(col("embedding").cast("array<double>"), i), 6)
+        .cast("decimal(12,6)").as(s"x$i"))
+    val sums = (1 to d).map(i => sum(col(s"x$i")).as(s"s$i"))
+    val prods = for { i <- 1 to d; j <- i to d }
+      yield sum(col(s"x$i") * col(s"x$j")).as(s"p${i}_$j")
+    val pairs = for { i <- 1 to d; j <- i to d } yield (i, j)
+    val stackSql = pairs.map { case (i, j) =>
+      s"CAST($i AS BIGINT), CAST($j AS BIGINT), " +
+        s"CAST(p${i}_$j AS DOUBLE), CAST(s$i AS DOUBLE), CAST(s$j AS DOUBLE)"
+    }.mkString(s"stack(${pairs.size}, ", ", ", ") AS (i, j, sxy, sx, sy)")
+    emb.select(comps: _*)
+      .agg(count(lit(1)).as("n"), (sums ++ prods): _*)
+      .select(col("n"), expr(stackSql))
+  }
+
+  /** Sample covariance (6dp) of one [[covMoments]] row. */
+  private def covOf: Column =
+    round((col("sxy") - col("sx") * col("sy") / col("n")) / (col("n") - 1), 6)
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // exact top-10 cosine neighbors of probe vec_id=1 (native fused
     // cosine Expression: one pass, zero allocation, codegen'd)
@@ -80,29 +109,13 @@ object SimilarityOps {
     // decimals (order-independent under any partitioning); the final
     // cov formula runs in f64 on already-exact sums in both engines.
     "emb_covariance" -> { (s, dir) =>
-      val d = CovDims
-      val comps = (1 to d).map(i =>
-        round(element_at(col("embedding").cast("array<double>"), i), 6)
-          .cast("decimal(12,6)").as(s"x$i"))
-      val sums = (1 to d).map(i => sum(col(s"x$i")).as(s"s$i"))
-      val prods = for { i <- 1 to d; j <- i to d }
-        yield sum(col(s"x$i") * col(s"x$j")).as(s"p${i}_$j")
-      val pairs = for { i <- 1 to d; j <- i to d } yield (i, j)
-      val stackSql = pairs.map { case (i, j) =>
-        s"CAST($i AS BIGINT), CAST($j AS BIGINT), " +
-          s"CAST(p${i}_$j AS DOUBLE), CAST(s$i AS DOUBLE), CAST(s$j AS DOUBLE)"
-      }.mkString(s"stack(${pairs.size}, ", ", ", ") AS (i, j, sxy, sx, sy)")
-      embeddings(s, dir).select(comps: _*)
-        .agg(count(lit(1)).as("n"), (sums ++ prods): _*)
-        .select(col("n"), expr(stackSql))
-        .select(col("i"), col("j"),
-          round((col("sxy") - col("sx") * col("sy") / col("n")) /
-            (col("n") - 1), 6).as("cov"), col("n"))
+      covMoments(embeddings(s, dir))
+        .select(col("i"), col("j"), covOf.as("cov"), col("n"))
         .orderBy(col("i"), col("j"))
     },
     // Top principal component by power iteration — PCA's first step, run
     // ENTIRELY in-plan and oracle-replayable: the corpus collapses once
-    // to the emb_covariance moment row (localCheckpointed — exactly ONE
+    // to the [[covMoments]] triangle (localCheckpointed — exactly ONE
     // corpus pass feeds all iterations), the 6×6 covariance unfolds to a
     // 36-row matrix table, and three unrolled multiply-normalize rounds
     // run as joins over that dimension-sized table (the pagerank-oracle
@@ -115,23 +128,8 @@ object SimilarityOps {
     // corpus cost stays the single moment pass.
     "emb_pca_power" -> { (s, dir) =>
       val d = CovDims
-      val comps = (1 to d).map(i =>
-        round(element_at(col("embedding").cast("array<double>"), i), 6)
-          .cast("decimal(12,6)").as(s"x$i"))
-      val sums = (1 to d).map(i => sum(col(s"x$i")).as(s"s$i"))
-      val prods = for { i <- 1 to d; j <- i to d }
-        yield sum(col(s"x$i") * col(s"x$j")).as(s"p${i}_$j")
-      val pairs = for { i <- 1 to d; j <- i to d } yield (i, j)
-      val stackSql = pairs.map { case (i, j) =>
-        s"CAST($i AS BIGINT), CAST($j AS BIGINT), " +
-          s"CAST(p${i}_$j AS DOUBLE), CAST(s$i AS DOUBLE), CAST(s$j AS DOUBLE)"
-      }.mkString(s"stack(${pairs.size}, ", ", ", ") AS (i, j, sxy, sx, sy)")
-      val tri = embeddings(s, dir).select(comps: _*)
-        .agg(count(lit(1)).as("n"), (sums ++ prods): _*)
-        .select(col("n"), expr(stackSql))
-        .select(col("i"), col("j"),
-          round((col("sxy") - col("sx") * col("sy") / col("n")) /
-            (col("n") - 1), 6).as("c"))
+      val tri = covMoments(embeddings(s, dir))
+        .select(col("i"), col("j"), covOf.as("c"))
       val cov = tri.union(tri.filter(col("i") =!= col("j"))
         .select(col("j").as("i"), col("i").as("j"), col("c")))
         .localCheckpoint()
@@ -702,21 +700,7 @@ object SimilarityOps {
     // a pure scan — the memory win (64 floats → PqM bytes) is the point.
     "emb_pq_error" -> { (s, dir) =>
       val e = vectors(s, dir)
-      val seeds = e.filter(col("vec_id") < PqK).collect().sortBy(_.getLong(0))
-      val codebook = array((for {
-        m <- 1 to PqM; r <- seeds
-      } yield struct(lit(m).as("m"), lit(r.getLong(0)).as("code"),
-        typedLit(r.getSeq[Double](1).slice((m - 1) * 8, m * 8)).as("cv")))
-        .toIndexedSeq: _*)
-      val subs = explode(array((1 to PqM).map(m =>
-        struct(lit(m.toLong).as("m"),
-          slice(col("v"), (m - 1) * 8 + 1, 8).as("sub"))): _*))
-      e.select(col("vec_id"), subs.as("s"))
-        .select(col("vec_id"), col("s.m").as("m"), col("s.sub").as("sub"))
-        .withColumn("best", array_min(transform(
-          filter(codebook, c => c.getField("m") === col("m")),
-          c => struct(round(sqDist(col("sub"), c.getField("cv")), 6).as("d"),
-            c.getField("code").as("code")))))
+      pqEncode(e, pqCodebook(e))
         .groupBy(col("m"), col("best.code").as("code"))
         .agg(count(lit(1)).as("n_subvecs"),
           DetMean.mean6(sum(DetMean.el10(col("best.d"))),
@@ -825,26 +809,11 @@ object SimilarityOps {
     // twin is SimilarityLib.pqTopKRerank (PqSpec).
     "ann_pq_rerank" -> { (s, dir) =>
       val e = vectors(s, dir)
-      val seeds = e.filter(col("vec_id") < PqK).collect().sortBy(_.getLong(0))
-      val codebook = array((for {
-        m <- 1 to PqM; r <- seeds
-      } yield struct(lit(m).as("m"), lit(r.getLong(0)).as("code"),
-        typedLit(r.getSeq[Double](1).slice((m - 1) * 8, m * 8)).as("cv")))
-        .toIndexedSeq: _*)
-      val subs = explode(array((1 to PqM).map(m =>
-        struct(lit(m.toLong).as("m"),
-          slice(col("v"), (m - 1) * 8 + 1, 8).as("sub"))): _*))
-      val enc = e.select(col("vec_id"), subs.as("s"))
-        .select(col("vec_id"), col("s.m").as("m"), col("s.sub").as("sub"))
-        .withColumn("best", array_min(transform(
-          filter(codebook, c => c.getField("m") === col("m")),
-          c => struct(round(sqDist(col("sub"), c.getField("cv")), 6).as("d"),
-            c.getField("code").as("code")))))
+      val codebook = pqCodebook(e)
+      val enc = pqEncode(e, codebook)
         .select(col("vec_id"), col("m"), col("best.code").as("code"))
       val probe = e.filter(col("vec_id") === PROBE_ID).select(col("v").as("p"))
-      val psubs = probe.select(explode(array((1 to PqM).map(m =>
-          struct(lit(m.toLong).as("m"),
-            slice(col("p"), (m - 1) * 8 + 1, 8).as("psub"))): _*)).as("s"))
+      val psubs = probe.select(pqSubs(col("p"), "psub").as("s"))
         .select(col("s.m").as("m"), col("s.psub").as("psub"))
       val dt = psubs
         .select(col("m"), col("psub"),
@@ -1569,6 +1538,38 @@ object SimilarityOps {
   private val KmK = 8
   private val PqM = 8
   private val PqK = 4
+
+  /** The literal PQ codebook: for each of the [[PqM]] 8-dim subspaces,
+    * the matching sub-slice of each of the [[PqK]] seed vectors
+    * (vec_id < PqK), as `(m, code, cv)` structs. Collects PqK rows of
+    * `e` (`vec_id`, `v`) to the driver. */
+  private def pqCodebook(e: DataFrame): Column = {
+    val seeds = e.filter(col("vec_id") < PqK).collect().sortBy(_.getLong(0))
+    array((for {
+      m <- 1 to PqM; r <- seeds
+    } yield struct(lit(m).as("m"), lit(r.getLong(0)).as("code"),
+      typedLit(r.getSeq[Double](1).slice((m - 1) * 8, m * 8)).as("cv")))
+      .toIndexedSeq: _*)
+  }
+
+  /** Explode of the [[PqM]] 8-dim sub-vectors of `v`, as `(m, <sub>)`
+    * structs. */
+  private def pqSubs(v: Column, sub: String): Column =
+    explode(array((1 to PqM).map(m =>
+      struct(lit(m.toLong).as("m"),
+        slice(v, (m - 1) * 8 + 1, 8).as(sub))): _*))
+
+  /** PQ encode of `e` (`vec_id`, `v`): one row per (vec_id, subspace m)
+    * with the sub-vector `sub` and `best` = (6dp squared distance `d`,
+    * `code`) of its nearest `codebook` entry in that subspace, ties to
+    * the smaller code. Row-local: no shuffle. */
+  private def pqEncode(e: DataFrame, codebook: Column): DataFrame =
+    e.select(col("vec_id"), pqSubs(col("v"), "sub").as("s"))
+      .select(col("vec_id"), col("s.m").as("m"), col("s.sub").as("sub"))
+      .withColumn("best", array_min(transform(
+        filter(codebook, c => c.getField("m") === col("m")),
+        c => struct(round(sqDist(col("sub"), c.getField("cv")), 6).as("d"),
+          c.getField("code").as("code")))))
 
   /** Squared euclidean distance as a left-fold — deterministic element
     * order on both engines (mirrors [[VectorOps.dot]]). */

@@ -105,6 +105,117 @@ object TextOps {
   def normalizeText(text: Column): Column =
     trim(regexp_replace(regexp_replace(lower(text), "[^ -~]", ""), " +", " "))
 
+  /** Word bigrams of `docs` as (doc_id, w1, w2), in no order. The text
+    * splits ONCE into a projected column (an inline `split` re-evaluates
+    * for every element_at inside a lambda: measured 2.3 s → 0.5 s for
+    * the gram scan alone at sf0.1), then the POSITION explodes and the
+    * pair projects in codegen. The under-split single-file scan spreads
+    * first (no-op on properly split inputs — Tables.spread). */
+  private def bigrams(docs: DataFrame): DataFrame =
+    Tables.spread(docs, col("doc_id"))
+      .withColumn("w", split(col("text"), " "))
+      .filter(size(col("w")) >= 2)
+      .select(col("doc_id"), col("w"),
+        explode(sequence(lit(1), size(col("w")) - 1)).as("i"))
+      .select(col("doc_id"), element_at(col("w"), col("i")).as("w1"),
+        element_at(col("w"), col("i") + 1).as("w2"))
+
+  /** BPE merge candidates of a (word, wc) vocabulary: every adjacent
+    * character pair of each word of ≥ 2 chars, weighted by its count,
+    * as (pair, n). Vocabulary-sized, never corpus-sized. */
+  private def mergePairs(vocab: DataFrame): DataFrame =
+    vocab.filter(length(col("word")) >= 2)
+      .select(col("wc"), explode(transform(
+        sequence(lit(1), length(col("word")) - 1),
+        i => concat(col("word").substr(i, lit(1)),
+          col("word").substr(i + 1, lit(1))))).as("pair"))
+      .groupBy(col("pair")).agg(sum(col("wc")).as("n"))
+
+  /** The 20 most frequent merge candidates of (pair, n), ranked `rk`
+    * by count desc then pair (TakeOrderedAndProject, no global sort).
+    * Callers add their own ordering. */
+  private def topMerges(pairs: DataFrame): DataFrame =
+    pairs.orderBy(col("n").desc, col("pair")).limit(20)
+      .withColumn("rk", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .orderBy(col("n").desc, col("pair"))).cast("long"))
+      .select(col("rk"), col("pair"), col("n"))
+
+  /** Per-language relative quality gate over `docs`: the threshold is
+    * `percentile`, an aggregate over the [[qualityScore]] column `score`
+    * within one language, broadcast back onto the scored rows. One row
+    * per `lang` with `n_docs`, `n_kept` (score ≥ threshold),
+    * `threshold` and `avg_kept`; callers add their own ordering. */
+  private def qualityGate(docs: DataFrame, percentile: Column): DataFrame = {
+    val scored = docs.select(col("lang"), qualityScore(col("text")).as("score"))
+    val thr = scored.groupBy(col("lang").as("tl")).agg(percentile.as("thr"))
+    val kept = col("score") >= col("thr")
+    scored.join(broadcast(thr), col("lang") === col("tl"))
+      .groupBy(col("lang"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(when(kept, 1L).otherwise(0L)).as("n_kept"),
+        round(min(col("thr")), 6).as("threshold"),
+        DetMean.mean6(sum(when(kept, DetMean.el10(col("score")))),
+          sum(when(kept, 1L).otherwise(0L))).as("avg_kept"))
+  }
+
+  /** Heaps'-law vocabulary curve of `docs`: the token stream in
+    * (doc_id, pos) order, each word's first-occurrence global index, and
+    * the vocabulary seen by each of 10 halving checkpoints
+    * `n_tokens` = total div 2^(10−j). One row per checkpoint with `j`,
+    * `n_tokens`, the `keep` columns (drawn from `j`, `n_tokens`,
+    * `total`), `vocab`, and the 6dp logs of `n_tokens` and `vocab`
+    * scaled to exact BIGINTs `x6`, `y6`.
+    *
+    * Scale shape: one corpus-sized explode → per-doc counts (doc-
+    * bounded) → a doc-count-sized prefix-sum window (NOT a corpus
+    * window: the global index is doc_offset + intra-doc rank, so the
+    * only corpus-sized shuffles are the explode's group-bys) → the
+    * first-occurrence table is vocabulary-bounded, and the checkpoint
+    * join is |vocab| × 10 against a broadcast 10-row table. */
+  private def heapsCurve(docs: DataFrame, keep: Column*): DataFrame = {
+    val J = 10
+    val w = org.apache.spark.sql.expressions.Window
+    val toks = docs
+      .select(col("doc_id"), posexplode(split(col("text"), " "))
+        .as(Seq("pos", "word")))
+      .filter(length(col("word")) > 0)
+    val perDoc = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("ntok"))
+    val offs = perDoc.withColumn("off",
+      coalesce(sum(col("ntok")).over(
+        w.orderBy(col("doc_id")).rowsBetween(w.unboundedPreceding, -1)),
+        lit(0L)))
+      // doc-bounded; 2 consumers (gidx join + checkpoint grid) each
+      // re-derived the corpus explode behind it (6 scans → 2)
+      .localCheckpoint(eager = false)
+    val gidx = toks.join(broadcast(offs.select(col("doc_id"), col("off"))),
+        Seq("doc_id"))
+      .withColumn("ridx", row_number().over(
+        w.partitionBy(col("doc_id")).orderBy(col("pos"))))
+      .select(col("word"), (col("off") + col("ridx")).as("gidx"))
+    val first = gidx.groupBy(col("word")).agg(min(col("gidx")).as("fidx"))
+    val cps = offs.agg(sum(col("ntok")).as("total"))
+      .select(col("total"), explode(sequence(lit(1), lit(J))).as("j"))
+      .withColumn("n_tokens",
+        expr(s"total div shiftleft(CAST(1 AS BIGINT), $J - j)"))
+    val curve = first.crossJoin(broadcast(cps))
+      .filter(col("fidx") <= col("n_tokens"))
+      .groupBy(col("j") +: col("n_tokens") +: keep: _*)
+      .agg(count(lit(1)).as("vocab"))
+    // OLS coordinates in EXACT integer arithmetic (the r12 driver hash
+    // failure was round(x*y, 6) of double-domain products — a 7th-digit
+    // tie of exactly 5 rounds differently under Spark's BigDecimal
+    // HALF_UP vs DuckDB's libm round): the 6dp log values become scaled
+    // BIGINTs (x·10⁶ via an exact decimal hop, never a double truncate —
+    // Spark's double→long cast truncates while DuckDB's rounds), so
+    // every moment a caller sums is a BIGINT sum of BIGINT products.
+    def i6(c: Column) =
+      (round(c, 6).cast("decimal(18,6)") * lit(1000000)).cast("long")
+    curve.select(Seq(col("j"), col("n_tokens")) ++ keep ++ Seq(col("vocab"),
+      i6(log(col("n_tokens"))).as("x6"),
+      i6(log(col("vocab"))).as("y6")): _*)
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Unicode/whitespace normalization — the cleaning pass upstream of
     // every tokenizer: lowercase, strip non-printable characters,
@@ -244,18 +355,8 @@ object TextOps {
       val vocab = documents(s, dir)
         .select(explode(split(col("text"), " ")).as("word"))
         .groupBy(col("word")).agg(count(lit(1)).as("wc"))
-      val pairs = vocab
-        .filter(length(col("word")) >= 2)
-        .select(col("wc"), explode(transform(
-          sequence(lit(1), length(col("word")) - 1),
-          i => concat(col("word").substr(i, lit(1)),
-            col("word").substr(i + 1, lit(1))))).as("pair"))
-        .groupBy(col("pair")).agg(sum(col("wc")).as("n"))
-      pairs.orderBy(col("n").desc, col("pair")).limit(20)
-        .withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy(col("n").desc, col("pair"))).cast("long"))
-        .select(col("rk"), col("pair"), col("n"))
+      val pairs = mergePairs(vocab)
+      topMerges(pairs)
         .orderBy(col("rk"))
     },
     // SECOND BPE merge round under the oracle — proves the data-
@@ -276,12 +377,7 @@ object TextOps {
         .select(explode(split(col("text"), " ")).as("word"))
         .groupBy(col("word")).agg(count(lit(1)).as("wc"))
         .localCheckpoint(eager = false) // feeds round-1 counts AND the re-symbolization
-      val pairs1 = vocab.filter(length(col("word")) >= 2)
-        .select(col("wc"), explode(transform(
-          sequence(lit(1), length(col("word")) - 1),
-          i => concat(col("word").substr(i, lit(1)),
-            col("word").substr(i + 1, lit(1))))).as("pair"))
-        .groupBy(col("pair")).agg(sum(col("wc")).as("n"))
+      val pairs1 = mergePairs(vocab)
       val top1 = pairs1.orderBy(col("n").desc, col("pair")).limit(1)
         .select(col("pair").as("m"))
       val re = vocab.crossJoin(broadcast(top1))
@@ -296,11 +392,7 @@ object TextOps {
           replace(col("raw"), lit(S),
             concat(lit("<"), col("m"), lit(">"))).as("pair"))
         .groupBy(col("pair")).agg(sum(col("wc")).as("n"))
-      pairs2.orderBy(col("n").desc, col("pair")).limit(20)
-        .withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy(col("n").desc, col("pair"))).cast("long"))
-        .select(col("rk"), col("pair"), col("n"))
+      topMerges(pairs2)
         .orderBy(col("rk"))
     },
     // quality score: length + vocab-diversity + stopword components,
@@ -375,20 +467,7 @@ object TextOps {
     // one counts join back onto the gram stream (corpus-sized keys,
     // partial-aggregated).
     "text_perplexity" -> { (s, dir) =>
-      // split ONCE into a projected column — an inline `split` expression
-      // re-evaluates for every element_at inside the transform lambda
-      // (no common-subexpression elimination across higher-order
-      // functions), turning gram extraction O(words²); measured 2.3 s →
-      // 0.5 s for the gram scan alone at sf0.1
-      val grams = Tables.spread(documents(s, dir), col("doc_id"))
-        .withColumn("w", split(col("text"), " "))
-        .filter(size(col("w")) >= 2)
-        // explode the POSITION, project in codegen (the r13 shingle
-        // lesson: transform lambdas build an interpreted array per doc)
-        .select(col("doc_id"), col("w"),
-          explode(sequence(lit(1), size(col("w")) - 1)).as("i"))
-        .select(col("doc_id"), element_at(col("w"), col("i")).as("w1"),
-          element_at(col("w"), col("i") + 1).as("w2"))
+      val grams = bigrams(documents(s, dir))
       // bigram counts are the sufficient statistic: c1 = Σ c12 by w1 —
       // derive the unigram table from the vocab²-bounded `big` instead
       // of re-aggregating the corpus gram stream (the text_kneser_ney
@@ -423,17 +502,7 @@ object TextOps {
     // B) are vocabulary-bounded and broadcast; the corpus-sized gram
     // stream never shuffles. Top-10 most-surprising docs, the cut list.
     "text_kneser_ney" -> { (s, dir) =>
-      // spread the under-split single-file scan before the per-position
-      // gram explode (no-op on properly split inputs — Tables.spread)
-      val grams = Tables.spread(documents(s, dir), col("doc_id"))
-        .withColumn("w", split(col("text"), " "))
-        .filter(size(col("w")) >= 2)
-        // explode the POSITION, project in codegen (the r13 shingle
-        // lesson: transform lambdas build an interpreted array per doc)
-        .select(col("doc_id"), col("w"),
-          explode(sequence(lit(1), size(col("w")) - 1)).as("i"))
-        .select(col("doc_id"), element_at(col("w"), col("i")).as("w1"),
-          element_at(col("w"), col("i") + 1).as("w2"))
+      val grams = bigrams(documents(s, dir))
       // bigram counts are the sufficient statistic: c1 = Σ c12 by w1,
       // the continuation counts are row counts of the bigram table —
       // so derive uni/back/btot from the vocab²-bounded `big` instead
@@ -498,21 +567,7 @@ object TextOps {
     // choice at test scale; at corpus scale swap approx_percentile
     // into the same shape (the exact one buffers each group's values).
     "text_quality_gate" -> { (s, dir) =>
-      val scored = documents(s, dir)
-        .select(col("lang"), qualityScore(col("text")).as("score"))
-      val thr = scored.groupBy(col("lang").as("tl"))
-        .agg(expr("percentile(score, 0.4)").as("thr"))
-      scored.join(broadcast(thr), col("lang") === col("tl"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("score") >= col("thr"), 1L).otherwise(0L))
-            .as("n_kept"),
-          round(min(col("thr")), 6).as("threshold"),
-          DetMean.mean6(
-            sum(when(col("score") >= col("thr"),
-              DetMean.el10(col("score")))),
-            sum(when(col("score") >= col("thr"), 1L).otherwise(0L)))
-            .as("avg_kept"))
+      qualityGate(documents(s, dir), expr("percentile(score, 0.4)"))
         .orderBy(col("lang"))
     },
     // PRODUCTION twin of text_quality_gate: exact `percentile` keeps
@@ -526,21 +581,7 @@ object TextOps {
     // engines — same contractual no-oracle class as ml_train_predict);
     // TextApproxGateSpec pins it against the exact gate instead.
     "text_quality_gate_approx" -> { (s, dir) =>
-      val scored = documents(s, dir)
-        .select(col("lang"), qualityScore(col("text")).as("score"))
-      val thr = scored.groupBy(col("lang").as("tl"))
-        .agg(expr("approx_percentile(score, 0.4, 10000)").as("thr"))
-      scored.join(broadcast(thr), col("lang") === col("tl"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("score") >= col("thr"), 1L).otherwise(0L))
-            .as("n_kept"),
-          round(min(col("thr")), 6).as("threshold"),
-          DetMean.mean6(
-            sum(when(col("score") >= col("thr"),
-              DetMean.el10(col("score")))),
-            sum(when(col("score") >= col("thr"), 1L).otherwise(0L)))
-            .as("avg_kept"))
+      qualityGate(documents(s, dir), expr("approx_percentile(score, 0.4, 10000)"))
         .orderBy(col("lang"))
     },
     // TF-IDF keyterm extraction: top-5 terms per document, scored
@@ -654,61 +695,16 @@ object TextOps {
     // index is a min-aggregate, and V(n_j) at 10 halving checkpoints
     // (total/2^9 … total) counts first-occurrences ≤ n_j. β comes from
     // the zipf-slope OLS discipline (6dp logs, exact decimal moment
-    // sums, closed form).
-    //
-    // Scale shape: one corpus-sized explode → per-doc counts (doc-
-    // bounded) → a doc-count-sized prefix-sum window (NOT a corpus
-    // window: the global index is doc_offset + intra-doc rank, so the
-    // only corpus-sized shuffles are the explode's group-bys) → the
-    // first-occurrence table is vocabulary-bounded, and the checkpoint
-    // join is |vocab| × 10 against a broadcast 10-row table. At 100 TB
-    // the doc-order prefix sum is the same pattern shard manifests use;
-    // nothing holds more than vocabulary-sized state after the maps.
+    // sums, closed form); [[heapsCurve]] holds the pipeline and its
+    // scale shape. At 100 TB the doc-order prefix sum is the same
+    // pattern shard manifests use; nothing holds more than
+    // vocabulary-sized state after the maps.
     "text_heaps_law" -> { (s, dir) =>
-      val J = 10
-      val w = org.apache.spark.sql.expressions.Window
-      val toks = documents(s, dir)
-        .select(col("doc_id"), posexplode(split(col("text"), " "))
-          .as(Seq("pos", "word")))
-        .filter(length(col("word")) > 0)
-      val perDoc = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("ntok"))
-      val offs = perDoc.withColumn("off",
-        coalesce(sum(col("ntok")).over(
-          w.orderBy(col("doc_id")).rowsBetween(w.unboundedPreceding, -1)),
-          lit(0L)))
-        // doc-bounded; 2 consumers (gidx join + checkpoint grid) each
-        // re-derived the corpus explode behind it (6 scans → 2)
-        .localCheckpoint(eager = false)
-      val gidx = toks.join(broadcast(offs.select(col("doc_id"), col("off"))),
-          Seq("doc_id"))
-        .withColumn("ridx", row_number().over(
-          w.partitionBy(col("doc_id")).orderBy(col("pos"))))
-        .select(col("word"), (col("off") + col("ridx")).as("gidx"))
-      val first = gidx.groupBy(col("word")).agg(min(col("gidx")).as("fidx"))
-      val cps = offs.agg(sum(col("ntok")).as("total"))
-        .select(col("total"), explode(sequence(lit(1), lit(J))).as("j"))
-        .withColumn("n_tokens",
-          expr(s"total div shiftleft(CAST(1 AS BIGINT), $J - j)"))
-      val curve = first.crossJoin(broadcast(cps))
-        .filter(col("fidx") <= col("n_tokens"))
-        .groupBy(col("j"), col("n_tokens"))
-        .agg(count(lit(1)).as("vocab"))
-      // OLS moments in EXACT integer arithmetic (the r12 driver hash
-      // failure was round(x*y, 6) of double-domain products — a 7th-
-      // digit tie of exactly 5 rounds differently under Spark's
-      // BigDecimal HALF_UP vs DuckDB's libm round). Discipline: the 6dp
-      // log values become scaled BIGINTs (x·10⁶ via an exact decimal
-      // hop, never a double truncate — Spark's double→long cast
-      // truncates while DuckDB's rounds), every moment (Σx, Σy, Σxy,
-      // Σx²) is a BIGINT sum of BIGINT products (order-independent
-      // regardless of partitioning), and β is ONE closed-form double
-      // division of two integer-scaled longs, rounded once — the
-      // q_corr_qty_disc finishing pattern.
-      def i6(c: org.apache.spark.sql.Column) =
-        (round(c, 6).cast("decimal(18,6)") * lit(1000000)).cast("long")
-      val xy = curve.select(col("j"), col("n_tokens"), col("vocab"),
-        i6(log(col("n_tokens"))).as("x6"),
-        i6(log(col("vocab"))).as("y6"))
+      val xy = heapsCurve(documents(s, dir))
+      // every moment (Σx, Σy, Σxy, Σx²) is a BIGINT sum of BIGINT
+      // products (order-independent regardless of partitioning), and β
+      // is ONE closed-form double division of two integer-scaled longs,
+      // rounded once — the q_corr_qty_disc finishing pattern
       val beta = round(
         (col("n") * col("sxy12") - col("sx6") * col("sy6")).cast("double") /
         (col("n") * col("sx212") - col("sx6") * col("sx6")).cast("double"), 6)
@@ -725,7 +721,7 @@ object TextOps {
         .orderBy(col("j"))
     },
     // Diagnostic twin of text_heaps_law (VERDICT r13 task #1a): the
-    // SAME pipeline, emitted at INTEGER grain only — per-checkpoint
+    // SAME [[heapsCurve]], emitted at INTEGER grain only — per-checkpoint
     // token counts, vocabulary sizes, the 6dp-scaled log coordinates
     // and all four OLS moment sums as BIGINTs, with NO double column at
     // all. The split localizes any driver-side divergence: probe green
@@ -733,38 +729,7 @@ object TextOps {
     // ⇒ an integer stage (tokenization, first-occurrence index, or
     // checkpoint arithmetic) and the failing column names it.
     "text_heaps_law_probe" -> { (s, dir) =>
-      val J = 10
-      val w = org.apache.spark.sql.expressions.Window
-      val toks = documents(s, dir)
-        .select(col("doc_id"), posexplode(split(col("text"), " "))
-          .as(Seq("pos", "word")))
-        .filter(length(col("word")) > 0)
-      val perDoc = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("ntok"))
-      val offs = perDoc.withColumn("off",
-        coalesce(sum(col("ntok")).over(
-          w.orderBy(col("doc_id")).rowsBetween(w.unboundedPreceding, -1)),
-          lit(0L)))
-        .localCheckpoint(eager = false)
-      val gidx = toks.join(broadcast(offs.select(col("doc_id"), col("off"))),
-          Seq("doc_id"))
-        .withColumn("ridx", row_number().over(
-          w.partitionBy(col("doc_id")).orderBy(col("pos"))))
-        .select(col("word"), (col("off") + col("ridx")).as("gidx"))
-      val first = gidx.groupBy(col("word")).agg(min(col("gidx")).as("fidx"))
-      val cps = offs.agg(sum(col("ntok")).as("total"))
-        .select(col("total"), explode(sequence(lit(1), lit(J))).as("j"))
-        .withColumn("n_tokens",
-          expr(s"total div shiftleft(CAST(1 AS BIGINT), $J - j)"))
-      val curve = first.crossJoin(broadcast(cps))
-        .filter(col("fidx") <= col("n_tokens"))
-        .groupBy(col("j"), col("n_tokens"), col("total"))
-        .agg(count(lit(1)).as("vocab"))
-      def i6(c: org.apache.spark.sql.Column) =
-        (round(c, 6).cast("decimal(18,6)") * lit(1000000)).cast("long")
-      val xy = curve.select(col("j"), col("n_tokens"), col("total"),
-        col("vocab"),
-        i6(log(col("n_tokens"))).as("x6"),
-        i6(log(col("vocab"))).as("y6"))
+      val xy = heapsCurve(documents(s, dir), col("total"))
       val mom = xy.agg(count(lit(1)).as("n_pts"),
         sum(col("x6")).as("sx6"), sum(col("y6")).as("sy6"),
         sum(col("x6") * col("y6")).as("sxy12"),

@@ -158,6 +158,32 @@ class DedupLibSpec extends AnyFunSuite {
     val tiny = Seq((1L, "two words"), (2L, "also tiny")).toDF("id", "text")
     assert(DedupLib.shingles(tiny, "id", "text").count() == 0)
     assert(DedupLib.minhashCandidates(tiny, "id", "text").count() == 0)
+    val noBands = Seq.empty[(Long, Int, Long)].toDF("doc_id", "band", "bh")
+    assert(DedupLib.candidatePairs(noBands).count() == 0)
+  }
+
+  test("arrayPairs: sizes 0, 1, 2 and n give n(n-1)/2 pairs, each once, a < b") {
+    import spark.implicits._
+    val arrays = Seq(Seq.empty[Long], Seq(7L), Seq(3L, 9L), (1L to 6L).toSeq)
+    arrays.foreach { arr =>
+      val n = arr.size
+      val pairs = DedupLib.arrayPairs(Seq(Tuple1(arr)).toDF("docs"), "docs", "a", "b")
+        .as[(Long, Long)].collect().toSeq
+      assert(pairs.size == n * (n - 1) / 2, s"n=$n: $pairs")
+      assert(pairs.distinct.size == pairs.size, s"n=$n: duplicate pair in $pairs")
+      assert(pairs.forall { case (a, b) => a < b }, s"n=$n: unordered pair in $pairs")
+      assert(pairs.toSet == arr.combinations(2).map(c => (c(0), c(1))).toSet)
+    }
+  }
+
+  test("candidatePairs: an all-duplicate corpus pairs every doc once, no self-pair") {
+    import spark.implicits._
+    val text = "every document in this corpus carries exactly the same words"
+    val dup = (1L to 5L).map(i => (i, text)).toDF("id", "text")
+    val pairs = DedupLib.minhashCandidates(dup, "id", "text")
+      .as[(Long, Long)].collect().toSeq
+    assert(pairs.sorted == (for (a <- 1L to 5L; b <- a + 1 to 5L) yield (a, b)),
+      s"pairs=$pairs")
   }
 
   test("adaptiveSignBits: integer-exact, clamped, and keeps expected buckets <= target") {
