@@ -292,7 +292,10 @@ object Multimodal {
         val len = u32(p, off + 4)
         if (id == "fmt " && off + 24 <= p.length) fmt = off
         else if (id == "data") { data = off + 8; dataLen = len }
-        off += 8 + len.toInt + (len.toInt & 1) // chunks pad to even length
+        // chunks pad to even length; a declared length past the end of
+        // the payload ends the walk (Long arithmetic: a u32 length of 2^31
+        // or more must not wrap the step to zero or below)
+        off = math.min(off + 8L + len + (len & 1), p.length.toLong).toInt
       }
       Some((fmt, data, dataLen))
     }

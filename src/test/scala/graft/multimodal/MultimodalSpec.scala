@@ -211,6 +211,21 @@ class MultimodalSpec extends AnyFunSuite {
     assert(WavCodec.parseWavHeader(spliced).contains((8000, 1, 16, 10L)))
   }
 
+  test("WavCodec: a chunk length past the end of the payload ends the walk") {
+    import Multimodal.WavCodec
+    import java.nio.{ByteBuffer, ByteOrder}
+    val base = WavCodec.encodeWav(8000, 1, 10, seed = 1L)
+    // a junk chunk between fmt (bytes 12..35) and data whose u32 length
+    // would wrap an Int step to zero, to a small negative or to Int.MinValue
+    for (len <- Seq(0xFFFFFFF8, 0xFFFFFFF0, 0x80000000)) {
+      val junk = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN)
+      junk.put("junk".getBytes("US-ASCII")); junk.putInt(len)
+      val spliced = base.take(36) ++ junk.array() ++ base.drop(36)
+      assert(WavCodec.parseWavHeader(spliced).isEmpty)
+      assert(WavCodec.readSamples(spliced, 1).isEmpty)
+    }
+  }
+
   test("WavCodec: corrupt and truncated payloads parse to None, not failures") {
     import Multimodal.WavCodec
     assert(WavCodec.parseWavHeader(null).isEmpty)

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """List blocks of code written more than once in the Scala sources.
 
-Usage: python3 tools/dup_scan.py [--min N] [--quiet] [root]
+Usage: python3 tools/dup_scan.py [--min N] [root]
 
 Scans every *.scala file under `root` (default: src/main). Each line is
 trimmed; blank lines, comment lines (starting with //, /*, * or */) and
@@ -17,7 +17,7 @@ Prints one line per region, longest first,
     <len>  <file>:<first line>  <file>:<first line>
 
 then a total: the number of pairwise regions and the number of distinct
-source lines they cover. --quiet prints the total only.
+source lines they cover.
 """
 import os
 import sys
@@ -54,8 +54,7 @@ def scan(root, n):
                 (fa, a), (fb, b) = occ[x], occ[y]
                 sa, sb = seqs[fa], seqs[fb]
                 # not maximal: the pair also matches one line earlier
-                if a > 0 and b > 0 and sa[a - 1][1] == sb[b - 1][1] and \
-                        not (fa == fb and b - a == 0):
+                if a > 0 and b > 0 and sa[a - 1][1] == sb[b - 1][1]:
                     continue
                 length = n
                 while a + length < len(sa) and b + length < len(sb) and \
@@ -75,21 +74,18 @@ def scan(root, n):
 
 
 def main(argv):
-    n, quiet, root = 6, False, "src/main"
+    n, root = 6, "src/main"
     args = list(argv)
     while args:
         a = args.pop(0)
         if a == "--min":
             n = int(args.pop(0))
-        elif a == "--quiet":
-            quiet = True
         else:
             root = a
     files, seqs, regions, covered = scan(root, n)
-    if not quiet:
-        for length, fa, a, fb, b in regions:
-            print(f"{length:4d}  {os.path.relpath(files[fa], root)}:{seqs[fa][a][0]}"
-                  f"  {os.path.relpath(files[fb], root)}:{seqs[fb][b][0]}")
+    for length, fa, a, fb, b in regions:
+        print(f"{length:4d}  {os.path.relpath(files[fa], root)}:{seqs[fa][a][0]}"
+              f"  {os.path.relpath(files[fb], root)}:{seqs[fb][b][0]}")
     print(f"total: {len(regions)} pairwise regions of >= {n} repeated lines, "
           f"covering {covered} lines")
     return 0
