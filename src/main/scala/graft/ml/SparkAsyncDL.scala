@@ -18,7 +18,8 @@ import graft.train.HogwildTrainer
   * JSON instead of a TF MetaGraphDef; `tfInput`/`tfLabel`/`tfOutput`/
   * `tfDropout` are tensor-name params kept for drop-in API parity (our
   * declarative spec doesn't need them to locate tensors; `tfLabel` unset
-  * still switches autoencoder mode, see fit()).
+  * still switches autoencoder mode, see fit()). [[psShards]] is the only
+  * param the reference does not have.
   */
 private[ml] trait AsyncDLParams extends Params
     with HasInputCol with HasLabelCol with HasPredictionCol {
@@ -40,13 +41,8 @@ private[ml] trait AsyncDLParams extends Params
   final val partitionShuffles = new IntParam(this, "partitionShuffles", "full-shuffle training rounds")
   final val optimizerOptions = new Param[String](this, "optimizerOptions", "optimizer options JSON")
   final val port = new IntParam(this, "port", "parameter-server port")
-  /** Extension beyond the reference's 21 params: >0 sends only the k
-    * largest-magnitude gradient entries per push with error-feedback
-    * residuals (graft.nn.GradientCompression); 0 = dense parity. */
-  final val gradientTopK = new IntParam(this, "gradientTopK",
-    "top-k sparse gradient pushes; 0 = dense")
-  /** Extension beyond the reference: parameter-server shard count.
-    * 0 = auto — shard once the model outgrows
+  /** The only extension beyond the reference's 21 params: the
+    * parameter-server shard count. 0 = auto — shard once the model outgrows
     * [[HogwildTrainer.AutoShardElems]] elements (one shard per threshold's
     * worth of weights, capped at [[HogwildTrainer.AutoShardMax]] and the
     * tensor count); 1 = always the single driver-hosted server; N ≥ 2 =
@@ -62,7 +58,7 @@ private[ml] trait AsyncDLParams extends Params
     predictionCol -> "predicted", partitions -> 5, miniBatchSize -> 128,
     miniStochasticIters -> -1, acquireLock -> false, shufflePerIter -> true,
     toKeepDropout -> false, verbose -> 0, partitionShuffles -> 1, port -> 5000,
-    optimizerOptions -> "{}", gradientTopK -> 0, psShards -> 0)
+    optimizerOptions -> "{}", psShards -> 0)
 
   private[ml] def parsedOptions: Map[String, Double] = {
     import org.json4s._
@@ -131,7 +127,6 @@ class SparkAsyncDL(override val uid: String) extends Estimator[SparkAsyncDLModel
   def setToKeepDropout(v: Boolean): this.type = set(toKeepDropout, v)
   def setVerbose(v: Int): this.type = set(verbose, v)
   def setPartitionShuffles(v: Int): this.type = set(partitionShuffles, v)
-  def setGradientTopK(v: Int): this.type = set(gradientTopK, v)
   def setOptimizerOptions(v: String): this.type = set(optimizerOptions, v)
   def setPort(v: Int): this.type = set(port, v)
   def setPsShards(v: Int): this.type = set(psShards, v)
@@ -173,8 +168,7 @@ class SparkAsyncDL(override val uid: String) extends Estimator[SparkAsyncDLModel
       shufflePerIter = $(shufflePerIter),
       partitionShuffles = $(partitionShuffles),
       verbose = $(verbose),
-      port = $(port),
-      gradientTopK = $(gradientTopK))
+      port = $(port))
     val weights = HogwildTrainer.fit(rdd, spec, cfg, $(psShards))
 
     val model = new SparkAsyncDLModel(uid + "_model")

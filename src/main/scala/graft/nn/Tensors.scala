@@ -23,16 +23,6 @@ object Tensors {
 
   def copy(ts: Tensors): Tensors = ts.map(_.copy)
 
-  /** Element-wise average of several weight sets — parity with the
-    * reference's `calculate_weights` (`ml_util.py:43-51`). */
-  def average(sets: Seq[Tensors]): Tensors = {
-    require(sets.nonEmpty, "average of zero weight sets")
-    val acc = zerosLike(sets.head)
-    sets.foreach { ts => var i = 0; while (i < acc.length) { acc(i) :+= ts(i); i += 1 } }
-    acc.foreach(_ :/= sets.size.toDouble)
-    acc
-  }
-
   // ---- binary wire codec (little-endian-free: DataOutput big-endian) ----
 
   def toBytes(ts: Tensors): Array[Byte] = {
@@ -49,11 +39,20 @@ object Tensors {
     bos.toByteArray
   }
 
+  /** Decodes [[toBytes]]. The bytes may come from outside the program
+    * (a POST to `/update`), so every declared size is checked against the
+    * bytes actually left before anything is allocated for it. */
   def fromBytes(bytes: Array[Byte]): Tensors = {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
     val n = in.readInt()
+    // each tensor needs at least its 8-byte shape header
+    require(n >= 0 && n.toLong * 8 <= in.available(),
+      s"declared $n tensors, but only ${in.available()} bytes follow the count")
     Array.fill(n) {
       val rows = in.readInt(); val cols = in.readInt()
+      require(rows >= 0 && cols >= 0 && rows.toLong * cols * 8 <= in.available(),
+        s"declared a ${rows}x$cols tensor (${rows.toLong * cols * 8} bytes), " +
+          s"but only ${in.available()} bytes are left")
       val data = new Array[Double](rows * cols)
       var i = 0
       while (i < data.length) { data(i) = in.readDouble(); i += 1 }
@@ -100,8 +99,8 @@ object Tensors {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     val JArray(tensors) = JsonMethods.parse(json): @unchecked
-    tensors.map {
-      case JArray(rows) =>
+    tensors.zipWithIndex.map {
+      case (JArray(rows), t) =>
         val rowArrays = rows.map {
           case JArray(cells) =>
             cells.map {
@@ -116,11 +115,15 @@ object Tensors {
         }.toArray
         val r = rowArrays.length
         val c = if (r == 0) 0 else rowArrays(0).length
+        rowArrays.indices.foreach { k =>
+          require(rowArrays(k).length == c,
+            s"tensor $t row $k has ${rowArrays(k).length} values, but row 0 has $c")
+        }
         val m = DenseMatrix.zeros[Double](r, c)
         var i = 0
         while (i < r) { var j = 0; while (j < c) { m(i, j) = rowArrays(i)(j); j += 1 }; i += 1 }
         m
-      case other => sys.error(s"bad tensor (expected array of rows): $other")
+      case (other, _) => sys.error(s"bad tensor (expected array of rows): $other")
     }.toArray
   }
 }

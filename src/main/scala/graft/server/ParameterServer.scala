@@ -88,10 +88,7 @@ final class ParameterServer(
     server.createContext("/update", new HttpHandler {
       def handle(ex: HttpExchange): Unit = {
         try {
-          // accepts dense AND top-k sparse payloads (self-describing
-          // wire header — see GradientCompression.decodeMaybeSparse)
-          val grads = graft.nn.GradientCompression
-            .decodeMaybeSparse(ex.getRequestBody.readAllBytes())
+          val grads = Tensors.fromBytes(ex.getRequestBody.readAllBytes())
           // reject a mis-shaped payload WHOLE, before any step: the
           // optimizer walks tensor by tensor, so a short or mis-shaped
           // set would update a prefix and advance its state, then throw
@@ -168,16 +165,8 @@ object ParamsClient {
     finally c.disconnect()
   }
 
-  def postGradients(masterUrl: String, grads: Tensors, partitionId: Int): Unit =
-    postBytes(masterUrl, Tensors.toBytes(grads), partitionId)
-
-  /** Top-k sparse push — ~50× fewer wire bytes at 1% density; pair with
-    * a worker-local residual via [[graft.nn.GradientCompression.sparsifyTopK]]. */
-  def postSparseGradients(masterUrl: String,
-      sparse: graft.nn.GradientCompression.SparseGrad, partitionId: Int): Unit =
-    postBytes(masterUrl, graft.nn.GradientCompression.toBytes(sparse), partitionId)
-
-  private def postBytes(masterUrl: String, bytes: Array[Byte], partitionId: Int): Unit = {
+  def postGradients(masterUrl: String, grads: Tensors, partitionId: Int): Unit = {
+    val bytes = Tensors.toBytes(grads)
     try {
       val c = new java.net.URI(s"http://$masterUrl/update").toURL
         .openConnection().asInstanceOf[java.net.HttpURLConnection]

@@ -132,21 +132,6 @@ object ShardedParamsClient {
       ParamsClient.postGradients(shardUrls(i), grads.slice(from, until), partitionId)
     }
 
-  /** Sparse twin of [[postGradients]]: shard bounds are whole-tensor
-    * ranges, so a global top-k [[graft.nn.GradientCompression.SparseGrad]]
-    * slices into per-shard sparse payloads with no re-encoding — each
-    * shard's server densifies only its own slice. Composes sharding's
-    * bandwidth×shards with sparsification's bytes÷density. */
-  def postSparseGradients(
-      shardUrls: Seq[String], bounds: Seq[(Int, Int)],
-      sparse: graft.nn.GradientCompression.SparseGrad, partitionId: Int): Unit =
-    eachShard(shardUrls.length) { i =>
-      val (from, until) = bounds(i)
-      ParamsClient.postSparseGradients(shardUrls(i), graft.nn.GradientCompression.SparseGrad(
-        sparse.rows.slice(from, until), sparse.cols.slice(from, until),
-        sparse.idx.slice(from, until), sparse.vals.slice(from, until)), partitionId)
-    }
-
   /** Runs `call` for shards 0..n-1 and returns once all are done: shard 0
     * on the calling thread, each other shard on its own thread. A
     * one-shard call is therefore a plain [[ParamsClient]] call, with no

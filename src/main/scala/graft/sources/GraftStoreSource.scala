@@ -179,6 +179,17 @@ object GraftStore {
   private[sources] def fs(root: String, conf: Configuration): FileSystem =
     new HPath(root).getFileSystem(conf)
 
+  /** A write's `abort`: deletes the data files its committed tasks wrote.
+    * No manifest names them yet, so nothing else would remove them before
+    * vacuum. */
+  private[sources] def deleteCommitted(root: String, messages: Array[WriterCommitMessage]): Unit = {
+    val f = fs(root, driverConf())
+    messages.foreach {
+      case c: GsbCommit => f.delete(new HPath(root, c.relPath), false)
+      case _ => ()
+    }
+  }
+
   private val ManifestRe = "v(\\d{20})\\.manifest".r
 
   /** Driver-side parsed-manifest cache. A COMPLETE manifest is immutable
@@ -1592,13 +1603,8 @@ private[sources] class GsbStreamingWrite(root: String, schema: StructType, query
     }
   }
 
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val f = GraftStore.fs(root, GraftStore.driverConf())
-    messages.foreach {
-      case c: GsbCommit => f.delete(new HPath(root, c.relPath), false)
-      case _ => ()
-    }
-  }
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    GraftStore.deleteCommitted(root, messages)
 }
 
 private[sources] class GsbStreamingWriterFactory(root: String, schemaJson: String, queryId: String)
@@ -1676,13 +1682,8 @@ private[sources] class GsbBatchWrite(
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val f = GraftStore.fs(root, GraftStore.driverConf())
-    messages.foreach {
-      case c: GsbCommit => f.delete(new HPath(root, c.relPath), false)
-      case _ => ()
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GraftStore.deleteCommitted(root, messages)
 }
 
 private[sources] case class GsbCommit(relPath: String, rows: Long, bytes: Long,
@@ -2263,13 +2264,8 @@ private[sources] class GsbReplaceGroupsWrite(root: String,
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val f = GraftStore.fs(root, GraftStore.driverConf())
-    messages.foreach {
-      case c: GsbCommit => f.delete(new HPath(root, c.relPath), false)
-      case _ => ()
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GraftStore.deleteCommitted(root, messages)
 }
 
 /** `INSERT INTO t REPLACE WHERE cond` — the partition-overwrite
@@ -2331,13 +2327,8 @@ private[sources] class GsbReplaceWhereWrite(root: String,
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val f = GraftStore.fs(root, GraftStore.driverConf())
-    messages.foreach {
-      case c: GsbCommit => f.delete(new HPath(root, c.relPath), false)
-      case _ => ()
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GraftStore.deleteCommitted(root, messages)
 }
 
 /** SQL DELETE executor — the row-level half of [[GraftStoreTable]]'s

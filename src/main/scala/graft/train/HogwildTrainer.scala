@@ -40,13 +40,7 @@ object HogwildTrainer {
       partitionShuffles: Int = 1,
       verbose: Int = 0,
       port: Int = 5000,
-      seed: Long = 42L,
-      /** >0 ⇒ each push sends only the k largest-magnitude gradient
-        * entries, with a worker-local error-feedback residual carrying
-        * the rest to later pushes ([[graft.nn.GradientCompression]]) —
-        * the bandwidth lever once partitions × model size outgrows the
-        * driver NIC. 0 = dense pushes (reference parity). */
-      gradientTopK: Int = 0)
+      seed: Long = 42L)
 
   /** Train on an RDD of (features, label-vector) pairs; returns final
     * weights. The parameter server is a [[ShardedParameterServer]] split
@@ -175,17 +169,7 @@ object HogwildTrainer {
       LocalTrainer.Config(cfg.iters, cfg.miniBatchSize, cfg.miniStochasticIters,
         cfg.shufflePerIter, cfg.verbose, cfg.seed + pid),
       pull = () => ShardedParamsClient.getWeights(shardUrls),
-      push =
-        if (cfg.gradientTopK > 0) {
-          // residual persists across this worker's pushes for the whole
-          // partition run — that persistence IS the error feedback
-          var residual: Tensors = null
-          g => {
-            if (residual == null) residual = graft.nn.Tensors.zerosLike(g)
-            ShardedParamsClient.postSparseGradients(shardUrls, bounds,
-              graft.nn.GradientCompression.sparsifyTopK(g, residual, cfg.gradientTopK), pid)
-          }
-        } else { g => ShardedParamsClient.postGradients(shardUrls, bounds, g, pid) })
+      push = g => ShardedParamsClient.postGradients(shardUrls, bounds, g, pid))
   }
 
   /** Driver URL for executors — `determine_master`
@@ -196,64 +180,5 @@ object HogwildTrainer {
       try SparkEnv.get.conf.get("spark.driver.host", java.net.InetAddress.getLocalHost.getHostAddress)
       catch { case _: Exception => java.net.InetAddress.getLocalHost.getHostAddress }
     s"$host:$port"
-  }
-
-  /** Deterministic alternative trainer: one synchronous round of
-    * tree-aggregated gradient averaging per iteration. This productionizes
-    * the reference's dead `calculate_weights` averaging path
-    * (`ml_util.py:43-51`) as a testable, reproducible mode — and at scale
-    * `treeAggregate` is the shape that survives 1000 executors (gradients
-    * combine on the tree, never funneling raw partitions to the driver). */
-  def fitSync(
-      rdd: RDD[(Array[Double], Array[Double])],
-      spec: NetSpec,
-      cfg: Config): Tensors = {
-    val net = new Network(spec)
-    val weights = net.initWeights(cfg.seed)
-    val optimizer = Optimizer.build(cfg.optimizerName, cfg.learningRate, cfg.optimizerOptions)
-    val specJson = spec.toJson
-    val sc = rdd.sparkContext
-    val cached = rdd.cache()
-    if (cached.isEmpty()) { // treeReduce on no elements throws; match fit()
-      cached.unpersist(false)
-      return weights
-    }
-    var it = 0
-    while (it < cfg.iters) {
-      val bc = sc.broadcast(weights)
-      val iter = it
-      val (gradSum, cnt) = cached.mapPartitions { pit =>
-        val rows = pit.toArray
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val s = NetSpec.fromJson(specJson)
-          val n2 = new Network(s)
-          val (x, y) = toMatrices(rows, s)
-          // deterministic dropout: seeded per (iteration, partition), so
-          // dropout-declaring specs train the same objective as fit()
-          // while the trainer stays reproducible
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val rng =
-            if (s.layers.exists(_.dropout > 0.0))
-              new scala.util.Random(cfg.seed + iter.toLong * 1000003L + pid)
-            else null
-          val (_, g) = n2.forwardBackward(x, y, bc.value, rng)
-          // scale to a weighted contribution so the tree-sum is the
-          // full-batch gradient regardless of partition skew
-          g.foreach(_ :*= rows.length.toDouble)
-          Iterator((g, rows.length.toLong))
-        }
-      }.treeReduce({ case ((g1, c1), (g2, c2)) =>
-        var i = 0
-        while (i < g1.length) { g1(i) :+= g2(i); i += 1 }
-        (g1, c1 + c2)
-      }, depth = 2)
-      gradSum.foreach(_ :/= cnt.toDouble)
-      optimizer.step(weights, gradSum)
-      bc.destroy()
-      it += 1
-    }
-    cached.unpersist(false)
-    weights
   }
 }

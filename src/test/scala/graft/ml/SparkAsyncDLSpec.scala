@@ -86,25 +86,6 @@ class SparkAsyncDLSpec extends AnyFunSuite {
     assert(SparkAsyncDLModel.load(dir).getOrDefault(model.psShards) == 2)
   }
 
-  test("gradientTopK sparse pushes train end-to-end and persist the param") {
-    val df = blobsDf()
-    // 2× the default iteration budget: top-16-of-~220 sparse pushes learn
-    // slower per round, and with a marginal blob draw 25 hogwild iters can
-    // land exactly at chance (observed once in-suite) — 50 gives the
-    // always-clears-chance margin the assertion needs without seeding away
-    // the raciness the test exists to cover
-    val est = dl(5113).setGradientTopK(16).setIters(50)
-    val model = est.fit(df)
-    val out = model.transform(df)
-    assert(out.count() == 400)
-    assert(errorCount(out) < 200, "sparse-push training worse than chance")
-    // param survives the estimator save/load round-trip
-    val dir = java.nio.file.Files.createTempDirectory("topk_est").toString + "/est"
-    est.write.overwrite().save(dir)
-    val back = SparkAsyncDL.load(dir)
-    assert(back.getOrDefault(back.gradientTopK) == 16)
-  }
-
   test("sparse and dense vectors train identically shaped (test_small_sparse)") {
     val model = new SparkAsyncDL()
       .setInputCol("features").setLabelCol("label")

@@ -77,6 +77,13 @@ class NetworkSpec extends AnyFunSuite {
     intercept[RuntimeException](Loss.byName("hinge"))
     intercept[IllegalArgumentException](
       NetSpec(Seq(LayerSpec(2, 3, "relu"), LayerSpec(4, 1, "linear")), "mse"))
+    // a loss paired with the wrong output activation
+    intercept[IllegalArgumentException](
+      NetSpec.input(4).dense(3, "linear").loss("softmax_xent"))
+    intercept[IllegalArgumentException](
+      NetSpec.input(4).dense(3, "softmax").loss("mse"))
+    intercept[IllegalArgumentException](
+      NetSpec.input(4).dense(3, "softmax").dense(2, "linear").loss("mse"))
   }
 
   test("weights json round-trip preserves values exactly") {
@@ -97,6 +104,15 @@ class NetworkSpec extends AnyFunSuite {
     assert(back(0)(1, 0).isPosInfinity && back(0)(1, 1).isNegInfinity)
   }
 
+  test("weights json with ragged rows is rejected, naming the tensor and row") {
+    val longer = intercept[IllegalArgumentException](
+      Tensors.fromJson("[[[1.0,2.0]],[[1.0,2.0],[3.0,4.0,5.0]]]")).getMessage
+    assert(longer.contains("tensor 1 row 1 has 3 values, but row 0 has 2"), longer)
+    val shorter = intercept[IllegalArgumentException](
+      Tensors.fromJson("[[[1.0,2.0],[3.0]]]")).getMessage
+    assert(shorter.contains("tensor 0 row 1 has 1 values, but row 0 has 2"), shorter)
+  }
+
   test("weights binary round-trip preserves values exactly") {
     val net = new Network(NetSpec.input(3).dense(4, "relu").dense(2, "linear").loss("mse"))
     val ts = net.initWeights(6L)
@@ -104,11 +120,28 @@ class NetworkSpec extends AnyFunSuite {
     ts.zip(back).foreach { case (a, b) => assert(a == b) }
   }
 
-  test("tensors average matches elementwise mean (T19 calculate_weights)") {
-    val a: Tensors = Array(DenseMatrix((1.0, 2.0), (3.0, 4.0)))
-    val b: Tensors = Array(DenseMatrix((3.0, 6.0), (5.0, 0.0)))
-    val avg = Tensors.average(Seq(a, b))
-    assert(avg(0) == DenseMatrix((2.0, 4.0), (4.0, 2.0)))
+  test("weights binary decode checks declared sizes against the payload before allocating") {
+    def payload(ints: Int*): Array[Byte] = {
+      val bb = java.nio.ByteBuffer.allocate(4 * ints.length) // big-endian, like toBytes
+      ints.foreach(bb.putInt)
+      bb.array()
+    }
+    def rejected(bytes: Array[Byte]): String =
+      intercept[IllegalArgumentException](Tensors.fromBytes(bytes)).getMessage
+    // 12 bytes declaring one 20000x20000 tensor: 3.2 GB if trusted
+    val big = rejected(payload(1, 20000, 20000))
+    assert(big.contains("20000x20000") && big.contains("3200000000") &&
+      big.contains("0 bytes are left"), big)
+    // a tensor count near Int.MaxValue with nothing after it
+    val many = rejected(payload(Int.MaxValue))
+    assert(many.contains(s"${Int.MaxValue} tensors") && many.contains("only 0 bytes"), many)
+    // rows * cols overflows Int; negative counts and shapes
+    assert(rejected(payload(1, 65536, 65536)).contains("65536x65536"))
+    assert(rejected(payload(-1)).contains("-1 tensors"))
+    assert(rejected(payload(1, -2, 3)).contains("-2x3"))
+    // a shape that fits the bytes left still decodes
+    val ok = Tensors.fromBytes(payload(1, 0, 5))
+    assert(ok.length == 1 && ok(0).rows == 0 && ok(0).cols == 5)
   }
 
   test("dropout: inference identity, training masks hidden units") {

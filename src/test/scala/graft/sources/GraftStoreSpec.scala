@@ -87,6 +87,36 @@ class GraftStoreSpec extends AnyFunSuite {
     assert(GraftStore.read(spark, dir).count() == 7)
   }
 
+  test("a failed batch append aborts: version unchanged, committed tasks' files deleted") {
+    val dir = tmp()
+    // partition 3 throws after the others have committed their files
+    val boom = udf { (id: Long) =>
+      if (org.apache.spark.TaskContext.getPartitionId() == 3) {
+        Thread.sleep(1500); throw new IllegalStateException("partition 3 fails")
+      }
+      id
+    }
+    def frame(parts: Int) = spark.range(0, 100, 1, parts).select(boom(col("id")).as("k"))
+    GraftStore.write(frame(1), dir)
+    val data = new java.io.File(dir, "data")
+    def gsb() = data.listFiles().map(_.getName).filter(_.endsWith(".gsb")).toSet
+    val before = gsb()
+    val sc = spark.sparkContext
+    sc.setJobGroup("gstore-abort", "append with one failing partition")
+    try intercept[Exception](GraftStore.write(frame(4), dir))
+    finally sc.clearJobGroup()
+    // some tasks of the failed job did commit, so abort had files to delete
+    def completedTasks = sc.statusTracker.getJobIdsForGroup("gstore-abort").toSeq
+      .flatMap(sc.statusTracker.getJobInfo(_)).flatMap(_.stageIds)
+      .flatMap(sc.statusTracker.getStageInfo(_)).map(_.numCompletedTasks).sum
+    val deadline = System.currentTimeMillis() + 10000
+    while (completedTasks == 0 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    assert(completedTasks >= 1)
+    assert(GraftStore.currentVersion(dir) == Some(1L))
+    assert(gsb() == before)
+    assert(GraftStore.read(spark, dir).count() == 100)
+  }
+
   test("append with drifted schema fails before writing") {
     val dir = tmp()
     GraftStore.write(docs.limit(3), dir)

@@ -39,4 +39,14 @@ class HogwildTrainerSpec extends AnyFunSuite {
       assert(new Network(spec).initWeights(cfg.seed).zip(local).exists { case (a, b) => a != b })
     }
   }
+
+  test("mismatched label width fails with a clear message, not zero-padding") {
+    val spec3 = NetSpec.input(2).dense(4, "tanh").dense(3, "softmax").loss("softmax_xent")
+    val bad = Seq((Array(0.0, 1.0), Array(1.0))) // scalar label, 3-wide output
+    val e = intercept[org.apache.spark.SparkException] {
+      HogwildTrainer.fit(graft.SparkFixture.spark.sparkContext.parallelize(bad, 1), spec3,
+        cfg.copy(iters = 1))
+    }
+    assert(e.getMessage.contains("label dim") || e.getCause.getMessage.contains("label dim"))
+  }
 }
