@@ -77,7 +77,9 @@ class NetworkSpec extends AnyFunSuite {
     intercept[RuntimeException](Loss.byName("hinge"))
     intercept[IllegalArgumentException](
       NetSpec(Seq(LayerSpec(2, 3, "relu"), LayerSpec(4, 1, "linear")), "mse"))
-    // a loss paired with the wrong output activation
+  }
+
+  test("loss/activation mispairing rejected at spec construction") {
     intercept[IllegalArgumentException](
       NetSpec.input(4).dense(3, "linear").loss("softmax_xent"))
     intercept[IllegalArgumentException](
