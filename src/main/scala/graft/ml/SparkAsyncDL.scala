@@ -48,9 +48,10 @@ private[ml] trait AsyncDLParams extends Params
     * tensor count); 1 = always the single driver-hosted server; N ≥ 2 =
     * exactly N shards (capped at the tensor count). The single server
     * serializes whole models through one endpoint per pull/push — the
-    * measured ceiling once workers × model size grows
-    * (PsShardingThroughputSpec); sharding splits every transfer into
-    * concurrent per-slice exchanges. */
+    * ceiling once workers × model size grows, measured across executor
+    * processes (PsLocalClusterBenchSpec; in one JVM a single server now
+    * keeps up, SCALE.md Round 16 addendum); sharding splits every
+    * transfer into concurrent per-slice exchanges. */
   final val psShards = new IntParam(this, "psShards",
     "parameter-server shards; 0 = auto by model size")
 

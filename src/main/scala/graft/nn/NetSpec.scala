@@ -1,7 +1,7 @@
 package graft.nn
 
-import breeze.linalg.{DenseMatrix, sum => bsum, max => bmax, *}
-import breeze.numerics.{exp, log => blog, sigmoid => bsigmoid, tanh => btanh}
+import breeze.linalg.{DenseMatrix, sum => bsum}
+import breeze.numerics.{log => blog, sigmoid => bsigmoid, tanh => btanh}
 
 /** Activation functions over row-batched matrices (rows = samples).
   *
@@ -12,51 +12,92 @@ import breeze.numerics.{exp, log => blog, sigmoid => bsigmoid, tanh => btanh}
   */
 sealed trait Activation extends Serializable {
   def name: String
+  /** The activated output a = f(z); `z` is left as it is. */
   def f(z: DenseMatrix[Double]): DenseMatrix[Double]
-  /** dA/dZ expressed in terms of the activated output a = f(z).
+  /** `dOut *:* dA/dZ`, dA/dZ written in terms of the activated output
+    * a = f(z), in one pass that overwrites `dOut` and returns it.
     * Softmax is excluded (combined with cross-entropy in the loss). */
-  def dAdZ(a: DenseMatrix[Double]): DenseMatrix[Double]
+  def backward(dOut: DenseMatrix[Double], a: DenseMatrix[Double]): DenseMatrix[Double]
 }
 
 object Activation {
-  case object Linear extends Activation {
+  /** The backing array of a [[Tensors.isPlain]] matrix: the kernels here
+    * walk it directly. */
+  private[nn] def colMajor(m: DenseMatrix[Double]): Array[Double] = {
+    require(Tensors.isPlain(m), s"expected a plain column-major ${m.rows}x${m.cols} matrix")
+    m.data
+  }
+
+  /** An activation applied value by value. [[backward]] gives each element
+    * `d * dadz(a)`, the product the tensor form `dOut *:* dAdZ(a)` takes. */
+  sealed abstract class Pointwise extends Activation {
+    /** dA/dZ at one activated value a. */
+    protected def dadz(a: Double): Double
+    final def backward(dOut: DenseMatrix[Double], a: DenseMatrix[Double]): DenseMatrix[Double] = {
+      require(dOut.rows == a.rows && dOut.cols == a.cols,
+        s"gradient ${dOut.rows}x${dOut.cols} does not match activation ${a.rows}x${a.cols}")
+      val d = colMajor(dOut)
+      val av = colMajor(a)
+      val n = dOut.size
+      var k = 0
+      while (k < n) { d(k) = d(k) * dadz(av(k)); k += 1 }
+      dOut
+    }
+  }
+
+  case object Linear extends Pointwise {
     val name = "linear"
     def f(z: DenseMatrix[Double]) = z
-    def dAdZ(a: DenseMatrix[Double]) = DenseMatrix.ones[Double](a.rows, a.cols)
+    protected def dadz(a: Double) = 1.0
   }
-  case object Relu extends Activation {
+  case object Relu extends Pointwise {
     val name = "relu"
-    def f(z: DenseMatrix[Double]) = z.map(v => if (v > 0) v else 0.0)
-    def dAdZ(a: DenseMatrix[Double]) = a.map(v => if (v > 0) 1.0 else 0.0)
+    def f(z: DenseMatrix[Double]) = {
+      val zd = colMajor(z)
+      val out = new Array[Double](z.size)
+      var k = 0
+      while (k < out.length) { val v = zd(k); out(k) = if (v > 0) v else 0.0; k += 1 }
+      new DenseMatrix(z.rows, z.cols, out)
+    }
+    protected def dadz(a: Double) = if (a > 0) 1.0 else 0.0
   }
-  case object Sigmoid extends Activation {
+  case object Sigmoid extends Pointwise {
     val name = "sigmoid"
     def f(z: DenseMatrix[Double]) = bsigmoid(z)
-    def dAdZ(a: DenseMatrix[Double]) = a *:* (1.0 - a)
+    protected def dadz(a: Double) = a * (1.0 - a)
   }
-  case object Tanh extends Activation {
+  case object Tanh extends Pointwise {
     val name = "tanh"
     def f(z: DenseMatrix[Double]) = btanh(z)
-    def dAdZ(a: DenseMatrix[Double]) = 1.0 - (a *:* a)
+    protected def dadz(a: Double) = 1.0 - a * a
   }
   /** Row-wise softmax; only legal as the final activation, paired with
-    * [[Loss.SoftmaxXent]] (which supplies the combined gradient). */
+    * [[Loss.SoftmaxXent]] (which supplies the combined gradient). Each row
+    * is shifted by its max, exponentiated, summed left to right and
+    * divided by that sum, walking the row at stride `rows` through the
+    * column-major data. */
   case object Softmax extends Activation {
     val name = "softmax"
     def f(z: DenseMatrix[Double]) = {
-      val out = DenseMatrix.zeros[Double](z.rows, z.cols)
+      val zd = colMajor(z)
+      val rows = z.rows
+      val n = z.size
+      val out = new Array[Double](n)
       var r = 0
-      while (r < z.rows) {
-        val row = z(r, ::).t
-        val m = bmax(row)
-        val e = exp(row - m)
-        val s = bsum(e)
-        out(r, ::) := (e / s).t
+      while (r < rows) {
+        var m = Double.NegativeInfinity
+        var k = r
+        while (k < n) { m = math.max(m, zd(k)); k += rows }
+        var s = 0.0
+        k = r
+        while (k < n) { val e = math.exp(zd(k) - m); out(k) = e; s += e; k += rows }
+        k = r
+        while (k < n) { out(k) = out(k) / s; k += rows }
         r += 1
       }
-      out
+      new DenseMatrix(rows, z.cols, out)
     }
-    def dAdZ(a: DenseMatrix[Double]) =
+    def backward(dOut: DenseMatrix[Double], a: DenseMatrix[Double]) =
       sys.error("softmax gradient is combined into SoftmaxXent loss")
   }
 
@@ -89,7 +130,7 @@ object Loss {
       val dA = (p - y) * (2.0 / (p.rows.toDouble * p.cols.toDouble))
       outAct match {
         case Activation.Softmax => sys.error("mse+softmax unsupported; use softmax_xent")
-        case a                  => dA *:* a.dAdZ(p)
+        case a                  => a.backward(dA, p)
       }
     }
   }
@@ -118,7 +159,7 @@ object Loss {
       case a =>
         val eps = 1e-12
         val dA = ((p - y) /:/ ((p *:* (1.0 - p)) + eps)) / (p.rows.toDouble * p.cols.toDouble)
-        dA *:* a.dAdZ(p)
+        a.backward(dA, p)
     }
   }
 

@@ -10,7 +10,14 @@ import scala.util.Random
   * Replaces the reference's per-partition TensorFlow session
   * (lifeomic/sparkflow `HogwildSparkModel.py:38-100` computes
   * `tf.gradients(loss, trainables)`); the math is explicit so it runs on
-  * the JVM with netlib BLAS and no native deps. Conv layers use im2col so
+  * the JVM with no native deps: Breeze hands the GEMMs to netlib's
+  * `BLAS.getInstance()`. With no native BLAS installed and no
+  * `jdk.incubator.vector` module, JNIBLAS and VectorBLAS fail to load (the
+  * two WARNING lines at start-up) and it resolves to the pure-Java
+  * `dev.ludovic.netlib.blas.Java11BLAS`. Bias add, activations and their
+  * gradients are single passes over the column-major data; each element
+  * takes the operations of the Breeze tensor expressions in the same
+  * order, bit for bit (KernelParitySpec). Conv layers use im2col so
   * the hot loop is one GEMM per layer; images are flat row vectors with
   * (y, x, channel) row-major layout, channel innermost.
   *
@@ -156,6 +163,20 @@ final class Network(val spec: NetSpec) extends Serializable {
     out
   }
 
+  /** z(r, c) += b(0, c): one pass down each column of a GEMM output. */
+  private def addBias(z: DenseMatrix[Double], b: DenseMatrix[Double]): Unit = {
+    val zd = Activation.colMajor(z)
+    val rows = z.rows
+    var c = 0
+    while (c < z.cols) {
+      val bc = b(0, c)
+      var k = c * rows
+      val end = k + rows
+      while (k < end) { zd(k) += bc; k += 1 }
+      c += 1
+    }
+  }
+
   private final class Caches {
     val input = new Array[DenseMatrix[Double]](nLayers) // layer input (post prior dropout)
     val actOut = new Array[DenseMatrix[Double]](nLayers) // activated out (dense flat / conv Z-shape)
@@ -171,14 +192,14 @@ final class Network(val spec: NetSpec) extends Serializable {
     l.kind match {
       case "dense" =>
         val z = x * ts(2 * i)
-        z(*, ::) :+= ts(2 * i + 1).toDenseVector
+        addBias(z, ts(2 * i + 1))
         val a = acts(i).f(z)
         if (caches != null) caches.actOut(i) = a
         a
       case "conv2d" =>
         val p = im2col(x, l)
         val z = p * ts(2 * i)
-        z(*, ::) :+= ts(2 * i + 1).toDenseVector
+        addBias(z, ts(2 * i + 1))
         val a = acts(i).f(z)
         if (caches != null) { caches.patches(i) = p; caches.actOut(i) = a }
         zToFlat(a, x.rows)
@@ -223,25 +244,27 @@ final class Network(val spec: NetSpec) extends Serializable {
     }
   }
 
-  /** Gradient w.r.t. this layer's flat output (`dOut`; or pre-activation
-    * `dZ` of the final dense layer when `isDZ`) → (dIn, gW, gb). */
+  /** Gradient w.r.t. this layer's flat output (`dOut`, overwritten; or
+    * pre-activation `dZ` of the final dense layer when `isDZ`) → (dIn, gW,
+    * gb). dIn is null when `needDIn` is false: nothing consumes the first
+    * layer's input gradient. */
   private def layerBackward(
-      i: Int, dOut: DenseMatrix[Double], isDZ: Boolean, ts: Tensors, caches: Caches)
-      : (DenseMatrix[Double], DenseMatrix[Double], DenseMatrix[Double]) = {
+      i: Int, dOut: DenseMatrix[Double], isDZ: Boolean, needDIn: Boolean, ts: Tensors,
+      caches: Caches): (DenseMatrix[Double], DenseMatrix[Double], DenseMatrix[Double]) = {
     val l = layers(i)
     l.kind match {
       case "dense" =>
-        val dZ = if (isDZ) dOut else dOut *:* acts(i).dAdZ(caches.actOut(i))
+        val dZ = if (isDZ) dOut else acts(i).backward(dOut, caches.actOut(i))
         val gW = caches.input(i).t * dZ
         val gb = bsum(dZ(::, *)).t.toDenseMatrix
-        (dZ * ts(2 * i).t, gW, gb)
+        (if (needDIn) dZ * ts(2 * i).t else null, gW, gb)
       case "conv2d" =>
-        val dZflat = flatToZ(dOut, l.filters)
-        val dZ = dZflat *:* acts(i).dAdZ(caches.actOut(i))
+        val dZ = acts(i).backward(flatToZ(dOut, l.filters), caches.actOut(i))
         val gW = caches.patches(i).t * dZ
         val gb = bsum(dZ(::, *)).t.toDenseMatrix
-        val dP = dZ * ts(2 * i).t
-        (col2im(dP, l, dOut.rows), gW, gb)
+        (if (needDIn) col2im(dZ * ts(2 * i).t, l, dOut.rows) else null, gW, gb)
+      case "maxpool" if !needDIn =>
+        (null, DenseMatrix.zeros[Double](0, 0), DenseMatrix.zeros[Double](0, 0))
       case "maxpool" =>
         val dx = DenseMatrix.zeros[Double](dOut.rows, l.in)
         val arg = caches.argmax(i)
@@ -302,7 +325,7 @@ final class Network(val spec: NetSpec) extends Serializable {
     var isDZ = true
     i = nLayers - 1
     while (i >= 0) {
-      val (dIn, gW, gb) = layerBackward(i, dOut, isDZ, ts, caches)
+      val (dIn, gW, gb) = layerBackward(i, dOut, isDZ, i > 0, ts, caches)
       grads(2 * i) = gW
       grads(2 * i + 1) = gb
       isDZ = false

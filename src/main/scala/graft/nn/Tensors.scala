@@ -1,7 +1,7 @@
 package graft.nn
 
 import breeze.linalg.DenseMatrix
-import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream, ByteArrayInputStream}
+import java.nio.ByteBuffer
 
 /** Uniform weight/gradient representation: a flat list of matrices.
   *
@@ -23,41 +23,66 @@ object Tensors {
 
   def copy(ts: Tensors): Tensors = ts.map(_.copy)
 
-  // ---- binary wire codec (little-endian-free: DataOutput big-endian) ----
+  /** Whether `t`'s backing array holds its values column-major from index
+    * 0, as every matrix a GEMM, `fill` or [[fromBytes]] makes does. */
+  private[nn] def isPlain(t: DenseMatrix[Double]): Boolean =
+    t.offset == 0 && !t.isTranspose && t.majorStride == t.rows
+
+  // ---- binary wire codec: big-endian, as java.io.DataOutput writes ----
+  // int count, then per tensor int rows, int cols and rows*cols doubles in
+  // column-major order. One exact-size buffer, the doubles bulk-copied.
 
   def toBytes(ts: Tensors): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(ts.length)
+    val size = ts.foldLeft(4L)((s, t) => s + 8 + 8L * t.size)
+    require(size <= Int.MaxValue, s"$size bytes of tensors do not fit one array")
+    val bb = ByteBuffer.allocate(size.toInt) // big-endian
+    bb.putInt(ts.length)
     ts.foreach { t =>
-      out.writeInt(t.rows); out.writeInt(t.cols)
-      val data = t.toDenseMatrix.toArray // column-major
+      bb.putInt(t.rows).putInt(t.cols)
+      val data = if (isPlain(t)) t.data else t.toArray // column-major
+      val n = t.size
+      val start = bb.position()
+      bb.asDoubleBuffer().put(data, 0, n)
+      // the bulk copy keeps a NaN's raw bits; DataOutput writes every NaN
+      // as the canonical one (doubleToLongBits), and so does this codec
       var i = 0
-      while (i < data.length) { out.writeDouble(data(i)); i += 1 }
+      while (i < n) {
+        val v = data(i)
+        if (v != v) bb.putLong(start + 8 * i, java.lang.Double.doubleToLongBits(v))
+        i += 1
+      }
+      bb.position(start + 8 * n)
     }
-    out.flush()
-    bos.toByteArray
+    bb.array()
   }
 
   /** Decodes [[toBytes]]. The bytes may come from outside the program
     * (a POST to `/update`), so every declared size is checked against the
-    * bytes actually left before anything is allocated for it. */
+    * bytes actually left before anything is allocated for it, and bytes
+    * past the last declared tensor are refused. */
   def fromBytes(bytes: Array[Byte]): Tensors = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
+    val bb = ByteBuffer.wrap(bytes) // big-endian
+    require(bytes.length >= 4,
+      s"a tensor payload starts with a 4-byte count, but has ${bytes.length} bytes")
+    val n = bb.getInt()
     // each tensor needs at least its 8-byte shape header
-    require(n >= 0 && n.toLong * 8 <= in.available(),
-      s"declared $n tensors, but only ${in.available()} bytes follow the count")
-    Array.fill(n) {
-      val rows = in.readInt(); val cols = in.readInt()
-      require(rows >= 0 && cols >= 0 && rows.toLong * cols * 8 <= in.available(),
+    require(n >= 0 && n.toLong * 8 <= bb.remaining(),
+      s"declared $n tensors, but only ${bb.remaining()} bytes follow the count")
+    val ts = Array.tabulate(n) { k =>
+      require(bb.remaining() >= 8,
+        s"tensor $k of $n needs an 8-byte shape header, but only ${bb.remaining()} bytes are left")
+      val rows = bb.getInt(); val cols = bb.getInt()
+      require(rows >= 0 && cols >= 0 && rows.toLong * cols * 8 <= bb.remaining(),
         s"declared a ${rows}x$cols tensor (${rows.toLong * cols * 8} bytes), " +
-          s"but only ${in.available()} bytes are left")
+          s"but only ${bb.remaining()} bytes are left")
       val data = new Array[Double](rows * cols)
-      var i = 0
-      while (i < data.length) { data(i) = in.readDouble(); i += 1 }
-      new DenseMatrix(rows, cols, data) // column-major, matches toArray
+      bb.asDoubleBuffer().get(data)
+      bb.position(bb.position() + 8 * data.length)
+      new DenseMatrix(rows, cols, data) // column-major, as written
     }
+    require(!bb.hasRemaining,
+      s"${bb.remaining()} bytes follow the last of the $n declared tensors")
+    ts
   }
 
   // ---- JSON codec (nested lists, row-major like numpy.tolist()) ----

@@ -153,9 +153,9 @@ final class ParameterServer(
 }
 
 /** Worker-side HTTP client — parity with `get_server_weights` /
-  * `put_deltas_to_server` (`HogwildSparkModel.py:22-35`). POST failures are
-  * logged and swallowed like the reference's worker loop
-  * (`HogwildSparkModel.py:68-92`). */
+  * `put_deltas_to_server` (`HogwildSparkModel.py:22-35`). POST failures,
+  * and answers other than 200, are logged and swallowed like the
+  * reference's worker loop (`HogwildSparkModel.py:68-92`). */
 object ParamsClient {
   def getWeights(masterUrl: String): Tensors = {
     val c = new java.net.URI(s"http://$masterUrl/parameters").toURL
@@ -176,7 +176,14 @@ object ParamsClient {
       c.setFixedLengthStreamingMode(bytes.length)
       val os = c.getOutputStream
       os.write(bytes); os.close()
-      c.getResponseCode // drain
+      val code = c.getResponseCode
+      if (code != 200) {
+        // a refused set (say, mis-shaped) is logged like a failed POST
+        val err = c.getErrorStream
+        val msg = if (err == null) "" else new String(err.readAllBytes(), "UTF-8")
+        System.err.println(
+          s"[graft] partition $partitionId gradient post refused: HTTP $code: $msg")
+      }
       c.disconnect()
     } catch {
       case e: Exception =>

@@ -86,11 +86,15 @@ object HogwildTrainer {
   }
 
   /** Auto-sharding threshold: one parameter-server shard per this many
-    * weight elements. 2^17 doubles = 1 MiB of model per shard — below
-    * it a single server's serialization keeps up with 16 concurrent
-    * workers and the extra endpoints are pure overhead; above it the
-    * per-pull serialization dominates and sharding's concurrent
-    * per-slice transfers win (measured in PsShardingThroughputSpec). */
+    * weight elements, 2^17 doubles = 1 MiB of model per shard. It was set
+    * when the codec wrote one double per call and per-pull serialization
+    * dominated above 1 MiB. With the bulk-copy codec a single in-JVM
+    * server on the 2 MiB model of PsShardingThroughputSpec runs 118–135
+    * rounds/s at 16 workers (50–58 before) and beats 4 loopback shards
+    * (×0.76–0.85); a lone worker's 4-shard gain fell from ×2.4–2.8 to
+    * ×1.6. Across executor processes (PsLocalClusterBenchSpec) 4 shards
+    * still win on that model (×1.66 in one run). SCALE.md, Round 16
+    * addendum, holds the record. */
   private[graft] val AutoShardElems: Long = 1L << 17
   /** Auto-sharding cap: matches the in-process endpoint count past
     * which added shards stop helping on one host. */

@@ -146,6 +146,46 @@ class NetworkSpec extends AnyFunSuite {
     assert(ok.length == 1 && ok(0).rows == 0 && ok(0).cols == 5)
   }
 
+  test("weights binary decode refuses a cut-short header and bytes past the last tensor") {
+    def rejected(bytes: Array[Byte]): String =
+      intercept[IllegalArgumentException](Tensors.fromBytes(bytes)).getMessage
+    // the count itself cut short
+    val noCount = rejected(Array[Byte](0, 0))
+    assert(noCount.contains("4-byte count") && noCount.contains("has 2 bytes"), noCount)
+    // two tensors declared; the first (1x1) takes every byte left, so the
+    // second's shape header is missing
+    val header = rejected(java.nio.ByteBuffer.allocate(4 + 8 + 8 + 7) // 7 of its 8 bytes
+      .putInt(2).putInt(1).putInt(1).putDouble(1.5).array())
+    assert(header.contains("tensor 1 of 2") && header.contains("8-byte shape header") &&
+      header.contains("only 7 bytes are left"), header)
+    // a whole, valid payload with bytes after it
+    val ts: Tensors = Array(DenseMatrix((1.0, 2.0)), DenseMatrix.zeros[Double](0, 0))
+    val trailing = rejected(Tensors.toBytes(ts) ++ Array[Byte](9, 9, 9))
+    assert(trailing.contains("3 bytes follow the last of the 2 declared tensors"), trailing)
+  }
+
+  test("weights binary encoding is the big-endian DataOutput layout, byte for byte") {
+    val quietNaN = java.lang.Double.longBitsToDouble(0xfff8000000000001L)
+    val ts: Tensors =
+      new Network(NetSpec.input(3).dense(4, "relu").dense(2, "linear").loss("mse"))
+        .initWeights(8L) ++ Array(
+      DenseMatrix((1.0, -0.0, quietNaN), (Double.PositiveInfinity, Double.MinPositiveValue, -7.25)),
+      DenseMatrix((1.0, 2.0, 3.0), (4.0, 5.0, 6.0)).t, // a transposed view
+      DenseMatrix.zeros[Double](0, 0))
+    // the codec as written with java.io: count, then rows, cols and the
+    // column-major doubles of each tensor (DataOutput writes every NaN as
+    // the canonical one)
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bos)
+    out.writeInt(ts.length)
+    ts.foreach { t =>
+      out.writeInt(t.rows); out.writeInt(t.cols)
+      for (c <- 0 until t.cols; r <- 0 until t.rows) out.writeDouble(t(r, c))
+    }
+    out.flush()
+    assert(Tensors.toBytes(ts).sameElements(bos.toByteArray))
+  }
+
   test("dropout: inference identity, training masks hidden units") {
     val spec = NetSpec.input(4).dense(50, "relu", dropout = 0.5).dense(2, "linear").loss("mse")
     val net = new Network(spec)

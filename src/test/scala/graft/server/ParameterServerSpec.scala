@@ -86,6 +86,26 @@ class ParameterServerSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("a refused push is logged with the partition, the status and the server's message") {
+    val w: Tensors = Array(DenseMatrix((1.0, 1.0)), DenseMatrix((2.0, 2.0, 2.0)))
+    val srv = new ParameterServer(w, Optimizer.build("sgd", 0.5),
+      port = 0, acquireLock = false)
+    srv.start()
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    try {
+      srv.awaitReady()
+      System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+      // second tensor 1x2 instead of 1x3: the server answers 500
+      ParamsClient.postGradients(s"127.0.0.1:${srv.boundPort}",
+        Array(DenseMatrix((1.0, 1.0)), DenseMatrix((1.0, 1.0))), 41)
+    } finally { System.setErr(saved); srv.stop() }
+    val logged = err.toString("UTF-8")
+    assert(logged.contains("partition 41") && logged.contains("HTTP 500") &&
+      logged.contains("gradient shapes 1x2,1x2 do not match the 2 weight tensors"), logged)
+    assert(srv.errorCount == 1)
+  }
+
   test("client POST failure is swallowed (reference worker policy)") {
     // no server on this port — must not throw
     ParamsClient.postGradients("127.0.0.1:5999", Array(DenseMatrix((1.0, 1.0))), 7)
