@@ -18,8 +18,7 @@ import graft.train.HogwildTrainer
   * JSON instead of a TF MetaGraphDef; `tfInput`/`tfLabel`/`tfOutput`/
   * `tfDropout` are tensor-name params kept for drop-in API parity (our
   * declarative spec doesn't need them to locate tensors; `tfLabel` unset
-  * still switches autoencoder mode, see fit()). [[psShards]] is the only
-  * param the reference does not have.
+  * still switches autoencoder mode, see fit()).
   */
 private[ml] trait AsyncDLParams extends Params
     with HasInputCol with HasLabelCol with HasPredictionCol {
@@ -41,37 +40,32 @@ private[ml] trait AsyncDLParams extends Params
   final val partitionShuffles = new IntParam(this, "partitionShuffles", "full-shuffle training rounds")
   final val optimizerOptions = new Param[String](this, "optimizerOptions", "optimizer options JSON")
   final val port = new IntParam(this, "port", "parameter-server port")
-  /** The only extension beyond the reference's 21 params: the
-    * parameter-server shard count. 0 = auto — shard once the model outgrows
-    * [[HogwildTrainer.AutoShardElems]] elements (one shard per threshold's
-    * worth of weights, capped at [[HogwildTrainer.AutoShardMax]] and the
-    * tensor count); 1 = always the single driver-hosted server; N ≥ 2 =
-    * exactly N shards (capped at the tensor count). The single server
-    * serializes whole models through one endpoint per pull/push — the
-    * ceiling once workers × model size grows, measured across executor
-    * processes (PsLocalClusterBenchSpec; in one JVM a single server now
-    * keeps up, SCALE.md Round 16 addendum); sharding splits every
-    * transfer into concurrent per-slice exchanges. */
-  final val psShards = new IntParam(this, "psShards",
-    "parameter-server shards; 0 = auto by model size")
-
   setDefault(tfOptimizer -> "adam", tfLearningRate -> 0.01, iters -> 1000,
     predictionCol -> "predicted", partitions -> 5, miniBatchSize -> 128,
     miniStochasticIters -> -1, acquireLock -> false, shufflePerIter -> true,
     toKeepDropout -> false, verbose -> 0, partitionShuffles -> 1, port -> 5000,
-    optimizerOptions -> "{}", psShards -> 0)
+    optimizerOptions -> "{}")
 
+  /** `optimizerOptions` as name → value. Numbers and booleans (as 1/0)
+    * pass, unknown names included (`OptimizerConfigs` emits
+    * `use_locking`); text that is not a JSON object, or a value of any
+    * other type, throws rather than train on default hyper-parameters. */
   private[ml] def parsedOptions: Map[String, Double] = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    JsonMethods.parseOpt($(optimizerOptions)).collect { case JObject(fields) =>
-      fields.collect {
+    val text = $(optimizerOptions)
+    JsonMethods.parseOpt(text) match {
+      case Some(JObject(fields)) => fields.map {
         case (k, JDouble(v))  => k -> v
         case (k, JInt(v))     => k -> v.toDouble
         case (k, JBool(v))    => k -> (if (v) 1.0 else 0.0)
         case (k, JDecimal(v)) => k -> v.toDouble
+        case (k, v)           => throw new IllegalArgumentException(
+          s"optimizerOptions key '$k' is not a number or boolean: ${JsonMethods.compact(v)}")
       }.toMap
-    }.getOrElse(Map.empty)
+      case _ => throw new IllegalArgumentException(
+        s"optimizerOptions is not a JSON object: $text")
+    }
   }
 
   /** Row value → dense feature array. Accepts ml Vectors (dense AND sparse,
@@ -101,8 +95,9 @@ private[ml] trait AsyncDLParams extends Params
 
 /** Asynchronous distributed deep-learning Estimator — drop-in parity with
   * the reference's `SparkAsyncDL` (`tensorflow_async.py:102-321`), backed
-  * by the graft dense-net engine + driver-hosted parameter server instead
-  * of TensorFlow + Flask. */
+  * by the graft dense-net engine + one driver-hosted parameter server
+  * instead of TensorFlow + Flask. Its params are exactly the reference's
+  * 21 ([[AsyncDLParams]]). */
 class SparkAsyncDL(override val uid: String) extends Estimator[SparkAsyncDLModel]
     with AsyncDLParams with DefaultParamsWritable {
 
@@ -130,7 +125,13 @@ class SparkAsyncDL(override val uid: String) extends Estimator[SparkAsyncDLModel
   def setPartitionShuffles(v: Int): this.type = set(partitionShuffles, v)
   def setOptimizerOptions(v: String): this.type = set(optimizerOptions, v)
   def setPort(v: Int): this.type = set(port, v)
-  def setPsShards(v: Int): this.type = set(psShards, v)
+  /** Compatibility setter with no Param behind it: there is one
+    * parameter server, so only 1 is accepted. It goes once the benchmark
+    * (`perfbench`) stops calling it. */
+  def setPsShards(v: Int): this.type = {
+    require(v == 1, s"psShards=$v: there is one parameter server, so psShards must be 1")
+    this
+  }
 
   override def fit(dataset: Dataset[_]): SparkAsyncDLModel = {
     transformSchema(dataset.schema, logging = true)
@@ -170,7 +171,7 @@ class SparkAsyncDL(override val uid: String) extends Estimator[SparkAsyncDLModel
       partitionShuffles = $(partitionShuffles),
       verbose = $(verbose),
       port = $(port))
-    val weights = HogwildTrainer.fit(rdd, spec, cfg, $(psShards))
+    val weights = HogwildTrainer.fit(rdd, spec, cfg)
 
     val model = new SparkAsyncDLModel(uid + "_model")
       .setModelJson($(tensorflowGraph))

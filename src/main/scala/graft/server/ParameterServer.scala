@@ -3,7 +3,7 @@ package graft.server
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.net.InetSocketAddress
 import java.util.concurrent.Executors
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import graft.nn.Optimizer
 import graft.nn.Tensors
 import graft.nn.Tensors.Tensors
@@ -44,6 +44,7 @@ final class ParameterServer(
 
   private val lock = new WriterPriorityRWLock()
   private val errors = new AtomicInteger(0)
+  private val updates = new AtomicLong(0)
   @volatile private var aborted = false
   private var server: HttpServer = _
   private val pool = Executors.newCachedThreadPool()
@@ -101,6 +102,7 @@ final class ParameterServer(
             lock.lockWrite()
             try optimizer.step(weights, grads) finally lock.unlock()
           } else optimizer.step(weights, grads) // hogwild: racy by design
+          updates.incrementAndGet()
           respond(ex, 200, "ok".getBytes)
         } catch {
           case e: Throwable =>
@@ -133,6 +135,8 @@ final class ParameterServer(
 
   def isAborted: Boolean = aborted
   def errorCount: Int = errors.get()
+  /** Gradient sets applied so far (refused ones count in [[errorCount]]). */
+  def updateCount: Long = updates.get()
   def currentWeights: Tensors = {
     if (acquireLock) {
       lock.lockRead()

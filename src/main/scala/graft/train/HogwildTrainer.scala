@@ -5,7 +5,7 @@ import org.apache.spark.SparkEnv
 import org.apache.spark.rdd.RDD
 import graft.nn.{LocalTrainer, NetSpec, Network, Optimizer}
 import graft.nn.Tensors.Tensors
-import graft.server.{ShardedParameterServer, ShardedParamsClient}
+import graft.server.{ParameterServer, ParamsClient}
 
 /** Distributed data-parallel trainer — the reference's `HogwildSparkModel`
   * (lifeomic/sparkflow `HogwildSparkModel.py:103-272`) re-expressed for the
@@ -24,7 +24,7 @@ import graft.server.{ShardedParameterServer, ShardedParamsClient}
   * batch, so wire cost = O(model size x batches), independent of data
   * size; data never moves to the driver. Partition count should track
   * executor count (`coalesce` guard in [[graft.ml.SparkAsyncDL]]) so each
-  * worker streams its shard once per round.
+  * worker streams its partition once per round.
   */
 object HogwildTrainer {
 
@@ -43,26 +43,22 @@ object HogwildTrainer {
       seed: Long = 42L)
 
   /** Train on an RDD of (features, label-vector) pairs; returns final
-    * weights. The parameter server is a [[ShardedParameterServer]] split
-    * `shards` ways ([[resolveShards]]): 1 is the reference's single
-    * driver-hosted server, N ≥ 2 splits every pull and push into N
-    * concurrent per-slice transfers (the scale path past one endpoint's
-    * NIC/serialization ceiling), 0 picks by model size. */
+    * weights. One driver-hosted [[ParameterServer]] serves every worker,
+    * the reference's single Flask endpoint
+    * (`HogwildSparkModel.py:156-180`). Throws if `iters ≥ 1` and no
+    * gradient reached the server: an empty input has nothing to train
+    * on, and its initial weights are not a fitted model. */
   def fit(
       rdd: RDD[(Array[Double], Array[Double])],
       spec: NetSpec,
-      cfg: Config,
-      shards: Int = 1): Tensors = {
-    val weights = new Network(spec).initWeights(cfg.seed)
-    val server = new ShardedParameterServer(
-      weights, () => Optimizer.build(cfg.optimizerName, cfg.learningRate, cfg.optimizerOptions),
-      cfg.port, resolveShards(shards, weights), cfg.acquireLock,
-      maxErrors = math.max(cfg.iters, 1))
+      cfg: Config): Tensors = {
+    val server = new ParameterServer(new Network(spec).initWeights(cfg.seed),
+      Optimizer.build(cfg.optimizerName, cfg.learningRate, cfg.optimizerOptions),
+      cfg.port, cfg.acquireLock, maxErrors = math.max(cfg.iters, 1))
     server.start()
     try {
       server.awaitReady()
-      val urls = server.boundPorts.map(determineMaster).toSeq
-      val bounds = server.sliceBounds.toSeq
+      val url = determineMaster(server.boundPort)
       val specJson = spec.toJson // ship the spec, not the Network object
       val workerCfg = cfg
       var current = rdd
@@ -70,7 +66,7 @@ object HogwildTrainer {
       val rounds = math.max(cfg.partitionShuffles, 1)
       while (round < rounds) {
         current.foreachPartition { it =>
-          workerPartition(it, specJson, urls, bounds, workerCfg)
+          workerPartition(it, specJson, url, workerCfg)
         }
         // surface persistent update failures instead of returning the
         // initial weights as if training succeeded
@@ -79,36 +75,13 @@ object HogwildTrainer {
         round += 1
         if (round < rounds) current = current.repartition(current.getNumPartitions)
       }
+      if (cfg.iters >= 1 && server.updateCount == 0 && server.errorCount == 0)
+        throw new IllegalArgumentException(
+          "training input has no rows: no gradient reached the parameter server")
       server.currentWeights
     } finally {
       server.stop() // always, like the reference's try/except (`:270-272`)
     }
-  }
-
-  /** Auto-sharding threshold: one parameter-server shard per this many
-    * weight elements, 2^17 doubles = 1 MiB of model per shard. It was set
-    * when the codec wrote one double per call and per-pull serialization
-    * dominated above 1 MiB. With the bulk-copy codec a single in-JVM
-    * server on the 2 MiB model of PsShardingThroughputSpec runs 118–135
-    * rounds/s at 16 workers (50–58 before) and beats 4 loopback shards
-    * (×0.76–0.85); a lone worker's 4-shard gain fell from ×2.4–2.8 to
-    * ×1.6. Across executor processes (PsLocalClusterBenchSpec) 4 shards
-    * still win on that model (×1.66 in one run). SCALE.md, Round 16
-    * addendum, holds the record. */
-  private[graft] val AutoShardElems: Long = 1L << 17
-  /** Auto-sharding cap: matches the in-process endpoint count past
-    * which added shards stop helping on one host. */
-  private[graft] val AutoShardMax: Int = 8
-
-  /** Shard count for [[fit]]: an explicit N ≥ 1 wins; 0 = one shard per
-    * [[AutoShardElems]] of model, capped by [[AutoShardMax]]. Both are
-    * capped by the tensor count (tensors are the atomic sharding unit). */
-  private[graft] def resolveShards(requested: Int, weights: Tensors): Int = {
-    val wanted =
-      if (requested >= 1) requested
-      else math.min(AutoShardMax.toLong,
-        weights.map(t => t.rows.toLong * t.cols).sum / AutoShardElems + 1).toInt
-    math.min(wanted, weights.length)
   }
 
   /** Rows → (features, labels) matrices, validating BOTH widths: a short
@@ -139,9 +112,8 @@ object HogwildTrainer {
 
   /** Per-partition worker — parity with `handle_model`
     * (`HogwildSparkModel.py:38-100`): materialize the partition, then run
-    * the three-batch-mode loop against the server, pulling and pushing
-    * every shard (`shardUrls`, ordered like `bounds`, the
-    * [[ShardedParameterServer.sliceBounds]]). Empty partitions no-op.
+    * the three-batch-mode loop against the server at `url`. Empty
+    * partitions no-op.
     *
     * At-least-once gradient contract: Spark may re-run a partition
     * (speculative execution, task retry after a lost executor), and this
@@ -152,15 +124,14 @@ object HogwildTrainer {
     * locks), so a duplicated partition perturbs the trajectory, not
     * convergence — pinned by StragglerRetrySpec. The trade is
     * deliberate: an exactly-once handshake would serialize every push
-    * through a dedup log at the server, which is the bottleneck sharding
-    * exists to remove. Consequence for operators: gradient counts are
+    * through a dedup log at the server, the one endpoint every worker
+    * already shares. Consequence for operators: gradient counts are
     * not exact under retries, so convergence criteria must be
     * loss-based, never update-count-based. */
   private[graft] def workerPartition(
       it: Iterator[(Array[Double], Array[Double])],
       specJson: String,
-      shardUrls: Seq[String],
-      bounds: Seq[(Int, Int)],
+      url: String,
       cfg: Config): Unit = {
     val rows = it.toArray
     if (rows.isEmpty) return
@@ -172,8 +143,8 @@ object HogwildTrainer {
       net, x, y,
       LocalTrainer.Config(cfg.iters, cfg.miniBatchSize, cfg.miniStochasticIters,
         cfg.shufflePerIter, cfg.verbose, cfg.seed + pid),
-      pull = () => ShardedParamsClient.getWeights(shardUrls),
-      push = g => ShardedParamsClient.postGradients(shardUrls, bounds, g, pid))
+      pull = () => ParamsClient.getWeights(url),
+      push = g => ParamsClient.postGradients(url, g, pid))
   }
 
   /** Driver URL for executors — `determine_master`

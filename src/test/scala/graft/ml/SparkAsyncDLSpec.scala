@@ -74,16 +74,47 @@ class SparkAsyncDLSpec extends AnyFunSuite {
     assert(errorCount(out) < 200, "worse than chance")
   }
 
-  test("psShards=2 routes the estimator through the sharded server end-to-end") {
-    val df = blobsDf()
-    val model = dl(5301).setPsShards(2).fit(df)
-    val out = model.transform(df)
-    assert(out.count() == 400)
-    assert(errorCount(out) < 200, "worse than chance")
-    // and the param persists through save/load
-    val dir = java.nio.file.Files.createTempDirectory("psshards").toString + "/m"
-    model.write.overwrite().save(dir)
-    assert(SparkAsyncDLModel.load(dir).getOrDefault(model.psShards) == 2)
+  test("setPsShards is a compat setter: 1 fits, any other count throws naming psShards") {
+    val df = blobsDf(20)
+    assert(dl(0).setIters(3).setPsShards(1).fit(df).transform(df).count() == 40)
+    for (n <- Seq(0, 2)) {
+      val e = intercept[IllegalArgumentException](dl(0).setPsShards(n))
+      assert(e.getMessage.contains("psShards"), e.getMessage)
+    }
+  }
+
+  test("malformed or non-numeric optimizerOptions fail the fit, naming the bad text or key") {
+    val df = blobsDf(10)
+    for ((opts, named) <- Seq(
+        "{beta1:0.5" -> "{beta1:0.5",
+        "[1]" -> "[1]",
+        """{"beta1":"0.85"}""" -> "beta1",
+        """{"beta2":null}""" -> "beta2")) {
+      val e = intercept[IllegalArgumentException](
+        dl(0).setIters(1).setOptimizerOptions(opts).fit(df))
+      assert(e.getMessage.contains("optimizerOptions") && e.getMessage.contains(named),
+        e.getMessage)
+    }
+    // numbers, booleans and names the optimizer does not read still pass
+    assert(new SparkAsyncDL()
+      .setOptimizerOptions("""{"beta1":0.85,"use_locking":false,"n":3}""")
+      .parsedOptions == Map("beta1" -> 0.85, "use_locking" -> 0.0, "n" -> 3.0))
+  }
+
+  test("an empty training set fails the fit; a one-row set trains, full batch and mini-batch") {
+    def xorDl = new SparkAsyncDL()
+      .setInputCol("features").setLabelCol("label")
+      .setNetSpec(xorSpec).setTfLearningRate(0.1).setIters(5).setPort(0)
+    val e = intercept[IllegalArgumentException](xorDl.fit(xorDf.limit(0)))
+    assert(e.getMessage.contains("no rows"), e.getMessage)
+    val initial = new graft.nn.Network(xorSpec).initWeights(HogwildTrainer.Config().seed)
+    for (batch <- Seq(-1, 16)) {
+      val one = xorDf.limit(1)
+      val model = xorDl.setMiniBatchSize(batch).fit(one)
+      assert(model.transform(one).count() == 1)
+      assert(model.weights.zip(initial).exists { case (a, b) => a != b },
+        s"miniBatchSize=$batch returned the initial weights")
+    }
   }
 
   test("sparse and dense vectors train identically shaped (test_small_sparse)") {

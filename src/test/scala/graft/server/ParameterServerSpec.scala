@@ -40,6 +40,7 @@ class ParameterServerSpec extends AnyFunSuite {
       val after = srv.currentWeights
       // 400 updates of -0.001 each, applied under the write lock: exact
       assert(math.abs(after(0)(0, 0) - (1.0 - 0.4)) < 1e-9)
+      assert(srv.updateCount == 400)
     } finally srv.stop()
   }
 
@@ -61,6 +62,7 @@ class ParameterServerSpec extends AnyFunSuite {
       assert(srv.errorCount == 1 && !srv.isAborted)
       postGarbage()
       assert(srv.errorCount == 2 && srv.isAborted) // abort threshold reached
+      assert(srv.updateCount == 0) // a refused set is not an applied update
       // still serves parameters after abort flag (driver decides what to do)
       assert(ParamsClient.getWeights("127.0.0.1:5303")(0) == DenseMatrix((1.0, 1.0)))
     } finally srv.stop()

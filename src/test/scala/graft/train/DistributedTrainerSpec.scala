@@ -3,7 +3,7 @@ package graft.train
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Multi-PROCESS distribution proof for the trainer (VERDICT r14 task
-  * #4): every other Hogwild/sharded-PS test runs executors in-process
+  * #4): every other Hogwild test runs executors in-process
   * (`local[n]`), so the executor→driver HTTP boundary
   * (`ParameterServer`) never crossed a real process boundary in CI.
   * This spec forks a fresh JVM running [[LocalClusterXorMain]], which

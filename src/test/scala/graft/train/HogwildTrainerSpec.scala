@@ -6,9 +6,7 @@ import graft.nn.{LocalTrainer, NetSpec, Network, Optimizer}
 /** A one-partition [[HogwildTrainer.fit]] is deterministic: one worker,
   * each push applied before its response (so the next pull sees it), and
   * a lossless binary wire codec. It must therefore reproduce
-  * [[LocalTrainer.fit]] with the same seed bit for bit — whatever the
-  * shard count, since shards hold disjoint tensors and Adam is
-  * element-wise. */
+  * [[LocalTrainer.fit]] with the same seed bit for bit. */
 class HogwildTrainerSpec extends AnyFunSuite {
   private val xor = Seq(
     (Array(0.0, 0.0), Array(0.0)), (Array(0.0, 1.0), Array(1.0)),
@@ -25,19 +23,17 @@ class HogwildTrainerSpec extends AnyFunSuite {
         cfg.shufflePerIter, cfg.verbose, cfg.seed))
   }
 
-  for (shards <- Seq(1, 3)) {
-    test(s"one-partition fit equals LocalTrainer.fit bit for bit (shards = $shards)") {
-      val rdd = graft.SparkFixture.spark.sparkContext.parallelize(xor, 1)
-      val w = HogwildTrainer.fit(rdd, spec, cfg, shards)
-      assert(w.length == local.length)
-      w.zip(local).zipWithIndex.foreach { case ((a, e), i) =>
-        assert(a.rows == e.rows && a.cols == e.cols, s"tensor $i shape")
-        assert(a.toArray.map(java.lang.Double.doubleToRawLongBits).toSeq ==
-          e.toArray.map(java.lang.Double.doubleToRawLongBits).toSeq, s"tensor $i differs")
-      }
-      // the run trained: the shared result is not the initial weights
-      assert(new Network(spec).initWeights(cfg.seed).zip(local).exists { case (a, b) => a != b })
+  test("one-partition fit equals LocalTrainer.fit bit for bit") {
+    val rdd = graft.SparkFixture.spark.sparkContext.parallelize(xor, 1)
+    val w = HogwildTrainer.fit(rdd, spec, cfg)
+    assert(w.length == local.length)
+    w.zip(local).zipWithIndex.foreach { case ((a, e), i) =>
+      assert(a.rows == e.rows && a.cols == e.cols, s"tensor $i shape")
+      assert(a.toArray.map(java.lang.Double.doubleToRawLongBits).toSeq ==
+        e.toArray.map(java.lang.Double.doubleToRawLongBits).toSeq, s"tensor $i differs")
     }
+    // the run trained: the shared result is not the initial weights
+    assert(new Network(spec).initWeights(cfg.seed).zip(local).exists { case (a, b) => a != b })
   }
 
   test("mismatched label width fails with a clear message, not zero-padding") {

@@ -24,8 +24,6 @@ class StragglerRetrySpec extends AnyFunSuite {
   // reference net shape (tests/dl_runner.py:45-53 in the reference)
   private val spec = NetSpec.input(2).dense(12, "tanh").dense(7, "tanh")
     .dense(1, "sigmoid").loss("mse")
-  // one shard holding every tensor: the single-server layout
-  private val bounds = Seq((0, new Network(spec).initWeights(42L).length))
 
   private def xorAccuracy(w: Tensors.Tensors): Int = {
     val net = new Network(spec)
@@ -56,8 +54,8 @@ class StragglerRetrySpec extends AnyFunSuite {
       // normal attempt, then Spark re-runs the SAME partition (a
       // speculative twin or post-failure retry): every gradient of the
       // first attempt is duplicated by the second
-      HogwildTrainer.workerPartition(xorRows.iterator, spec.toJson, Seq(url), bounds, cfg)
-      HogwildTrainer.workerPartition(xorRows.iterator, spec.toJson, Seq(url), bounds, cfg)
+      HogwildTrainer.workerPartition(xorRows.iterator, spec.toJson, url, cfg)
+      HogwildTrainer.workerPartition(xorRows.iterator, spec.toJson, url, cfg)
     }
     assert(xorAccuracy(w) >= 3, "duplicated partition broke convergence")
   }
@@ -72,7 +70,7 @@ class StragglerRetrySpec extends AnyFunSuite {
       val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
       val ts = (0 until 2).map { _ =>
         new Thread(() =>
-          try HogwildTrainer.workerPartition(xorRows.iterator, spec.toJson, Seq(url), bounds, cfg)
+          try HogwildTrainer.workerPartition(xorRows.iterator, spec.toJson, url, cfg)
           catch { case t: Throwable => errs.add(t) })
       }
       ts.foreach(_.start()); ts.foreach(_.join())
