@@ -344,27 +344,16 @@ object Bench {
     val line =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failed,"shuffle_bytes":$shuffle,"scan_bytes":$scan,"retried":$retried,"sf":"$sfDir","repeat":$repeat}"""
     println(line)
-    // Driver-visible per-query lens (r17 verdict item 1; additions only —
-    // every pre-existing output line is unchanged). The driver's capture
-    // keeps only the LAST 2000 chars of output, so the full record above
-    // is decapitated and PERF_r17.per_query came back empty two rounds
-    // running. Two additive forms restore the lens:
-    //  (a) chunked `per_query_sec` lines — each a complete JSON object
-    //      with ~20 queries, for any consumer that scans whole stdout;
-    //  (b) ONE `per_query_ms` line with integer milliseconds in
-    //      sorted-query-name order (~1.6 KB for 343 queries), sized so
-    //      that it + the final total line fit inside a 2000-char tail.
-    //      Its values follow the sorted names of the queries that RAN,
-    //      so pairing them with SparkEntry.queries.keys.toSeq.sorted
-    //      recovers per-query seconds only when the line's `n` equals
-    //      the full query count; under SPARK_GRAFT_ONLY (or any other
-    //      subset) the positions shift and that pairing is wrong.
-    results.grouped(20).zipWithIndex.foreach { case (chunk, i) =>
-      val part = chunk.map { case (k, v, _, _, _, _) =>
-        "\"" + k + "\":" + (if (v >= 0) f"$v%.3f" else "null")
-      }.mkString("{", ",", "}")
-      println(s"""{"metric":"per_query_sec","part":${i + 1},"queries":$part}""")
-    }
+    // Per-query lens for a reader of the output's tail: a capture that
+    // keeps only the LAST 2000 chars decapitates the full record above,
+    // so ONE `per_query_ms` line carries integer milliseconds in
+    // sorted-query-name order (~1.6 KB for 343 queries), sized so that it
+    // + the final total line fit inside that tail. Its values follow the
+    // sorted names of the queries that RAN, so pairing them with
+    // SparkEntry.queries.keys.toSeq.sorted recovers per-query seconds
+    // only when the line's `n` equals the full query count; under
+    // SPARK_GRAFT_ONLY (or any other subset) the positions shift and
+    // that pairing is wrong.
     val msArr = results.sortBy(_._1).map { case (_, v, _, _, _, _) =>
       if (v >= 0) math.round(v * 1000).toString else "null"
     }.mkString("[", ",", "]")

@@ -53,6 +53,19 @@ object SourceOps {
       s"graft-sql-warehouse-p${ProcessHandle.current().pid()}")
       .getAbsolutePath
 
+  /** Every catalog query's prologue: registers the `graft` SQL catalog
+    * on [[sqlWarehouse]] and creates `graft.gold`. The warehouse path is
+    * FIXED: CatalogManager caches the catalog instance with the options
+    * seen at FIRST use, so a per-dir path would silently pin later runs
+    * to the first run's warehouse. Cleanup is SQL (DROP TABLE routes
+    * through the same cached catalog), never a raw FS delete behind its
+    * back. */
+  private def useGraftCatalog(s: SparkSession): Unit = {
+    s.conf.set("spark.sql.catalog.graft", classOf[graft.sources.GraftCatalog].getName)
+    s.conf.set("spark.sql.catalog.graft.warehouse", sqlWarehouse)
+    s.sql("CREATE NAMESPACE IF NOT EXISTS graft.gold")
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // DSv2 generator scan: range pushdown narrows generation to
     // [2000, 12000) out of a declared 20000-row table; pruning drops
@@ -400,16 +413,7 @@ object SourceOps {
     // are O(manifest) driver metadata; the data path is the ordinary
     // DSv2 scan/write.
     "src_store_catalog_sql" -> { (s, dir) =>
-      // FIXED warehouse path: CatalogManager caches the catalog
-      // instance with the options seen at FIRST use, so a per-dir path
-      // would silently pin later runs to the first run's warehouse.
-      // Cleanup is SQL (DROP TABLE routes through the same cached
-      // catalog), never a raw FS delete behind its back.
-      val wh = SourceOps.sqlWarehouse
-      s.conf.set("spark.sql.catalog.graft",
-        classOf[graft.sources.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graft.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS graft.gold")
+      useGraftCatalog(s)
       s.sql("DROP TABLE IF EXISTS graft.gold.orders")
       orders(s, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -439,11 +443,7 @@ object SourceOps {
     // tables back through the catalog: the delete outcome is hash-gated
     // against a raw-parquet replay, the truncate row pins (0, 0.0).
     "src_store_catalog_dml" -> { (s, dir) =>
-      val wh = SourceOps.sqlWarehouse
-      s.conf.set("spark.sql.catalog.graft",
-        classOf[graft.sources.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graft.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS graft.gold")
+      useGraftCatalog(s)
       s.sql("DROP TABLE IF EXISTS graft.gold.orders_dml")
       s.sql("DROP TABLE IF EXISTS graft.gold.orders_trunc")
       orders(s, dir)
@@ -481,11 +481,7 @@ object SourceOps {
     // aggregate reads the table back through the catalog; the oracle
     // replays both mutations over raw parquet in plain SQL.
     "src_store_catalog_upsert" -> { (s, dir) =>
-      val wh = SourceOps.sqlWarehouse
-      s.conf.set("spark.sql.catalog.graft",
-        classOf[graft.sources.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graft.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS graft.gold")
+      useGraftCatalog(s)
       s.sql("DROP TABLE IF EXISTS graft.gold.orders_ups")
       orders(s, dir)
         .select(col("o_orderkey"), col("o_orderstatus"),
@@ -530,11 +526,7 @@ object SourceOps {
     // final table back through the catalog; the oracle replays
     // replace-then-append over raw parquet.
     "src_store_replace_where" -> { (s, dir) =>
-      val wh = SourceOps.sqlWarehouse
-      s.conf.set("spark.sql.catalog.graft",
-        classOf[graft.sources.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graft.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS graft.gold")
+      useGraftCatalog(s)
       s.sql("DROP TABLE IF EXISTS graft.gold.orders_rw")
       orders(s, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -567,11 +559,7 @@ object SourceOps {
     // 100 TB this is the schema-lifecycle a long-lived corpus store
     // actually runs: renames and drops land instantly, no rewrite job.
     "src_store_catalog_evolve" -> { (s, dir) =>
-      val wh = SourceOps.sqlWarehouse
-      s.conf.set("spark.sql.catalog.graft",
-        classOf[graft.sources.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graft.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS graft.gold")
+      useGraftCatalog(s)
       s.sql("DROP TABLE IF EXISTS graft.gold.orders_evo")
       orders(s, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -604,11 +592,7 @@ object SourceOps {
     // output pins both the traveled and the latest aggregate. The
     // oracle replays the two states from raw parquet.
     "src_store_catalog_travel" -> { (s, dir) =>
-      val wh = SourceOps.sqlWarehouse
-      s.conf.set("spark.sql.catalog.graft",
-        classOf[graft.sources.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graft.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS graft.gold")
+      useGraftCatalog(s)
       s.sql("DROP TABLE IF EXISTS graft.gold.orders_tt")
       orders(s, dir).select(col("o_orderkey"), col("o_totalprice"))
         .createOrReplaceTempView("orders_src_gtt")
@@ -645,11 +629,7 @@ object SourceOps {
     // tag pins the audited version — so the SQL surface, the versioning
     // contract, and the manifest row accounting are all under one hash.
     "src_store_catalog_meta" -> { (s, dir) =>
-      val wh = SourceOps.sqlWarehouse
-      s.conf.set("spark.sql.catalog.graft",
-        classOf[graft.sources.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graft.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS graft.gold")
+      useGraftCatalog(s)
       s.sql("DROP TABLE IF EXISTS graft.gold.orders_meta")
       orders(s, dir).select(col("o_orderkey"), col("o_totalprice"))
         .createOrReplaceTempView("orders_src_gmeta")
@@ -1085,11 +1065,7 @@ object SourceOps {
     // shuffle, every date-bounded reader afterward skips most of the
     // table without a partition-directory scheme.
     "src_store_clustered" -> { (s, dir) =>
-      val wh = SourceOps.sqlWarehouse
-      s.conf.set("spark.sql.catalog.graft",
-        classOf[graft.sources.GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graft.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS graft.gold")
+      useGraftCatalog(s)
       s.sql("DROP TABLE IF EXISTS graft.gold.orders_clustered")
       orders(s, dir)
         .select(col("o_orderkey"), col("o_orderdate"), col("o_orderstatus"),

@@ -263,7 +263,7 @@ object GraftStore {
     * (`manifest/chunk-<sha1₁₆>.list`) referenced by `chunk=` manifest
     * lines. Why: a self-contained manifest makes every commit O(table)
     * — at 10⁶ files that is a 76 MB rewrite per append (measured,
-    * ManifestBench). With fixed segment boundaries an append reuses
+    * SCALE.md). With fixed segment boundaries an append reuses
     * every untouched full segment BY HASH (same content → same path →
     * exclusive create says "exists", skip), so commit cost drops to
     * O(delta + ChunkSize). Chunks are immutable forever, so the chunk
@@ -1997,8 +1997,8 @@ private[sources] class GsbReader(
     renames: Seq[(String, String)] = Seq.empty)
     extends PartitionReader[InternalRow] {
   private val f = GraftStore.fs(root, new Configuration())
-  private val in = new DataInputStream(new java.io.BufferedInputStream(
-    f.open(new HPath(root, relPath)), 1 << 16))
+  private val path = new HPath(root, relPath)
+  private val in = new GsbInput(f.open(path), f.getFileStatus(path).getLen, relPath)
   require(in.readUTF() == "GSB1", s"graft-store: $relPath is not a GSB1 file")
   private val fileSchema = DataType.fromJson(in.readUTF()).asInstanceOf[StructType]
   // evolution-aware in all three directions: a file may carry a SUBSET
@@ -2501,7 +2501,7 @@ private[sources] object GsbCodec {
     * (row stores must decode every field to advance the cursor; the
     * projection trims what is materialized into Spark). A negative
     * ordinal null-fills — a column the file predates (schema evolution). */
-  def readRow(in: DataInputStream, schema: StructType, proj: Array[Int]): InternalRow = {
+  def readRow(in: GsbInput, schema: StructType, proj: Array[Int]): InternalRow = {
     val full = new Array[Any](schema.length)
     var i = 0
     while (i < schema.length) {
@@ -2515,7 +2515,7 @@ private[sources] object GsbCodec {
     new GenericInternalRow(vals)
   }
 
-  private def readValue(in: DataInputStream, dt: DataType): Any = {
+  private def readValue(in: GsbInput, dt: DataType): Any = {
     if (in.readByte() == 0) return null
     dt match {
       case BooleanType => in.readBoolean()
@@ -2524,13 +2524,13 @@ private[sources] object GsbCodec {
       case FloatType => in.readFloat()
       case DoubleType => in.readDouble()
       case StringType =>
-        val b = new Array[Byte](in.readInt()); in.readFully(b)
+        val b = new Array[Byte](in.readLength()); in.readFully(b)
         UTF8String.fromBytes(b)
       case BinaryType =>
-        val b = new Array[Byte](in.readInt()); in.readFully(b)
+        val b = new Array[Byte](in.readLength()); in.readFully(b)
         b
       case ArrayType(et, _) =>
-        val n = in.readInt()
+        val n = in.readLength() // each element takes at least its null byte
         val vals = new Array[Any](n)
         var j = 0
         while (j < n) { vals(j) = readValue(in, et); j += 1 }
@@ -2538,5 +2538,32 @@ private[sources] object GsbCodec {
       case other =>
         throw new UnsupportedOperationException(s"graft-store cannot decode $other")
     }
+  }
+}
+
+/** One data file's row stream: a `DataInputStream` that counts the bytes
+  * read, so that [[readLength]] checks a declared length (bytes, or array
+  * elements of at least one byte each) against the bytes left in the file
+  * before anything is allocated for it. */
+private[sources] final class GsbInput(raw: java.io.InputStream, fileLen: Long, file: String)
+    extends DataInputStream(new GsbInput.Counted(raw)) {
+  def readLength(): Int = {
+    val n = readInt()
+    val left = fileLen - in.asInstanceOf[GsbInput.Counted].count
+    require(n >= 0 && n <= left, s"graft-store: $file declares a length of $n " +
+      s"with $left bytes left in the file; the file is corrupt or torn")
+    n
+  }
+}
+
+private[sources] object GsbInput {
+  final class Counted(raw: java.io.InputStream)
+      extends java.io.FilterInputStream(new java.io.BufferedInputStream(raw, 1 << 16)) {
+    var count = 0L
+    override def read(): Int = { val b = super.read(); if (b >= 0) count += 1; b }
+    override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      val n = super.read(b, off, len); if (n > 0) count += n; n
+    }
+    override def skip(n: Long): Long = { val k = super.skip(n); count += k; k }
   }
 }

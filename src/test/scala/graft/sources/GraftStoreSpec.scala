@@ -430,6 +430,30 @@ class GraftStoreSpec extends AnyFunSuite {
     assert(GraftStore.read(spark, dir).count() == 3)
   }
 
+  test("a data file declaring a string length of 0x7FFFFFF0 or -1 fails naming the file") {
+    import spark.implicits._
+    val marker = "graft-length-probe"
+    for (bad <- Seq(0x7FFFFFF0, -1)) {
+      val dir = tmp()
+      GraftStore.write(Seq((1L, marker)).toDF("k", "s").coalesce(1), dir)
+      val Array(file) = new java.io.File(dir, "data").listFiles().filter(_.getName.endsWith(".gsb"))
+      val bytes = Files.readAllBytes(file.toPath)
+      val stored = java.nio.ByteBuffer.allocate(4).putInt(marker.length).array() ++
+        marker.getBytes("UTF-8")
+      val at = bytes.indexOfSlice(stored)
+      assert(at > 0, "the stored string was not found")
+      java.nio.ByteBuffer.wrap(bytes).putInt(at, bad)
+      Files.write(file.toPath, bytes)
+      // the local file system's checksum sidecar would refuse the edited
+      // file first; without it the decoder itself reads the bad length
+      new java.io.File(file.getParent, s".${file.getName}.crc").delete()
+      val e = intercept[Exception](GraftStore.read(spark, dir).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString("\n")
+      assert(msgs.contains(s"data/${file.getName} declares a length of $bad"), msgs)
+    }
+  }
+
   test("an incomplete (terminator-less) manifest is skipped by readers") {
     val dir = tmp()
     GraftStore.write(docs.limit(4), dir) // v1, complete
