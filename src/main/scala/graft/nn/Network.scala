@@ -10,16 +10,15 @@ import scala.util.Random
   * Replaces the reference's per-partition TensorFlow session
   * (lifeomic/sparkflow `HogwildSparkModel.py:38-100` computes
   * `tf.gradients(loss, trainables)`); the math is explicit so it runs on
-  * the JVM with no native deps: Breeze hands the GEMMs to netlib's
-  * `BLAS.getInstance()`. With no native BLAS installed and no
-  * `jdk.incubator.vector` module, JNIBLAS and VectorBLAS fail to load (the
-  * two WARNING lines at start-up) and it resolves to the pure-Java
-  * `dev.ludovic.netlib.blas.Java11BLAS`. Bias add, activations and their
-  * gradients are single passes over the column-major data; each element
-  * takes the operations of the Breeze tensor expressions in the same
-  * order, bit for bit (KernelParitySpec). Conv layers use im2col so
-  * the hot loop is one GEMM per layer; images are flat row vectors with
-  * (y, x, channel) row-major layout, channel innermost.
+  * the JVM with no native deps. Every matrix product goes through
+  * [[Gemm.mul]], a fixed-order kernel the JIT vectorises, so no BLAS is
+  * called and a row's result does not depend on its block. Bias add,
+  * activations and their gradients are single passes over the
+  * column-major data; each element takes the operations of the Breeze
+  * tensor expressions in the same order, bit for bit (KernelParitySpec).
+  * Conv layers use im2col so the hot loop is one GEMM per layer; images
+  * are flat row vectors with (y, x, channel) row-major layout, channel
+  * innermost.
   *
   * Weight tensor layout stays uniform — 2 tensors per layer (maxpool
   * contributes two 0x0 placeholders) — so the parameter-server wire
@@ -191,14 +190,14 @@ final class Network(val spec: NetSpec) extends Serializable {
     if (caches != null) caches.input(i) = x
     l.kind match {
       case "dense" =>
-        val z = x * ts(2 * i)
+        val z = Gemm.mul(x, ts(2 * i))
         addBias(z, ts(2 * i + 1))
         val a = acts(i).f(z)
         if (caches != null) caches.actOut(i) = a
         a
       case "conv2d" =>
         val p = im2col(x, l)
-        val z = p * ts(2 * i)
+        val z = Gemm.mul(p, ts(2 * i))
         addBias(z, ts(2 * i + 1))
         val a = acts(i).f(z)
         if (caches != null) { caches.patches(i) = p; caches.actOut(i) = a }
@@ -255,14 +254,14 @@ final class Network(val spec: NetSpec) extends Serializable {
     l.kind match {
       case "dense" =>
         val dZ = if (isDZ) dOut else acts(i).backward(dOut, caches.actOut(i))
-        val gW = caches.input(i).t * dZ
+        val gW = Gemm.mul(caches.input(i).t, dZ)
         val gb = bsum(dZ(::, *)).t.toDenseMatrix
-        (if (needDIn) dZ * ts(2 * i).t else null, gW, gb)
+        (if (needDIn) Gemm.mul(dZ, ts(2 * i).t) else null, gW, gb)
       case "conv2d" =>
         val dZ = acts(i).backward(flatToZ(dOut, l.filters), caches.actOut(i))
-        val gW = caches.patches(i).t * dZ
+        val gW = Gemm.mul(caches.patches(i).t, dZ)
         val gb = bsum(dZ(::, *)).t.toDenseMatrix
-        (if (needDIn) col2im(dZ * ts(2 * i).t, l, dOut.rows) else null, gW, gb)
+        (if (needDIn) col2im(Gemm.mul(dZ, ts(2 * i).t), l, dOut.rows) else null, gW, gb)
       case "maxpool" if !needDIn =>
         (null, DenseMatrix.zeros[Double](0, 0), DenseMatrix.zeros[Double](0, 0))
       case "maxpool" =>

@@ -158,10 +158,12 @@ case class BlockPredictExec(
 
 /** Public entry point + registration. */
 object BlockPredict {
-  /** Rows per forward. On a 64-256-256-10 net, single-threaded on the
-    * pure-Java BLAS, 256- and 1024-row blocks ran equally fast and
-    * 4096-row blocks slower; the smaller block holds a quarter of the rows
-    * and activations per task. */
+  /** Rows per forward. On a 64-256-256-10 net, single-threaded on
+    * [[graft.nn.Gemm]] (4-vCPU AVX-512 box, JDK 17), 16,384 rows took
+    * 502/550 ms in 256-row blocks, 514/540 ms in 512-row blocks and
+    * 530/592 ms in 1024-row blocks (medians of 9, two runs): no larger
+    * block is faster, and the smallest holds the fewest rows and
+    * activations per task. */
   val BlockRows = 256
 
   /** `df` with `prediction` appended: `net` applied with `weights` to

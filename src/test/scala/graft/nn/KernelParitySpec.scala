@@ -6,13 +6,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.nn.Tensors.Tensors
 import scala.util.Random
 
-/** [[Network]]'s single-pass kernels (bias add, activations, fused
-  * activation gradients, row softmax) against the Breeze tensor
-  * expressions they stand for, bit for bit on a 137-row batch. The
-  * reference below is the whole forward/backward written over whole
-  * matrices: `z(*, ::) :+= b`, `z.map`, `sigmoid`/`tanh`, softmax over row
-  * slices, `dOut *:* dA/dZ(a)`, dropout masks drawn in `fill` order. */
+/** [[Network]]'s kernels (matrix products, bias add, activations, fused
+  * activation gradients, row softmax) against the tensor expressions they
+  * stand for, bit for bit on a 137-row batch. The reference below is the
+  * whole forward/backward written over whole matrices: products in the
+  * fixed ascending order of [[GemmSpec.mm]] (not Breeze's BLAS, not
+  * [[Gemm]]), `z(*, ::) :+= b`, `z.map`, `sigmoid`/`tanh`, softmax over
+  * row slices, `dOut *:* dA/dZ(a)`, dropout masks drawn in `fill` order. */
 class KernelParitySpec extends AnyFunSuite {
+  import GemmSpec.mm
 
   private def act(name: String, z: DenseMatrix[Double]): DenseMatrix[Double] = name match {
     case "linear"  => z
@@ -68,13 +70,13 @@ class KernelParitySpec extends AnyFunSuite {
       inputs(i) = a
       a = l.kind match {
         case "dense" =>
-          val z = a * ts(2 * i)
+          val z = mm(a, ts(2 * i))
           z(*, ::) :+= ts(2 * i + 1).toDenseVector
           outs(i) = act(l.activation, z)
           outs(i)
         case "conv2d" =>
           patches(i) = im2col(a, l)
-          val z = patches(i) * ts(2 * i)
+          val z = mm(patches(i), ts(2 * i))
           z(*, ::) :+= ts(2 * i + 1).toDenseVector
           val az = act(l.activation, z)
           outs(i) = az
@@ -106,15 +108,15 @@ class KernelParitySpec extends AnyFunSuite {
       val dIn = l.kind match {
         case "dense" =>
           val dZ = if (i == n - 1) dOut else dOut *:* dadz(l.activation, outs(i))
-          grads(2 * i) = inputs(i).t * dZ
+          grads(2 * i) = mm(inputs(i).t, dZ)
           grads(2 * i + 1) = bsum(dZ(::, *)).t.toDenseMatrix
-          dZ * ts(2 * i).t
+          mm(dZ, ts(2 * i).t)
         case "conv2d" =>
           assert(i == 0, "the reference has no col2im: conv layers go first")
           val pix = l.outH * l.outW
           val dZ = DenseMatrix.tabulate(dOut.rows * pix, l.filters)(
             (row, f) => dOut(row / pix, row % pix * l.filters + f)) *:* dadz(l.activation, outs(i))
-          grads(2 * i) = patches(i).t * dZ
+          grads(2 * i) = mm(patches(i).t, dZ)
           grads(2 * i + 1) = bsum(dZ(::, *)).t.toDenseMatrix
           null
         case "maxpool" =>

@@ -81,9 +81,9 @@ class BlockPredictSpec extends AnyFunSuite {
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
 
   // Bit-for-bit: a block row is the same column-major layout and the same
-  // GEMM call as a one-row forward, and each output element sums its
-  // products in the same order whatever the row count, so no tolerance is
-  // needed on the Java BLAS these tests run with.
+  // GEMM call as a one-row forward, and `Gemm.mul` sums each output
+  // element's products in the same order whatever the row count, so no
+  // tolerance is needed.
   test("block predictions equal one-row forward predictions bit for bit: dense softmax net") {
     val xs = gaussian(700, 64, 1L) // two partitions of 350 = 256 + a partial 94-row block
     val m = model(denseSpec)
