@@ -160,10 +160,10 @@ case class BlockPredictExec(
 object BlockPredict {
   /** Rows per forward. On a 64-256-256-10 net, single-threaded on
     * [[graft.nn.Gemm]] (4-vCPU AVX-512 box, JDK 17), 16,384 rows took
-    * 502/550 ms in 256-row blocks, 514/540 ms in 512-row blocks and
-    * 530/592 ms in 1024-row blocks (medians of 9, two runs): no larger
-    * block is faster, and the smallest holds the fewest rows and
-    * activations per task. */
+    * 215/560 ms in 256-row blocks, 225/616 ms in 512-row blocks and
+    * 222/559 ms in 1024-row blocks (medians of 9, two runs on a shared
+    * box): no larger block is faster, and the smallest holds the fewest
+    * rows and activations per task. */
   val BlockRows = 256
 
   /** `df` with `prediction` appended: `net` applied with `weights` to

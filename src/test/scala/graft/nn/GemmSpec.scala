@@ -6,8 +6,8 @@ import scala.util.Random
 
 /** [[Gemm.mul]] against a naive triple loop in the order it promises, bit
   * for bit, on plain, transposed and sliced operands of every shape class
-  * the kernel treats apart: odd inner sizes and output column counts of
-  * every remainder mod 4. */
+  * the kernel treats apart: odd inner sizes, output column counts of every
+  * remainder mod 4, several row and inner blocks, and both product paths. */
 class GemmSpec extends AnyFunSuite {
   import GemmSpec.mm
 
@@ -46,6 +46,21 @@ class GemmSpec extends AnyFunSuite {
       "plain.t * plain.t" -> (gaussian(rng, 11, 6).t, gaussian(rng, 5, 11).t),
       "transposed slice * transposed slice" -> (tSlice, big.t(0 until 3, 2 until 7)))
     for ((what, (a, b)) <- cases) assertContractOrder(a, b, what)
+  }
+
+  test("blocked shapes: several row and inner blocks, and both paths of the aᵀ·b layout") {
+    val rng = new Random(4)
+    // 1100 rows = two full 512-row blocks and a partial one; 521 inner
+    // indices = two full 256-index blocks and an odd remainder.
+    for ((rows, inner, cols) <- Seq((1100, 9, 6), (40, 521, 7), (1100, 521, 5)))
+      assertContractOrder(gaussian(rng, rows, inner), gaussian(rng, inner, cols),
+        s"${rows}x$inner * ${inner}x$cols")
+    // aᵀ·b with a small output takes the dot path, a larger one the packed
+    // path; every row and column count mod 4, long inner sizes.
+    for ((rows, inner, cols) <- Seq((1, 5, 1), (9, 3600, 8), (5, 700, 3), (32, 400, 16), (25, 600, 22),
+        (26, 521, 30), (64, 300, 9)))
+      assertContractOrder(gaussian(rng, inner, rows).t, gaussian(rng, inner, cols),
+        s"(${inner}x$rows).t * ${inner}x$cols")
   }
 
   test("each row of a 500-row product equals that row computed alone") {
